@@ -81,31 +81,7 @@ object IndexBuilder {
       // coarse-assignment metric — the reference's Dc type parameter
       // (/root/reference/src/index.jl:40); affects only how docs group
       // into cells, never BM25 scores
-      distance: graft.cluster.Distance = graft.cluster.Distance.SqEuclidean,
-      // opt back into the r2 granule-slot exchange ahead of the posting
-      // encode (the r3 default reads the granule-aligned docstore files
-      // with no exchange at all — same query results either way)
-      postingsExchange: Boolean =
-        sys.env.getOrElse("GRAFT_POSTINGS_SHUFFLE", "0") == "1",
-      // slim the docstore slot exchange for derivable sources (build()
-      // supplies the Corpus re-derivation; see Corpus.SourceRederive).
-      // DEFAULT OFF — measured and rejected for this corpus shape
-      // (SlimProbe, 3 interleaved reps at bench conditions: T1 min
-      // 60.9s vs 55.1s, T4 20.5s vs 18.5s, efficiency 0.743 vs 0.746):
-      // the bit-exact restore needs a second sha2 per row for `commit`,
-      // which costs more CPU than the ~40 B/row of shuffle bytes saved.
-      // The lever stays for sources whose keys restore cheaply.
-      slimExchange: Boolean =
-        sys.env.getOrElse("GRAFT_SLIM_EXCHANGE", "0") == "1",
-      // extra parquet writer options for the docstore write (the
-      // build's one non-scaling-inflated stage; BASELINE.md "Hardware
-      // ceiling"). A/B surface for encode-path levers — e.g.
-      // "parquet.enable.dictionary#content" -> "false" (skip the
-      // dictionary hash-table build for the high-cardinality content
-      // column), "parquet.block.size" -> smaller row groups (less
-      // buffered memory per write task). Default empty = parquet
-      // defaults; bytes on disk change, query results never do.
-      docstoreWriteOptions: Map[String, String] = Map.empty)
+      distance: graft.cluster.Distance = graft.cluster.Distance.SqEuclidean)
 
   /** Split cluster ids 0..kc-1 into up to `nBatches` contiguous groups. */
   def clusterBatches(kc: Int, nBatches: Int): Seq[Seq[Int]] = {
@@ -150,11 +126,7 @@ object IndexBuilder {
     buildFromSource(spark,
       Corpus.sourceTable(spark, sfDir, cfg.amplify), indexDir, cfg,
       lineageName = sfDir,
-      knownRows = base * cfg.amplify,
-      exchangeSlim =
-        if (cfg.slimExchange)
-          Some((Corpus.SourceRederive.slim _, Corpus.SourceRederive.restore _))
-        else None)
+      knownRows = base * cfg.amplify)
   }
 
   /** Build from any F1-shaped source DataFrame; `idOrder` defines the
@@ -178,12 +150,6 @@ object IndexBuilder {
       lineageName: String = "<dataframe>",
       knownRows: Long = 0L,
       fixedCentroids: Option[Array[Array[Double]]] = None,
-      // (slim, restore) projection pair around the docstore slot
-      // exchange for sources whose key columns are derivable — restore
-      // MUST be bit-exact (the docstore is the source of truth for every
-      // later step); only build() supplies one (Corpus.SourceRederive)
-      exchangeSlim: Option[(DataFrame => DataFrame, DataFrame => DataFrame)] =
-        None,
       // compaction fast path (r7): the source ALREADY carries dense
       // 0-based doc_id, cluster_id, doc_len and content_sha (the
       // docstore is lossless and compaction never retrains, so every
@@ -191,9 +157,7 @@ object IndexBuilder {
       // was provably redundant work). The docstore step then skips the
       // dense-id keys pass, the kmeans sample collect and the per-row
       // content->cluster assignment entirely: ONE slot exchange + write.
-      // Requires fixedCentroids and an exact knownRows; granule weights
-      // are caller-supplied estimates (placement only — balance, never
-      // correctness).
+      // Requires fixedCentroids and an exact knownRows.
       preAssigned: Option[PreAssignedSource] = None): BuildResult = {
     import spark.implicits._
     val t0 = System.nanoTime()
@@ -277,11 +241,11 @@ object IndexBuilder {
     // needs no sampling at all.
     step("docstore") {
       preAssigned match {
-        case Some(pa) =>
-          docstorePreAssigned(spark, source, indexDir, cfg,
+        case Some(_) =>
+          docstorePreAssigned(spark, source, indexDir,
             fixedCentroids.getOrElse(sys.error(
               "preAssigned requires fixedCentroids")),
-            knownRows, pa)
+            knownRows)
         case None =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -297,18 +261,8 @@ object IndexBuilder {
       // pass's tail. Fixture-scale corpora (n <= 10k ⇒ fitStep == 1)
       // sample EVERY doc either way and keep the id-seeded fit, so their
       // centroids — and every golden result — are bit-identical to r3.
-      //
-      // the GRAFT_DOCSTORE_SHUFFLE=0 experiment writes straight from the
-      // dense-id partitioning, which is only granule-aligned under the
-      // exchange id strategy (the broadcast strategy leaves rows in
-      // source order — writing from it would break the disjoint-doc-
-      // range-per-file invariant the zero-shuffle postings step needs)
       val denseF = Future {
         Corpus.docsFromCounted(source, idOrder,
-          idStrategy =
-            if (sys.env.getOrElse("GRAFT_DOCSTORE_SHUFFLE", "1") == "0")
-              "exchange"
-            else sys.env.getOrElse("GRAFT_ID_STRATEGY", "auto"),
           // lets small corpora take the one-job driver-sort id path
           // (r7, Corpus.IdDriverSortMaxDocs); 0/over-bound/wrong hints
           // fall back safely
@@ -387,15 +341,14 @@ object IndexBuilder {
       val parts = spark.sessionState.conf.numShufflePartitions
       val window = granuleWindow(n, parts)
       // granule weights estimated from the (deterministic) kmeans sample
-      // drive contiguous slot assignment here and in the postings step —
-      // balanced tasks, low file counts, no partitioner sampling pass
+      // drive contiguous slot assignment of the write below — balanced
+      // tasks, low file counts, no partitioner sampling pass
       val weights = sampleIds
         .map { case (id, f) =>
           (CoarseClusterer.assign(f, centroids, cfg.distance), id / window)
         }
         .groupBy(identity).map { case (g, xs) => g -> xs.length.toLong }
         .toSeq
-      saveGranuleWeights(indexDir, weights)
       val slotCol = GranulePartitioner.slotKeyCol(
         GranulePartitioner.slotMap(weights, parts), window, parts) _
       val obs = Observation()
@@ -423,41 +376,23 @@ object IndexBuilder {
       // granule-slot exchange ahead of the write: each task holds a few
       // CONTIGUOUS (cluster, doc range) slices → ~2 files per cluster
       // instead of tasks × clusters; measured faster end-to-end than
-      // writing from the dense-id partitioning despite the extra
-      // shuffle (GRAFT_DOCSTORE_SHUFFLE=0 opts out for experiments)
-      // content_sha is recomputed on the POST-exchange side: the column
-      // is derivable from content, so shipping it through the shuffle
-      // would pay 64 B/row of exchange bytes (the non-scaling resource)
-      // to save a sha2 recompute (CPU, which scales) — backwards at 4
-      // threads and at 4N executors alike
-      // exchangeSlim (r5): for derivable sources, repo/path/commit are
-      // additionally dropped through the exchange and re-derived after —
-      // the same bytes-for-CPU trade as the sha recompute, ~40 B/row off
-      // the one content shuffle (the docstore write map stage's shuffle
-      // write is the build's residual non-scaling cost, BASELINE.md)
-      // the task-local sort runs on the SLIM rows (before restore/sha):
-      // the write task's external sorter then holds ~60 fewer bytes per
-      // row, and the narrow derive projection above the Sort preserves
-      // row order, so the parquet files stay (cluster_id, doc_id)-sorted
-      val toWrite =
-        if (sys.env.getOrElse("GRAFT_DOCSTORE_SHUFFLE", "1") == "1") {
-          val (slimF, restoreF) = exchangeSlim.getOrElse(
-            (identity[DataFrame] _, identity[DataFrame] _))
-          val exchanged = restoreF(
-            slimF(clustered.drop("content_sha"))
-              .withColumn("_slot", slotCol(col("cluster_id"), col("doc_id")))
-              .repartition(parts, col("_slot"))
-              .drop("_slot")
-              .sortWithinPartitions(col("cluster_id"), col("doc_id")))
-            .withColumn("content_sha", sha2(col("content"), 256))
-          // canonical column order regardless of what restore appended
-          exchanged.select("doc_id", "repo", "path", "commit", "lang",
-            "content", "cluster_id", "doc_len", "content_sha")
-        } else clustered
-          .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-      toWrite
+      // writing from the dense-id partitioning despite the extra shuffle
+      // (BASELINE.md r3), and it makes every docstore file a disjoint,
+      // sorted doc range — the invariant the zero-shuffle postings step
+      // reads by. content_sha is recomputed on the POST-exchange side:
+      // the column is derivable from content, so shipping it through the
+      // shuffle would pay 64 B/row of exchange bytes (the non-scaling
+      // resource) to save a sha2 recompute (CPU, which scales) —
+      // backwards at 4 threads and at 4N executors alike
+      clustered.drop("content_sha")
+        .withColumn("_slot", slotCol(col("cluster_id"), col("doc_id")))
+        .repartition(parts, col("_slot"))
+        .drop("_slot")
+        .sortWithinPartitions(col("cluster_id"), col("doc_id"))
+        .withColumn("content_sha", sha2(col("content"), 256))
+        .select("doc_id", "repo", "path", "commit", "lang",
+          "content", "cluster_id", "doc_len", "content_sha")
         .write.mode("overwrite")
-        .options(cfg.docstoreWriteOptions)
         .partitionBy("cluster_id")
         .parquet(s"$indexDir/docstore")
       dense.unpersist()
@@ -478,7 +413,7 @@ object IndexBuilder {
 
     def docstore = IndexSchemas.readDocstore(spark, indexDir)
 
-    // ---- step 2: postings (blocks, ONE wide shuffle) -------------------
+    // ---- step 2: postings (blocks, no shuffle) --------------------------
     // BM25 factorizes as idf × g(tf, dl): blocks store the idf-free
     // g-max, so NO dictionary join is needed here, and the dictionary
     // (step 3) aggregates from block metadata — one tokenize pass total.
@@ -491,7 +426,6 @@ object IndexBuilder {
       val stats = loadStats(indexDir)
       val avgdl = stats.avgdl
       val kc = loadCentroids(indexDir).length
-      val weights = loadGranuleWeights(indexDir)
       val parts = spark.sessionState.conf.numShufflePartitions
       val batches = clusterBatches(kc, cfg.postingsBatches)
       if (!cfg.resume) {
@@ -535,32 +469,21 @@ object IndexBuilder {
       // rows — which is exactly the stage class that refuses to scale
       // with threads (BASELINE.md calibration). Read-partition sizing
       // replaces the exchange's balancing role: target ≈ bytes/parts.
-      // GRAFT_POSTINGS_SHUFFLE=1 (or cfg.postingsExchange) opts back
-      // into the r2 exchange path.
-      val postingsExchange = cfg.postingsExchange
       // compaction transform (r7): source = the OLD index's postings
       val transformFrom = preAssigned.flatMap(_.transformFrom)
       val mpbKey = "spark.sql.files.maxPartitionBytes"
       val mpbPrev = spark.conf.get(mpbKey)
-      if (!postingsExchange) {
-        val totalBytes = org.apache.commons.io.FileUtils
-          .sizeOfDirectory(new java.io.File(transformFrom
-            .map { case (srcDir, _) => s"$srcDir/postings" }
-            .getOrElse(s"$indexDir/docstore")))
-        // read-granularity factor: >1 packs finer partitions (more
-        // waves, smoother straggler tail), at the cost of more/smaller
-        // posting files
-        val factor = sys.env.getOrElse("GRAFT_POSTINGS_READ_FACTOR", "1")
-          .toInt
-        // floor 1 MB (was 4 MB): the amplified bench docstore
-        // dictionary-compresses to ~15-30 MB, and the 4 MB floor
-        // collapsed the whole postings read to ~6 tasks — a 4-thread
-        // level ran a 2-wave job with an idle tail. At real scale
-        // bytes/parts dominates the floor either way.
-        spark.conf.set(mpbKey,
-          math.max(1L << 20,
-            totalBytes / math.max(1, parts * factor)).toString)
-      }
+      val totalBytes = org.apache.commons.io.FileUtils
+        .sizeOfDirectory(new java.io.File(transformFrom
+          .map { case (srcDir, _) => s"$srcDir/postings" }
+          .getOrElse(s"$indexDir/docstore")))
+      // floor 1 MB (was 4 MB): the amplified bench docstore
+      // dictionary-compresses to ~15-30 MB, and the 4 MB floor
+      // collapsed the whole postings read to ~6 tasks — a 4-thread
+      // level ran a 2-wave job with an idle tail. At real scale
+      // bytes/parts dominates the floor either way.
+      spark.conf.set(mpbKey,
+        math.max(1L << 20, totalBytes / math.max(1, parts)).toString)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -589,16 +512,8 @@ object IndexBuilder {
             case None =>
               val slice = docstore
                 .filter(col("cluster_id").isin(clusters: _*))
-              // exchange path only: re-pack THIS batch's granules over
-              // all slots (a batch covers a cluster subset; without
-              // re-packing half the slots idle)
-              val batchSlots =
-                if (postingsExchange) GranulePartitioner.slotMap(
-                  weights.filter(g => clusters.contains(g._1._1)), parts)
-                else Map.empty[(Int, Long), Int]
               encodeBlocks(spark, slice, avgdl,
-                segOffset, stats.granule_window, batchSlots,
-                exchange = postingsExchange)
+                segOffset, stats.granule_window, exchange = false)
           }
           blocks.write.mode("overwrite")
             .partitionBy("cluster_id")
@@ -678,13 +593,12 @@ object IndexBuilder {
       stepWin)
   }
 
-  /** Marker + placement hints for the compaction fast path — see the
-    * `preAssigned` parameter of [[buildFromSource]]. `transformFrom`
-    * additionally routes the postings step through [[transformBlocks]]:
-    * (source index dir, broadcast sorted tombstone array).
+  /** Marker for the compaction fast path — see the `preAssigned`
+    * parameter of [[buildFromSource]]. `transformFrom` additionally
+    * routes the postings step through [[transformBlocks]]: (source index
+    * dir, broadcast sorted tombstone array).
     */
   case class PreAssignedSource(
-      granuleWeights: Seq[((Int, Long), Long)],
       transformFrom: Option[(String,
         org.apache.spark.broadcast.Broadcast[Array[Long]])] = None)
 
@@ -700,18 +614,13 @@ object IndexBuilder {
       spark: SparkSession,
       source: DataFrame,
       indexDir: String,
-      cfg: BuildConfig,
       centroids: Array[Array[Double]],
-      knownRows: Long,
-      pa: PreAssignedSource): Unit = {
+      knownRows: Long): Unit = {
     require(knownRows > 0, "preAssigned requires exact knownRows > 0")
     val kc = centroids.length
     saveCentroids(indexDir, centroids)
     val parts = spark.sessionState.conf.numShufflePartitions
     val window = granuleWindow(knownRows, parts)
-    // weights carry over for later maintenance (exchange-path appends);
-    // this write itself needs no slot placement — see below
-    saveGranuleWeights(indexDir, pa.granuleWeights)
     val obs = Observation()
     val metrics =
       count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
@@ -727,16 +636,15 @@ object IndexBuilder {
     // already-sorted runs, and partitionBy(cluster_id) writes ~the same
     // file count the source had. Compaction therefore moves the content
     // bytes exactly ONCE — old files → new files — with no exchange
-    // anywhere (the slot map stays saved for later appends). Stored
-    // content_sha rides through unchanged (it is already materialized —
-    // re-deriving it would cost n sha2 calls to save nothing).
+    // anywhere. Stored content_sha rides through unchanged (it is
+    // already materialized — re-deriving it would cost n sha2 calls to
+    // save nothing).
     source
       .observe(obs, metrics.head, metrics.tail: _*)
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
       .select("doc_id", "repo", "path", "commit", "lang",
         "content", "cluster_id", "doc_len", "content_sha")
       .write.mode("overwrite")
-      .options(cfg.docstoreWriteOptions)
       .partitionBy("cluster_id")
       .parquet(s"$indexDir/docstore")
     val m = obs.get
@@ -762,12 +670,13 @@ object IndexBuilder {
   }
 
   /** The B6 heart: docs → posting rows (one char-scan tokenize pass) →
-    * ONE granule-hash shuffle on (cluster_id, doc_id div window) →
-    * sorted runs per (cluster, granule, term) → delta+varint blocks with
-    * idf-free g-max headers. Granule windows replace round 1's range
-    * partitioner: same balance (window size bounds granule size), same
-    * disjoint-doc-range blocks (a block never crosses its granule), but
-    * NO partitioner sampling job — which re-ran the whole tokenize pass.
+    * (`exchange` only: ONE granule-hash shuffle on (cluster_id, doc_id
+    * div window)) → sorted runs per (cluster, granule, term) →
+    * delta+varint blocks with idf-free g-max headers. Granule windows
+    * replace round 1's range partitioner: same balance (window size
+    * bounds granule size), same disjoint-doc-range blocks (a block never
+    * crosses its granule), but NO partitioner sampling job — which
+    * re-ran the whole tokenize pass.
     * Per-segment and per-cluster lineage/metrics flow back via
     * accumulators (the manifest step then needs no postings scan).
     * `segmentOffset` keeps appended segments' ids distinct from the base
@@ -779,7 +688,6 @@ object IndexBuilder {
       avgdl: Double,
       segmentOffset: Int,
       window: Long,
-      slots: Map[(Int, Long), Int] = Map.empty,
       exchange: Boolean = true):
       (org.apache.spark.sql.Dataset[PostingBlock],
       CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) = {
@@ -792,8 +700,9 @@ object IndexBuilder {
     val parts = spark.sessionState.conf.numShufflePartitions
     val w = window
 
-    // With exchange=true, DOC rows move to their granule slot and the
-    // tokenize/explode runs AFTER it, partition-locally: the shuffle
+    // With exchange=true (Maintenance.append, whose new docs arrive in
+    // source order), DOC rows move to their round-robin granule slot and
+    // the tokenize/explode runs AFTER it, partition-locally: the shuffle
     // carries the text once (~3-5× fewer bytes than shuffling exploded
     // posting rows), and the (cluster, granule, term, doc) ordering is
     // restored by a LOCAL external sort — no second exchange.
@@ -808,7 +717,7 @@ object IndexBuilder {
     val routed =
       if (exchange) selected
         .withColumn("_slot", GranulePartitioner
-          .slotKeyCol(slots, w, parts)(col("cluster_id"), col("doc_id")))
+          .slotKeyCol(Map.empty, w, parts)(col("cluster_id"), col("doc_id")))
         .repartition(parts, col("_slot"))
         .drop("_slot")
       else selected
@@ -1141,22 +1050,6 @@ object IndexBuilder {
     mapper.readValue(
       Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "stats.json")),
       classOf[CorpusStats])
-
-  private def saveGranuleWeights(indexDir: String,
-      w: Seq[((Int, Long), Long)]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "granuleweights.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(
-      w.sortBy(_._1).map { case ((c, win), n) => Array(c.toLong, win, n) }
-        .toArray))
-  }
-
-  def loadGranuleWeights(indexDir: String): Seq[((Int, Long), Long)] = {
-    val p = Paths.get(indexDir, "_checkpoints", "granuleweights.json")
-    if (!Files.exists(p)) Seq.empty
-    else mapper.readValue(Files.readAllBytes(p), classOf[Array[Array[Long]]])
-      .map(a => (a(0).toInt, a(1)) -> a(2)).toSeq
-  }
 
   private def saveDocCounts(indexDir: String, m: Map[Int, Long]): Unit = {
     val p = Paths.get(indexDir, "_checkpoints", "doccounts.json")

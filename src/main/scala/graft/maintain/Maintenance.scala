@@ -256,9 +256,7 @@ object Maintenance {
     // sorted tombstone array serves BOTH the tombstone filter (the old
     // anti-join) and the id re-rank (the old keys-pass + rank collect):
     // the whole docstore side of the rebuild collapses to one map-side
-    // expression + the slot exchange. Granule weights carry over from
-    // the source index (placement balance only — survivors keep ~their
-    // old granules; correctness never depends on the weights).
+    // expression + the write.
     val deadBc = spark.sparkContext.broadcast(deadArr)
     val survivors = graft.build.IndexSchemas.readDocstore(spark, indexDir)
       .withColumn("_nid",
@@ -276,7 +274,6 @@ object Maintenance {
       knownRows = n - deadArr.length,
       fixedCentroids = Some(manifest.centroids),
       preAssigned = Some(IndexBuilder.PreAssignedSource(
-        IndexBuilder.loadGranuleWeights(indexDir),
         // postings via decode→shift→re-encode of the source blocks —
         // the docstore write above is then compaction's ONLY content
         // pass (see IndexBuilder.transformBlocks)

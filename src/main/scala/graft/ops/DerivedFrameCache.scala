@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * Identity-keyed on purpose: SparkEntry hands out ONE stable
   * docs/embeddings frame per sfDir, so every operator over that sfDir
   * converges on one persisted copy; callers that build a fresh frame
-  * per call (tests, tools) cycle through the bound instead of leaking
+  * per call (tests) cycle through the bound instead of leaking
   * one MEMORY_AND_DISK entry per call forever [ADVICE r3]. Evicted
   * entries are unpersisted (insertion order — the oldest sfDir's
   * derivations go first, e.g. the bench warm-up SF's after the timed
@@ -27,27 +27,20 @@ import org.apache.spark.sql.DataFrame
 object DerivedFrameCache {
 
   private val Max = 32
-  private val entries = new scala.collection.mutable.ArrayDeque[
-    ((DataFrame, String), DataFrame)]()
+  private val cache = new IdentityCache[DataFrame](Max, (tag, evicted) => {
+    System.err.println(
+      s"[frame-cache] evicting '$tag' (bound $Max reached) — " +
+        "a re-derivation of it will pay full cost")
+    evicted.unpersist(blocking = false)
+  })
 
+  // only the inserted frame is persisted: Spark's cache manager keys
+  // cached data by plan, so a losing racer that persisted and then
+  // unpersisted its equivalent frame would drop the winner's data too
   def apply(source: DataFrame, tag: String)
-      (build: => DataFrame): DataFrame = entries.synchronized {
-    entries.collectFirst {
-      case ((k, t), v) if (k eq source) && t == tag => v
-    }.getOrElse {
-      val f = build
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      entries.append(((source, tag), f))
-      while (entries.size > Max) {
-        val ((_, evictedTag), evicted) = entries.removeHead()
-        System.err.println(
-          s"[frame-cache] evicting '$evictedTag' (bound $Max reached) — " +
-            "a re-derivation of it will pay full cost")
-        evicted.unpersist(blocking = false)
-      }
-      f
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    cache(source, tag)(build)(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 }
 
 /** [[DerivedFrameCache]]'s sibling for DRIVER-LOCAL derived values
@@ -61,19 +54,45 @@ object DerivedFrameCache {
   */
 object DerivedValueCache {
 
-  private val Max = 16
-  private val entries = new scala.collection.mutable.ArrayDeque[
-    ((AnyRef, String), Any)]()
+  private val cache = new IdentityCache[Any](16, (_, _) => ())
 
   def apply[T](source: AnyRef, tag: String)(build: => T): T =
-    entries.synchronized {
-      entries.collectFirst {
-        case ((k, t), v) if (k eq source) && t == tag => v.asInstanceOf[T]
-      }.getOrElse {
-        val v = build
-        entries.append(((source, tag), v))
-        while (entries.size > Max) { entries.removeHead(): Unit }
-        v
+    cache(source, tag)(build)(identity).asInstanceOf[T]
+}
+
+/** Bounded (source identity, tag)-keyed store behind both caches above.
+  * The lock guards only the entry list: a lookup takes it, a miss
+  * builds OUTSIDE it, then re-checks and inserts under it — so a slow
+  * build (a Spark job) never stalls lookups of other keys. Two threads
+  * racing on one key may both build; the first insert wins and the
+  * other's value is dropped, which changes no result because every
+  * cached value is a deterministic function of its key. `admit` runs
+  * on the winning value only, under the lock; evictions go oldest-first.
+  */
+private[ops] final class IdentityCache[V](max: Int,
+    onEvict: (String, V) => Unit) {
+
+  private val entries = new scala.collection.mutable.ArrayDeque[
+    ((AnyRef, String), V)]()
+
+  private def find(source: AnyRef, tag: String): Option[V] =
+    entries.collectFirst {
+      case ((k, t), v) if (k eq source) && t == tag => v
+    }
+
+  def apply(source: AnyRef, tag: String)(build: => V)(admit: V => V): V =
+    entries.synchronized(find(source, tag)).getOrElse {
+      val built = build
+      entries.synchronized {
+        find(source, tag).getOrElse {
+          val v = admit(built)
+          entries.append(((source, tag), v))
+          while (entries.size > max) {
+            val ((_, evictedTag), evicted) = entries.removeHead()
+            onEvict(evictedTag, evicted)
+          }
+          v
+        }
       }
     }
 }

@@ -64,40 +64,6 @@ object Corpus {
       col("lang"),
       col("text").as("content"))
 
-  /** Exchange slimming for the GENERATED source table (the build()
-    * path only — an arbitrary F1 source makes no such promise):
-    * `repo`/`path`/`commit` are pure functions of (base doc id, source,
-    * lang), all recoverable from `path` itself
-    * (`src/<source>/<id>.<lang>`). Shipping them through the docstore
-    * slot exchange pays ~40 B/row of shuffle bytes — the non-scaling
-    * resource under the north_rule criterion — to save a post-exchange
-    * re-derivation that is pure CPU, which scales. [[slim]] replaces the
-    * three columns with the packed (`_oid` long, `_src` dictionary
-    * string) pair before the exchange; [[restore]] re-derives them
-    * BIT-IDENTICALLY after (same concat/sha2 arithmetic as
-    * [[sourceTable]]; equality property-tested in Round5Spec).
-    */
-  object SourceRederive {
-    def slim(df: DataFrame): DataFrame = df
-      .withColumn("_oid",
-        substring_index(substring_index(col("path"), "/", -1), ".", 1)
-          .cast("long"))
-      .withColumn("_src",
-        substring_index(substring_index(col("path"), "/", 2), "/", -1))
-      .drop("repo", "path", "commit")
-
-    def restore(df: DataFrame): DataFrame = df
-      .withColumn("repo",
-        concat(lit("repo-"), (col("_oid") % 13).cast("string")))
-      .withColumn("path",
-        concat(lit("src/"), col("_src"), lit("/"),
-          col("_oid").cast("string"), lit("."), col("lang")))
-      .withColumn("commit",
-        substring(sha2(concat(lit("c"), col("_oid").cast("string")), 256),
-          1, 12))
-      .drop("_oid", "_src")
-  }
-
   /** DuckDB CTE body producing the identical F1 table from `documents`.
     * NB: `commit` is a DuckDB keyword — always quoted.
     */
@@ -163,10 +129,9 @@ object Corpus {
 
   /** Broadcast-strategy cutover: above this many rows the (hash → id)
     * map (~32 B/row) is no longer worth collecting/broadcasting and the
-    * exchange strategy takes over. Env-overridable for experiments.
+    * exchange strategy takes over.
     */
-  val IdBroadcastMaxDocs: Long =
-    sys.env.getOrElse("GRAFT_ID_BROADCAST_MAX", "4194304").toLong
+  val IdBroadcastMaxDocs: Long = 4194304L
 
   /** Driver-sort cutover inside the broadcast strategy (r7): when the
     * caller KNOWS the row count (parquet metadata — build() always
@@ -180,15 +145,14 @@ object Corpus {
     * path, and the collect is hard-limited at bound+1 rows so a wrong
     * hint can never blow up the driver (one extra row ⇒ fall back).
     */
-  val IdDriverSortMaxDocs: Long =
-    sys.env.getOrElse("GRAFT_ID_DRIVERSORT_MAX", "65536").toLong
+  val IdDriverSortMaxDocs: Long = 65536L
 
   def withDenseIdCounted(
       df: DataFrame,
       sortCols: Seq[String],
       idCol: String,
       numPartitions: Int = 0,
-      strategy: String = sys.env.getOrElse("GRAFT_ID_STRATEGY", "auto"),
+      strategy: String = "auto",
       broadcastMaxDocs: Long = IdBroadcastMaxDocs,
       rowHint: Long = 0L): DenseId = {
     require(Set("auto", "broadcast", "exchange")(strategy),
@@ -202,8 +166,8 @@ object Corpus {
   }
 
   /** Driver-sort variant of the broadcast strategy — see
-    * [[IdDriverSortMaxDocs]]. None = no/over-bound hint, non-string
-    * keys, duplicate keys, or a hash collision — the caller falls
+    * [[IdDriverSortMaxDocs]]. None = no/over-bound hint, non-string or
+    * null keys, duplicate keys, or a hash collision — the caller falls
     * through to the distributed strategies.
     */
   private def withDenseIdDriverSort(
@@ -227,6 +191,9 @@ object Corpus {
     if (rows.isEmpty) return Some(DenseId(
       df.withColumn(idCol, lit(0L)).filter(lit(false)), 0L, () => ()))
     val k = sortCols.length
+    // a null key has no UTF8String form to compare; the distributed sort
+    // orders nulls itself
+    if (rows.exists(r => (0 until k).exists(r.isNullAt))) return None
     import org.apache.spark.unsafe.types.UTF8String
     val sorted = rows.map { r =>
       (Array.tabulate(k)(i => UTF8String.fromString(r.getString(i))),
@@ -394,10 +361,8 @@ object Corpus {
       src: DataFrame,
       idOrder: Seq[String] = Seq("repo", "path", "commit"),
       idOffset: Long = 0L,
-      idStrategy: String = sys.env.getOrElse("GRAFT_ID_STRATEGY", "auto"),
       rowHint: Long = 0L): DenseId = {
-    val dense = withDenseIdCounted(src, idOrder, "doc_id",
-      strategy = idStrategy, rowHint = rowHint)
+    val dense = withDenseIdCounted(src, idOrder, "doc_id", rowHint = rowHint)
     val out = dense.df
       .withColumn("doc_id", col("doc_id") + idOffset)
       .withColumn("content_sha", sha2(col("content"), 256))

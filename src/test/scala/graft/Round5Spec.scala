@@ -99,34 +99,6 @@ class Round5Spec extends SparkSpec {
     assert(rebuilt == intact)
   }
 
-  test("SourceRederive slim→restore is bit-exact; slim build == unslim build") {
-    import graft.sources.Corpus
-    // column-level roundtrip on the generated source table
-    val src = Corpus.sourceTable(spark, sf0001, amplify = 3)
-    val cols = Seq("repo", "path", "commit", "lang", "content")
-    val orig = src.select(cols.map(col): _*)
-      .orderBy("repo", "path", "commit").collect().toSeq
-    val round = Corpus.SourceRederive.restore(Corpus.SourceRederive.slim(src))
-      .select(cols.map(col): _*)
-      .orderBy("repo", "path", "commit").collect().toSeq
-    assert(round == orig)
-    // whole-build equivalence: the docstore written through the slimmed
-    // exchange is identical to the unslimmed one
-    val dirA = Files.createTempDirectory("graft-r5-slim-on").toString
-    val dirB = Files.createTempDirectory("graft-r5-slim-off").toString
-    IndexBuilder.build(spark, sf0001, dirA,
-      IndexBuilder.BuildConfig(resume = false, slimExchange = true))
-    IndexBuilder.build(spark, sf0001, dirB,
-      IndexBuilder.BuildConfig(resume = false, slimExchange = false))
-    def dump(d: String) = spark.read.parquet(s"$d/docstore")
-      .select("doc_id", "repo", "path", "commit", "lang", "content",
-        "content_sha", "doc_len", "cluster_id")
-      .orderBy("doc_id").collect().toSeq
-    assert(dump(dirA) == dump(dirB))
-    assert(ManifestIO.read(s"$dirA/manifest.json").num_docs ==
-      ManifestIO.read(s"$dirB/manifest.json").num_docs)
-  }
-
   test("DerivedFrameCache: identity hits, tag separation, bounded eviction unpersists") {
     import spark.implicits._
     import graft.ops.DerivedFrameCache
@@ -153,6 +125,56 @@ class Round5Spec extends SparkSpec {
     // a miss after eviction rebuilds (no stale handle returned)
     val a3 = DerivedFrameCache(base, "t5-a")(make())
     assert(builds == 3 && !(a3 eq a))
+  }
+
+  test("caches build outside the lock: a blocked build stalls no other key") {
+    import spark.implicits._
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.ops.{DerivedFrameCache, DerivedValueCache}
+    // thread A's build parks on a latch; thread B's lookup must finish
+    // while A is parked (a build held under the cache lock makes B wait
+    // for A's release, i.e. time out here instead of hanging the suite)
+    def race[T](lookupA: (() => Unit) => T, lookupB: () => T): (T, T) = {
+      val entered = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val a = Future(lookupA { () =>
+        entered.countDown()
+        release.await(60, TimeUnit.SECONDS): Unit
+      })
+      assert(entered.await(60, TimeUnit.SECONDS))
+      val b =
+        try Await.result(Future(lookupB()), 10.seconds)
+        finally release.countDown()
+      (Await.result(a, 60.seconds), b)
+    }
+    val (k1, k2) = (new Object, new Object)
+    assert(race(park => DerivedValueCache(k1, "t5-race") { park(); 1 },
+      () => DerivedValueCache(k2, "t5-race")(2)) == ((1, 2)))
+    // same key: both build, the first insert (B's) wins for both
+    val k3 = new Object
+    assert(race(park => DerivedValueCache(k3, "t5-race") { park(); 1 },
+      () => DerivedValueCache(k3, "t5-race")(2)) == ((2, 2)))
+
+    val (f1, f2) = (Seq(1).toDF("x"), Seq(2).toDF("x"))
+    val (a1, b1) = race(
+      park => DerivedFrameCache(f1, "t5-race") { park(); f1.select(col("x")) },
+      () => DerivedFrameCache(f2, "t5-race")(f2.select(col("x"))))
+    assert(a1.collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(b1.collect().map(_.getInt(0)).toSeq == Seq(2))
+    // same key: the loser's frame is dropped unpersisted
+    val f3 = Seq(3).toDF("x")
+    var loser: org.apache.spark.sql.DataFrame = null
+    val (a3, b3) = race(
+      park => DerivedFrameCache(f3, "t5-race") {
+        park(); loser = f3.select(col("x") + 1 as "y"); loser
+      },
+      () => DerivedFrameCache(f3, "t5-race")(f3.select(col("x") + 2 as "y")))
+    assert((a3 eq b3) && !(loser eq b3))
+    assert(b3.storageLevel.useMemory)
+    assert(loser.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("EmbedCellAssignExpr bit-identical to the udf it replaced") {

@@ -115,20 +115,25 @@ class Round7Spec extends SparkSpec {
     // prefixes
     val keys = Seq("b", "a", "éclair", "zz", "😀emoji",
       "é", "aa", "", "Z", "z", "中文", "a b")
-    val src = keys.zipWithIndex
+    val adversarial = keys.zipWithIndex
       .map { case (k, i) => (k, s"p$i", s"c$i") }
-      .toDF("repo", "path", "commit")
-      .repartition(4)
-    def ids(strategy: String, hint: Long) = graft.sources.Corpus
-      .withDenseIdCounted(src, Seq("repo", "path", "commit"), "id",
-        strategy = strategy, rowHint = hint)
-      .df.select(col("repo"), col("id"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    val viaDriver = ids("auto", keys.size.toLong) // driver-sort path
-    val viaExchange = ids("exchange", 0L)
-    assert(viaDriver.toSeq == viaExchange.toSeq)
-    // an over-bound or absent hint must not change results either
-    assert(ids("auto", 0L).toSeq == viaExchange.toSeq)
+    // a null key: two rows share `repo`, so the driver sort's comparator
+    // must reach the null `path` (the driver sort then falls back)
+    val withNull = Seq(("r", "p1", "c1"), ("r", null, "c2"), ("q", "p0", "c0"))
+    Seq(adversarial, withNull).foreach { rows =>
+      val src = rows.toDF("repo", "path", "commit").repartition(4)
+      def ids(strategy: String, hint: Long) = graft.sources.Corpus
+        .withDenseIdCounted(src, Seq("repo", "path", "commit"), "id",
+          strategy = strategy, rowHint = hint)
+        .df.select(col("repo"), col("path"), col("id"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .sortBy(_._3).toSeq
+      val viaDriver = ids("auto", rows.size.toLong) // driver-sort path
+      val viaExchange = ids("exchange", 0L)
+      assert(viaDriver == viaExchange)
+      // an over-bound or absent hint must not change results either
+      assert(ids("auto", 0L) == viaExchange)
+    }
   }
 
   test("buildWithQueries == build + separate query collect (model + queries)") {
