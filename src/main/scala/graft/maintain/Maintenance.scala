@@ -64,11 +64,8 @@ object Maintenance {
     val avgdl = manifest.avgdl // held until compaction
     // appended segments REUSE the base build's granule window so every
     // block — old or new — stays inside one (cluster, window) granule
-    // and query-side granule splits remain safe (a pre-r2 manifest has
-    // window 0 = "no granules": one unbounded window)
-    val window =
-      if (manifest.granule_window > 0) manifest.granule_window
-      else Long.MaxValue
+    // and query-side granule splits remain safe
+    val window = graft.plans.BlockScan.window(manifest)
 
     // no withFeatures wrap: without a pre-materialized `feat` column,
     // withClusterId assigns through the fused codegen content→argmin
@@ -131,9 +128,7 @@ object Maintenance {
     // key relies on it), so consolidation groups decoded entries by
     // their (cluster, doc_id div window) granule — exactly the fragments
     // appends create inside each window get fused, nothing crosses one.
-    val window =
-      if (manifest0.granule_window > 0) manifest0.granule_window
-      else Long.MaxValue
+    val window = graft.plans.BlockScan.window(manifest0)
 
     // exact refreshed stats (Long sums → deterministic)
     val statsRow = graft.build.IndexSchemas.readDocstore(spark, indexDir)

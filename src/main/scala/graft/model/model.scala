@@ -8,16 +8,6 @@ package graft.model
   * BASELINE.json `input_hint`.
   */
 
-/** One row of the input "Iceberg" source-code table
-  * (repo, path, commit, lang, content) — all strings per `input_hint`.
-  */
-case class SourceFile(
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    content: String)
-
 /** A document after docID assignment and tokenization.
   * docId is dense 0-based in (repo, path, commit) order — the analog of
   * the reference's dense insertion-order ids
@@ -92,15 +82,6 @@ case class ScorerBlock(
     doc_gaps: Array[Byte],
     tfs: Array[Byte],
     dls: Array[Byte])
-
-/** Projection read by phrase search — positions but no tfs/dls/maxes. */
-case class PhraseBlock(
-    term: String,
-    cluster_id: Int,
-    first_doc: Long,
-    count: Int,
-    doc_gaps: Array[Byte],
-    positions: Array[Byte])
 
 /** Per-cluster-partition build lineage + metrics (north_rule: postings/sec
   * and bytes/posting logged per segment, per-partition lineage).

@@ -13,7 +13,10 @@ import org.apache.spark.sql.DataFrame
   * one MEMORY_AND_DISK entry per call forever [ADVICE r3]. Evicted
   * entries are unpersisted (insertion order — the oldest sfDir's
   * derivations go first, e.g. the bench warm-up SF's after the timed
-  * SF's fill in).
+  * SF's fill in) unless a live entry's frame is plan-equal: Spark's
+  * cache manager keys cached data by plan, so both frames read one
+  * cached copy and unpersisting the evicted one would drop the live
+  * one's data too.
   *
   * Bound: ~11 tags are live per benched sfDir (shingles, prefix@t,
   * simhash-fp, bm25-tf, bm25-termstats, bm25-stats on the docs frame;
@@ -26,13 +29,15 @@ import org.apache.spark.sql.DataFrame
   */
 object DerivedFrameCache {
 
-  private val Max = 32
-  private val cache = new IdentityCache[DataFrame](Max, (tag, evicted) => {
-    System.err.println(
-      s"[frame-cache] evicting '$tag' (bound $Max reached) — " +
-        "a re-derivation of it will pay full cost")
-    evicted.unpersist(blocking = false)
-  })
+  private[graft] val Max = 32
+  private val cache = new IdentityCache[DataFrame](Max,
+    (tag, evicted, live) => {
+      System.err.println(
+        s"[frame-cache] evicting '$tag' (bound $Max reached) — " +
+          "a re-derivation of it will pay full cost")
+      if (!live.exists(_.sameSemantics(evicted)))
+        evicted.unpersist(blocking = false)
+    })
 
   // only the inserted frame is persisted: Spark's cache manager keys
   // cached data by plan, so a losing racer that persisted and then
@@ -54,7 +59,7 @@ object DerivedFrameCache {
   */
 object DerivedValueCache {
 
-  private val cache = new IdentityCache[Any](16, (_, _) => ())
+  private val cache = new IdentityCache[Any](16, (_, _, _) => ())
 
   def apply[T](source: AnyRef, tag: String)(build: => T): T =
     cache(source, tag)(build)(identity).asInstanceOf[T]
@@ -67,10 +72,11 @@ object DerivedValueCache {
   * racing on one key may both build; the first insert wins and the
   * other's value is dropped, which changes no result because every
   * cached value is a deterministic function of its key. `admit` runs
-  * on the winning value only, under the lock; evictions go oldest-first.
+  * on the winning value only, under the lock; evictions go oldest-first,
+  * and `onEvict` sees the evicted value and the values still live.
   */
 private[ops] final class IdentityCache[V](max: Int,
-    onEvict: (String, V) => Unit) {
+    onEvict: (String, V, Iterable[V]) => Unit) {
 
   private val entries = new scala.collection.mutable.ArrayDeque[
     ((AnyRef, String), V)]()
@@ -89,7 +95,7 @@ private[ops] final class IdentityCache[V](max: Int,
           entries.append(((source, tag), v))
           while (entries.size > max) {
             val ((_, evictedTag), evicted) = entries.removeHead()
-            onEvict(evictedTag, evicted)
+            onEvict(evictedTag, evicted, entries.view.map(_._2))
           }
           v
         }

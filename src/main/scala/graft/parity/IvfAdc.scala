@@ -164,7 +164,10 @@ object IvfAdc {
     * (stride-sample ∪ queryIds) and the rows are split driver-side, so
     * when the guard limit does not bind (the normal path — it is sized
     * up by |queryIds|) the training sample is EXACTLY the one [[build]]
-    * collects and the model is bit-identical.
+    * collects and the model is bit-identical. When either guard could
+    * bind (adversarial ids clustered on the stride), the shared collect
+    * may hold a different sample or miss query rows, so this falls back
+    * to [[build]] plus a separate query-vector collect.
     */
   def buildWithQueries(
       spark: SparkSession,
@@ -186,16 +189,22 @@ object IvfAdc {
       embeddings.count())
     val stride = math.max(1L, nVecs / sampleCap)
     val qSet = queryIds.toSet
+    val limit = 2 * sampleCap + queryIds.size
     val rows = ds
       .filter(col("vec_id") % stride === 0 ||
         col("vec_id").isin(queryIds: _*))
-      .limit(2 * sampleCap + queryIds.size)
+      .limit(limit)
       .collect()
     val sample = rows.filter(_._1 % stride == 0).sortBy(_._1)
-    val qs = rows.filter(r => qSet.contains(r._1)).sortBy(_._1)
+    val (model, encoded) =
+      if (rows.length < limit && sample.length <= 2 * sampleCap)
+        buildFromSample(spark, ds, kc, m, k, maxIter, quantDist, method, sample)
+      else build(spark, embeddings, kc, m, k, maxIter, sampleCap, quantDist,
+        method)
+    val qRows = if (rows.length < limit) rows
+      else ds.filter(col("vec_id").isin(queryIds: _*)).collect()
+    val qs = qRows.filter(r => qSet.contains(r._1)).sortBy(_._1)
       .map { case (id, v) => (id.toInt, v) }.toSeq
-    val (model, encoded) = buildFromSample(spark, ds, kc, m, k, maxIter,
-      quantDist, method, sample)
     (model, encoded, qs)
   }
 

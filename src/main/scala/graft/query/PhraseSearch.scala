@@ -1,11 +1,14 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.functions._
 
 import graft.build.ManifestIO
 import graft.codec.PostingCodec
-import graft.model.PhraseBlock
+import graft.plans.{BlockKernel, BlockScan}
 
 /** Exact phrase search over the index's position payloads — the operator
   * that justifies storing `positions` in the posting blocks (north_star:
@@ -13,10 +16,11 @@ import graft.model.PhraseBlock
   * a phrase [t0, t1, ..., tm] occurs at p iff t_i has position p+i for
   * all i.
   *
-  * Same physical shape as the WAND scorer: partition-pruned block scan →
-  * repartition(cluster_id) → per-cluster decode (docs + positions) →
-  * merge-intersect the phrase terms' doc lists → position adjacency
-  * count. One shuffle, partition-local work, tiny output.
+  * Runs through the same [[graft.plans.BlockScan]] operator as the WAND
+  * scorer: term-pushed block scan → (cluster_id, _split) exchange →
+  * per-group [[PhraseKernel]] (decode docs + positions, merge-intersect
+  * the phrase terms' doc lists, count adjacency). One shuffle,
+  * partition-local work, tiny output.
   */
 object PhraseSearch {
 
@@ -27,96 +31,11 @@ object PhraseSearch {
       spark: SparkSession,
       indexDir: String,
       phrase: Seq[String]): DataFrame = {
-    import spark.implicits._
     require(phrase.size >= 2, "phrase needs >= 2 terms")
-    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-    val terms = phrase.distinct
-    val phraseBc = spark.sparkContext.broadcast(phrase.toArray)
-    val tombstones = spark.sparkContext.broadcast(
+    val kernel = PhraseKernel(phrase,
       graft.maintain.Maintenance.loadTombstones(indexDir))
-
-    // pre-r2 manifests have no granule window: single split
-    val window = if (manifest.granule_window > 0) manifest.granule_window
-      else Long.MaxValue
-    val splits =
-      if (manifest.granule_window > 0) IndexSearcher.SplitsPerCluster else 1
-
-    // projection: positions but no tfs/dls/block_max (column pruning;
-    // r7: explicit schema — no per-query footer-inference pass)
-    val blocks = graft.build.IndexSchemas.readPostings(spark, indexDir)
-      .filter(col("term").isin(terms: _*))
-      .select("term", "cluster_id", "first_doc", "count", "doc_gaps",
-        "positions")
-      .withColumn("_split",
-        pmod(expr(s"first_doc div $window"), lit(splits)))
-
-    blocks
-      .repartition(col("cluster_id"), col("_split"))
-      .sortWithinPartitions(col("cluster_id"), col("_split"), col("term"),
-        col("first_doc"))
-      .as[PhraseBlock]
-      .mapPartitions { it =>
-        val ph = phraseBc.value
-        val dead = tombstones.value
-        // stream one (cluster, split) group at a time off the sorted
-        // iterator (granule containment keeps every doc's blocks for ALL
-        // phrase terms inside one group) — retained heap is one group's
-        // decoded lists, never the whole task [VERDICT r1 #4]
-        val buf = it.buffered
-        def groupKey(b: PhraseBlock): (Int, Long) =
-          (b.cluster_id, (b.first_doc / window) % splits)
-        new Iterator[Iterator[(Long, Long)]] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[(Long, Long)] = {
-            val key = groupKey(buf.head)
-            val byTerm = scala.collection.mutable.LinkedHashMap
-              .empty[String, (scala.collection.mutable.ArrayBuffer[Long],
-                scala.collection.mutable.ArrayBuffer[Array[Int]])]
-            while (buf.hasNext && groupKey(buf.head) == key) {
-              val b = buf.next()
-              val (docs, pos) = byTerm.getOrElseUpdate(b.term,
-                (scala.collection.mutable.ArrayBuffer.empty[Long],
-                  scala.collection.mutable.ArrayBuffer.empty[Array[Int]]))
-              docs ++= PostingCodec.decodeDocs(b.count, b.first_doc, b.doc_gaps)
-              pos ++= PostingCodec.decodePositionsRaw(b.count, b.positions)
-            }
-            val decoded: Map[String, (Array[Long], Array[Array[Int]])] =
-              byTerm.map { case (t, (d, p)) => t -> (d.toArray, p.toArray) }
-                .toMap
-            val lists = ph.map(decoded.get)
-            if (lists.exists(_.isEmpty)) Iterator.empty
-            else {
-              val ls = lists.map(_.get)
-              // intersect doc lists via the rarest term's list
-              val (baseDocs, _) = ls.minBy(_._1.length)
-              baseDocs.iterator
-                .filterNot(dead.contains)
-                .flatMap { d =>
-                  // per-term position set for doc d (binary search)
-                  val posSets = ls.map { case (docs, pos) =>
-                    val i = java.util.Arrays.binarySearch(docs, d)
-                    if (i < 0) null else pos(i)
-                  }
-                  if (posSets.contains(null)) Iterator.empty
-                  else {
-                    val first = posSets(0)
-                    // positions decode gap-ascending (sorted), so the
-                    // adjacency membership test is a binary search —
-                    // no boxed Set per (doc, term)
-                    val rest = posSets.tail
-                    val occ = first.count(p =>
-                      rest.zipWithIndex.forall { case (arr, i) =>
-                        java.util.Arrays.binarySearch(arr, p + i + 1) >= 0
-                      })
-                    if (occ > 0) Iterator.single((d, occ.toLong))
-                    else Iterator.empty
-                  }
-                }
-            }
-          }
-        }.flatten
-      }
-      .toDF("doc_id", "occurrences")
+    BlockScan.frame(spark, indexDir, ManifestIO.read(s"$indexDir/manifest.json"),
+      kernel, phrase.distinct, None, IndexSearcher.SplitsPerCluster)
       .orderBy(col("occurrences").desc, col("doc_id").asc)
   }
 
@@ -142,5 +61,55 @@ object PhraseSearch {
        |  $joins
        |WHERE $preds
        |GROUP BY 1 ORDER BY occurrences DESC, t0.doc_id""".stripMargin
+  }
+}
+
+/** Phrase adjacency per (cluster, split) group: (doc_id, occurrences)
+  * for the group's live docs that hold `phrase`. Decodes every block of
+  * the group (docs + positions), then intersects via the rarest term.
+  */
+case class PhraseKernel(phrase: Seq[String], tombstones: Set[Long])
+    extends BlockKernel {
+
+  // projection: positions but no tfs/dls/block_max (column pruning)
+  def columns: Seq[String] =
+    Seq("term", "cluster_id", "first_doc", "count", "doc_gaps", "positions")
+
+  def output: String = "doc_id BIGINT, occurrences BIGINT"
+
+  def group(cluster: Int,
+      byTerm: collection.Map[String, collection.IndexedSeq[InternalRow]],
+      at: Array[Int], decoded: SQLMetric): Iterator[InternalRow] = {
+    decoded += byTerm.valuesIterator.map(_.size.toLong).sum
+    val byTermDecoded = byTerm.map { case (t, rows) =>
+      t -> (rows.flatMap(r => PostingCodec.decodeDocs(
+          r.getInt(at(3)), r.getLong(at(2)), r.getBinary(at(4)))).toArray,
+        rows.flatMap(r => PostingCodec.decodePositionsRaw(
+          r.getInt(at(3)), r.getBinary(at(5)))).toArray)
+    }
+    val lists = phrase.map(byTermDecoded.get)
+    if (lists.exists(_.isEmpty)) Iterator.empty
+    else {
+      val ls = lists.map(_.get)
+      // intersect doc lists via the rarest term's list
+      val (baseDocs, _) = ls.minBy(_._1.length)
+      baseDocs.iterator
+        .filterNot(tombstones.contains)
+        .flatMap { d =>
+          // per-term position set for doc d (binary search)
+          val posSets = ls.map { case (docs, pos) =>
+            val i = java.util.Arrays.binarySearch(docs, d)
+            if (i < 0) null else pos(i)
+          }
+          // positions decode gap-ascending (sorted), so the adjacency
+          // membership test is a binary search — no boxed Set per
+          // (doc, term)
+          val occ = if (posSets.contains(null)) 0 else posSets(0).count(p =>
+            posSets.indices.tail.forall(i =>
+              java.util.Arrays.binarySearch(posSets(i), p + i) >= 0))
+          if (occ > 0) Some(new GenericInternalRow(Array[Any](d, occ.toLong)))
+          else None
+        }
+    }
   }
 }

@@ -47,15 +47,49 @@ class PlanSpec extends SparkSpec {
     assert(w1.count() <= full.count())
   }
 
-  test("scorer is EXPLAIN-visible: WandScore operator + required exchange") {
-    val df = IndexSearcher.topK(spark, indexDir, QuerySet.queries.take(2), 5)
-    assert(df.count() > 0) // finalize the adaptive plan first
-    // the custom physical operator by name (TreeNode strips the Exec
-    // suffix), with the EnsureRequirements-inserted clustering on
-    // (cluster_id, _split) feeding it
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("WandScore"), plan.take(1500))
-    assert(plan.contains("hashpartitioning(cluster_id"), plan.take(1500))
+  test("scorer is EXPLAIN-visible: BlockScan operator + required exchange (WAND and phrase)") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    def check(df: org.apache.spark.sql.DataFrame, kernel: String,
+        readColumns: Seq[String]): Long = {
+      val rows = df.count() // finalize the adaptive plan first
+      // the custom physical operator by name (TreeNode strips the Exec
+      // suffix) and its kernel
+      val executed = df.queryExecution.executedPlan
+      val plan = executed.toString
+      assert(plan.contains("BlockScan") && plan.contains(kernel),
+        plan.take(1500))
+      assert(plan.contains("hashpartitioning(cluster_id"), plan.take(1500))
+      // fed by the EnsureRequirements-inserted clustering on
+      // (cluster_id, _split)
+      val exec = helper.collectFirst(executed) {
+        case b: graft.plans.BlockScanExec => b
+      }.getOrElse(fail(plan.take(1500)))
+      val feed = helper.collectFirst(exec) {
+        case s: ShuffleExchangeExec => s
+      }.getOrElse(fail(plan.take(1500)))
+      assert(feed.shuffleOrigin == ENSURE_REQUIREMENTS, plan.take(1500))
+      assert((feed.outputPartitioning match {
+        case HashPartitioning(keys, _) => keys.collect { case a: Attribute => a.name }
+        case _ => Nil
+      }) == Seq("cluster_id", "_split"), plan.take(1500))
+      // the scan reads only the kernel's columns
+      val read = helper.collectFirst(exec) {
+        case f: FileSourceScanExec => f.requiredSchema.fieldNames.toSeq
+      }
+      assert(read.map(_.sorted) == Some(readColumns.sorted), plan.take(1500))
+      rows
+    }
+    assert(check(IndexSearcher.topK(spark, indexDir, QuerySet.queries.take(2), 5),
+      "WandKernel", Seq("term", "first_doc", "last_doc", "count",
+        "block_max", "doc_gaps", "tfs", "dls")) > 0)
+    check(graft.query.PhraseSearch.search(spark, indexDir, Seq("hash", "join")),
+      "PhraseKernel", Seq("term", "first_doc", "count", "doc_gaps",
+        "positions"))
   }
 
   test("dictionary lookup prunes to query terms (pushed filter)") {

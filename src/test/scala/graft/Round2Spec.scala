@@ -64,16 +64,77 @@ class Round2Spec extends SparkSpec {
     assert(crossers == 0)
   }
 
-  test("granule splits: splitsPerCluster 1 vs 4 vs 8 identical ranks") {
-    val base = IndexSearcher.topK(spark, indexDir, QuerySet.queries, 10,
-      splitsPerCluster = 1)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    Seq(4, 8).foreach { s =>
-      val split = IndexSearcher.topK(spark, indexDir, QuerySet.queries, 10,
-        splitsPerCluster = s)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      assert(split.toSeq == base.toSeq, s"splits=$s")
+  /** An index spanning two granules (every fixture index fits in one,
+    * where `_split` is always 0): 9,000 short docs, kc = 2. Doc i holds
+    * `common` unless i % 10 == 9, and `rareword` iff i < 20 — the rare
+    * docs sort first by (repo, path, commit), so they take ids 0..19.
+    */
+  lazy val multiGranuleDir: String = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9000L)
+    val vocab = Vector("load", "store", "add", "mul", "jump", "call", "ret",
+      "push", "pop", "cmp")
+    val docs = (0 until 9000).map { i =>
+      val toks = Seq.fill(3 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size))) ++
+        (if (i % 10 != 9) Seq("common") else Nil) ++
+        (if (i < 20) Seq("rareword") else Nil)
+      ("repo-g", f"src/$i%05d.s", "c0", "asm", toks.mkString(" "))
     }
+    val dir = Files.createTempDirectory("graft-r2-granules").toString
+    IndexBuilder.buildFromSource(spark,
+      docs.toDF("repo", "path", "commit", "lang", "content").repartition(4),
+      dir, IndexBuilder.BuildConfig(resume = false, kc = 2),
+      lineageName = "granules")
+    dir
+  }
+
+  private val granuleQueries = Seq(
+    1 -> Seq("common", "rareword"), 2 -> Seq("load", "store", "add"),
+    3 -> Seq("jump", "jump", "ret"), 4 -> Seq("cmp", "common"),
+    5 -> Seq("pop"))
+
+  test("granule splits: splitsPerCluster 1 vs 4 vs 8 identical ranks") {
+    val m = ManifestIO.read(s"$multiGranuleDir/manifest.json")
+    assert(m.granule_window < m.num_docs,
+      s"window ${m.granule_window} must cut ${m.num_docs} docs")
+    Seq(indexDir -> QuerySet.queries, multiGranuleDir -> granuleQueries)
+      .foreach { case (dir, queries) =>
+        val base = IndexSearcher.topK(spark, dir, queries, 10,
+          splitsPerCluster = 1)
+          .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        Seq(4, 8).foreach { s =>
+          val split = IndexSearcher.topK(spark, dir, queries, 10,
+            splitsPerCluster = s)
+            .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+          assert(split.toSeq == base.toSeq, s"$dir splits=$s")
+        }
+      }
+    // phrases whose docs lie in both granules
+    PhraseSearchCheck.assertMatches(spark, multiGranuleDir, Seq(
+      Seq("load", "store"), Seq("push", "pop", "ret"), Seq("call", "call"),
+      Seq("cmp", "common"), Seq("common", "rareword")))
+  }
+
+  test("block-scan metrics: phrase decodes every block, selective WAND skips") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    // SQL metrics of the final (post-AQE) plan's BlockScan
+    def metrics(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      assert(df.collect().nonEmpty)
+      helper.collectFirst(df.queryExecution.executedPlan) {
+        case b: graft.plans.BlockScanExec => b.metrics.map { case (k, m) => k -> m.value }
+      }.getOrElse(fail("no BlockScan in the executed plan"))
+    }
+    val phrase = metrics(graft.query.PhraseSearch.search(spark, multiGranuleDir,
+      Seq("cmp", "common")))
+    assert(phrase("blocksIn") > 0 && phrase("groups") > 1, phrase)
+    assert(phrase("blocksDecoded") == phrase("blocksIn"), phrase)
+    // rareword's docs take the first ids: once they are scored, the top-1
+    // threshold exceeds what `common` alone can reach
+    val wand = metrics(IndexSearcher.topK(spark, multiGranuleDir,
+      Seq(1 -> Seq("rareword", "common")), 1))
+    assert(wand("numOutputRows") >= 1, wand)
+    assert(wand("blocksDecoded") < wand("blocksIn"), wand)
   }
 
   test("Dc pluggable: cosine coarse assignment, rank-identical results") {

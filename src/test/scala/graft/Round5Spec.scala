@@ -127,6 +127,30 @@ class Round5Spec extends SparkSpec {
     assert(builds == 3 && !(a3 eq a))
   }
 
+  test("DerivedFrameCache: evicting an entry keeps a live plan-equal entry cached") {
+    import spark.implicits._
+    import graft.ops.DerivedFrameCache
+    // identity-distinct sources with equal plans: Spark's cache manager
+    // holds ONE cached copy for both derived frames
+    val (s1, s2) = (Seq(7001, 7002).toDF("x"), Seq(7001, 7002).toDF("x"))
+    val f1 = DerivedFrameCache(s1, "t5-plan-eq")(s1.select(col("x") * 3 as "z"))
+    val f2 = DerivedFrameCache(s2, "t5-plan-eq")(s2.select(col("x") * 3 as "z"))
+    assert(!(f1 eq f2) && f1.sameSemantics(f2))
+    f2.count()
+    // Max - 1 fresh entries evict every entry older than f2, f1 included,
+    // whatever the cache held before
+    (1 to DerivedFrameCache.Max - 1).foreach { i =>
+      val k = Seq(-i).toDF("x")
+      DerivedFrameCache(k, "t5-plan-eq-flood")(k.select(col("x") - 1 as "w"))
+    }
+    val live = DerivedFrameCache(s2, "t5-plan-eq")(
+      fail("f2 must still be a live entry"))
+    assert(live eq f2)
+    val cached = spark.sharedState.cacheManager.lookupCachedData(
+      f2.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    assert(cached.isDefined, "the live entry's frame lost its cached data")
+  }
+
   test("caches build outside the lock: a blocked build stalls no other key") {
     import spark.implicits._
     import java.util.concurrent.{CountDownLatch, TimeUnit}

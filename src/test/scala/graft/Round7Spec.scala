@@ -154,6 +154,29 @@ class Round7Spec extends SparkSpec {
       .map { case (id, v) => (id.toInt, v) }.toSeq
     assert(qs.map(_._1) == qs2.map(_._1))
     assert(qs.map(_._2.toSeq) == qs2.map(_._2.toSeq))
+
+    // adversarial ids: every vec_id a multiple of the stride, so the
+    // sample filter keeps every row and the driver guard `limit` binds
+    val cap = 10
+    val n = 200L
+    val rnd = new scala.util.Random(7L)
+    val adv = (0L until n).map(i =>
+      (i * (n / cap), Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").repartition(3)
+    val advQ = Seq(0L, 20L * 150, 20L * 199)
+    val (m3, _, qs3) = graft.parity.IvfAdc.buildWithQueries(
+      spark, adv, kc = 2, m = 2, k = 4, queryIds = advQ, sampleCap = cap)
+    val (m4, _) = graft.parity.IvfAdc.build(
+      spark, adv, kc = 2, m = 2, k = 4, sampleCap = cap)
+    assert(java.util.Arrays.deepEquals(
+      m3.centroids.asInstanceOf[Array[AnyRef]],
+      m4.centroids.asInstanceOf[Array[AnyRef]]))
+    assert(m3.codebooks.books.flatten.flatten.toSeq ==
+      m4.codebooks.books.flatten.flatten.toSeq)
+    assert(qs3.map(_._1.toLong) == advQ)
+    val advRows = adv.collect().map(r => r.getLong(0) -> r.getSeq[Float](1))
+      .toMap
+    assert(qs3.map(_._2.toSeq) == advQ.map(advRows))
   }
 
   test("per-row array_distinct == global distinct for shingles and fingerprints") {
