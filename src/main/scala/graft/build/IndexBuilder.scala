@@ -352,11 +352,7 @@ object IndexBuilder {
       val slotCol = GranulePartitioner.slotKeyCol(
         GranulePartitioner.slotMap(weights, parts), window, parts) _
       val obs = Observation()
-      val metrics =
-        count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
-          min(col("doc_id")).as("min_id") +:
-          (0 until kc).map(c =>
-            sum(when(col("cluster_id") === c, 1L).otherwise(0L)).as(s"c$c"))
+      val metrics = docstoreMetrics(kc)
       // fused content→features→argmin assignment, one codegen call per
       // row with a reused feature buffer — no feat array column, no udf
       // Seq boxing on the build's biggest stage (r3; ClusterAssignExpr).
@@ -405,9 +401,7 @@ object IndexBuilder {
           "the source is not deterministic across jobs")
       saveStats(indexDir,
         CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-      saveDocCounts(indexDir, (0 until kc)
-        .map(c => c -> m(s"c$c").asInstanceOf[Long])
-        .filter(_._2 > 0).toMap)
+      saveDocCounts(indexDir, observedDocCounts(m, kc))
       }
     }
 
@@ -565,7 +559,8 @@ object IndexBuilder {
         }
       }
     step("dictionary") {
-      writeDictionary(spark, indexDir, loadStats(indexDir).num_docs)
+      saveVocab(indexDir,
+        writeDictionary(spark, indexDir, loadStats(indexDir).num_docs))
     }
 
     // ---- step 4: manifest (ZERO jobs: assembled from the stats the
@@ -573,17 +568,10 @@ object IndexBuilder {
     // write observation, block stats from the encode accumulator, vocab
     // from the dictionary write observation) -----------------------------
     step("manifest") {
-      val cstats = loadStats(indexDir)
-      writeManifest(spark, indexDir, cstats.num_docs, cstats.avgdl, sfDir,
-        vocabOpt = loadVocab(indexDir),
-        docCountsOpt = loadDocCounts(indexDir),
-        clusterStatsOpt = Some(loadAllClusterStats(indexDir))
-          .filter(_.nonEmpty),
-        granuleWindow = cstats.granule_window,
-        distanceName = graft.cluster.Distance.name(cfg.distance),
-        coarseGraphOpt = graphF.map(f =>
-          scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf)))
+      // graphF is defined exactly when this step runs
+      writeManifest(indexDir, sfDir, graft.cluster.Distance.name(cfg.distance),
+        scala.concurrent.Await.result(
+          graphF.get, scala.concurrent.duration.Duration.Inf))
     }
 
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
@@ -608,7 +596,8 @@ object IndexBuilder {
     * with the corpus stats observed on the write like the normal path.
     * The write observation's row count is REQUIRED to equal knownRows:
     * a wrong caller-side id shift cannot silently produce a plausible
-    * index.
+    * index. Zero rows (compacting a fully tombstoned index) give an
+    * empty docstore.
     */
   private def docstorePreAssigned(
       spark: SparkSession,
@@ -616,17 +605,13 @@ object IndexBuilder {
       indexDir: String,
       centroids: Array[Array[Double]],
       knownRows: Long): Unit = {
-    require(knownRows > 0, "preAssigned requires exact knownRows > 0")
+    require(knownRows >= 0, "preAssigned requires exact knownRows >= 0")
     val kc = centroids.length
     saveCentroids(indexDir, centroids)
     val parts = spark.sessionState.conf.numShufflePartitions
     val window = granuleWindow(knownRows, parts)
     val obs = Observation()
-    val metrics =
-      count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
-        min(col("doc_id")).as("min_id") +:
-        (0 until kc).map(c =>
-          sum(when(col("cluster_id") === c, 1L).otherwise(0L)).as(s"c$c"))
+    val metrics = docstoreMetrics(kc)
     // ZERO-exchange write (r7): the source IS the old docstore — its
     // files are cluster-partitioned and (cluster, doc)-sorted, the
     // tombstone filter preserves order, and the id shift is monotone,
@@ -656,10 +641,23 @@ object IndexBuilder {
       "preAssigned ids must be dense non-negative")
     saveStats(indexDir,
       CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-    saveDocCounts(indexDir, (0 until kc)
-      .map(c => c -> m(s"c$c").asInstanceOf[Long])
-      .filter(_._2 > 0).toMap)
+    saveDocCounts(indexDir, observedDocCounts(m, kc))
   }
+
+  /** What every docstore write observes (build, compaction, append):
+    * rows, Σdoc_len, the smallest doc_id and one doc count per cluster.
+    * Over zero rows the sums and the min are null, which read as 0.
+    */
+  private[graft] def docstoreMetrics(kc: Int): Seq[org.apache.spark.sql.Column] =
+    count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
+      min(col("doc_id")).as("min_id") +:
+      (0 until kc).map(c =>
+        sum(when(col("cluster_id") === c, 1L).otherwise(0L)).as(s"c$c"))
+
+  /** The non-zero per-cluster doc counts of a [[docstoreMetrics]] result. */
+  private[graft] def observedDocCounts(m: Map[String, Any], kc: Int): Map[Int, Long] =
+    (0 until kc).map(c => c -> m(s"c$c").asInstanceOf[Long])
+      .filter(_._2 > 0).toMap
 
   // centroids + segment metrics stashed as JSON between steps (part of
   // the checkpoint state a resumed build reloads)
@@ -905,7 +903,8 @@ object IndexBuilder {
     * no content pass. Map-side partial aggregation already spreads
     * stop-word-heavy terms (each reducer key receives pre-combined
     * partials per task — the effect salting gives non-combinable aggs).
-    * Also used by Maintenance.append to refresh idf after segment adds.
+    * Also used by maintenance to refresh idf after its postings change.
+    * Returns the vocabulary size, observed on the write.
     */
   def writeDictionary(spark: SparkSession, indexDir: String, n: Long): Long = {
     val tmp = s"$indexDir/dictionary_tmp"
@@ -937,58 +936,56 @@ object IndexBuilder {
     if (Files.exists(target)) Files.move(target, aside)
     Files.move(Paths.get(tmp), target)
     org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    val vocab = obs.get("vocab").asInstanceOf[Long]
-    saveVocab(indexDir, vocab)
-    vocab
+    obs.get("vocab").asInstanceOf[Long]
   }
 
-  /** Writes the manifest. The build path passes everything precomputed
-    * (observations + accumulators ⇒ ZERO jobs); Maintenance callers omit
-    * them and pay the recompute scans (non-critical paths).
+  /** Writes the build's manifest from the stats its steps observed and
+    * accumulated — ZERO jobs: doc counts from the docstore write
+    * observation, block stats from the encode accumulators, vocab from
+    * the dictionary write observation, the coarse graph built while the
+    * dictionary job ran. Maintenance edits a copy of the manifest it
+    * read instead.
     */
-  def writeManifest(spark: SparkSession, indexDir: String,
-      numDocs: Long, avgdl: Double, lineageName: String,
-      vocabOpt: Option[Long] = None,
-      docCountsOpt: Option[Map[Int, Long]] = None,
-      clusterStatsOpt: Option[Map[Int, ClusterStat]] = None,
-      granuleWindow: Long = 0L,
-      distanceName: String = "sqeuclidean",
-      coarseGraphOpt: Option[(Array[Array[Int]],
-        Array[Array[Array[Int]]])] = None): Unit = {
-    val vocab = vocabOpt.getOrElse(
-      IndexSchemas.readDictionary(spark, indexDir).count())
+  private def writeManifest(indexDir: String, lineageName: String,
+      distanceName: String,
+      // one graph build, both regimes (exact kNN edges below
+      // ExactKnnMax, layered incremental insert above), under the
+      // index's own coarse metric so the sub-linear probe works for any
+      // Dc (the reference's HierarchicalNSW carries D the same way,
+      // /root/reference/src/coarsequantizers.jl:59-60) [VERDICT r3]
+      coarseGraph: (Array[Array[Int]], Array[Array[Array[Int]]])): Unit = {
+    val stats = loadStats(indexDir)
     val centroids = loadCentroids(indexDir)
-    // one graph build, both regimes (exact kNN edges below ExactKnnMax,
-    // layered incremental insert above — level 0 + upper layers), under
-    // the index's own coarse metric so the sub-linear probe works for
-    // any Dc (the reference's HierarchicalNSW carries D the same way,
-    // /root/reference/src/coarsequantizers.jl:59-60) [VERDICT r3].
-    // The build path hands it in precomputed (overlapped with the
-    // dictionary job); Maintenance callers pay it here.
-    val coarseGraph = coarseGraphOpt.getOrElse(
-      graft.cluster.GraphCoarseSearch.buildGraph(centroids,
-        metric = graft.cluster.Distance.byName(distanceName)))
-    val blockStats: Map[Int, ClusterStat] = clusterStatsOpt.getOrElse {
-      IndexSchemas.readPostings(spark, indexDir)
-        .groupBy("cluster_id")
-        .agg(
-          sum(col("count")).as("postings"),
-          count(lit(1)).as("blocks"),
-          sum(length(col("doc_gaps")) + length(col("tfs")) +
-            length(col("dls")) + length(col("positions"))).as("bytes"))
-        .collect()
-        .map(r => r.getInt(0) ->
-          ClusterStat(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            build_millis = 0L)).toMap
-    }
-    val docCounts = docCountsOpt.getOrElse {
-      IndexSchemas.readDocstore(spark, indexDir)
-        .groupBy("cluster_id").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
+    val manifest = IndexManifest(
+      version = FormatVersion,
+      num_docs = stats.num_docs,
+      avgdl = stats.avgdl,
+      vocab_size = loadVocab(indexDir),
+      kc = centroids.length,
+      feature_dim = CoarseClusterer.Dim,
+      k1 = Bm25.K1,
+      b = Bm25.B,
+      round_scale = Bm25.Scale,
+      distance = distanceName,
+      granule_window = stats.granule_window,
+      centroids = centroids,
+      coarse_graph = coarseGraph._1,
+      coarse_graph_upper = coarseGraph._2,
+      coarse_graph_metric = distanceName,
+      lineage = InputLineage(lineageName, stats.num_docs),
+      partitions = partitionMetas(loadDocCounts(indexDir),
+        loadAllClusterStats(indexDir)),
+      segments = loadSegments(indexDir))
+    ManifestIO.write(s"$indexDir/manifest.json", manifest)
+  }
 
-    val parts = docCounts.keys.toSeq.sorted.map { cid =>
-      val cs = blockStats.getOrElse(cid, ClusterStat(cid, 0L, 0L, 0L, 0L))
+  /** Manifest partitions: one per cluster holding docs, its block stats
+    * from `clusterStats` (none = an empty posting partition).
+    */
+  private[graft] def partitionMetas(docCounts: Map[Int, Long],
+      clusterStats: Map[Int, ClusterStat]): Seq[PartitionMeta] =
+    docCounts.keys.toSeq.sorted.map { cid =>
+      val cs = clusterStats.getOrElse(cid, ClusterStat(cid, 0L, 0L, 0L, 0L))
       PartitionMeta(cid, docCounts(cid), cs.num_postings, cs.num_blocks,
         cs.bytes,
         build_millis = cs.build_millis,
@@ -1000,27 +997,15 @@ object IndexBuilder {
           else 0.0)
     }
 
-    val manifest = IndexManifest(
-      version = FormatVersion,
-      num_docs = numDocs,
-      avgdl = avgdl,
-      vocab_size = vocab,
-      kc = centroids.length,
-      feature_dim = CoarseClusterer.Dim,
-      k1 = Bm25.K1,
-      b = Bm25.B,
-      round_scale = Bm25.Scale,
-      distance = distanceName,
-      granule_window = granuleWindow,
-      centroids = centroids,
-      coarse_graph = coarseGraph._1,
-      coarse_graph_upper = coarseGraph._2,
-      coarse_graph_metric = distanceName,
-      lineage = InputLineage(lineageName, numDocs),
-      partitions = parts,
-      segments = loadSegments(indexDir))
-    ManifestIO.write(s"$indexDir/manifest.json", manifest)
-  }
+  /** Per-cluster sums of encode stats (several tasks or batches may
+    * encode blocks of one cluster).
+    */
+  private[graft] def sumClusterStats(stats: Seq[ClusterStat]): Map[Int, ClusterStat] =
+    stats.groupBy(_.cluster_id).map { case (cid, cs) =>
+      cid -> ClusterStat(cid,
+        cs.map(_.num_postings).sum, cs.map(_.num_blocks).sum,
+        cs.map(_.bytes).sum, cs.map(_.build_millis).sum)
+    }
 
   /** Corpus stats observed once on the docstore write job (exact Long
     * sum → deterministic avgdl) and reused by every later step.
@@ -1030,7 +1015,8 @@ object IndexBuilder {
     */
   case class CorpusStats(num_docs: Long, sum_dl: Long,
       granule_window: Long = 1L) {
-    def avgdl: Double = sum_dl.toDouble / num_docs
+    // an empty index has no mean length; 0 keeps NaN out of the manifest
+    def avgdl: Double = if (num_docs == 0) 0.0 else sum_dl.toDouble / num_docs
   }
 
   private def saveStats(indexDir: String, s: CorpusStats): Unit = {
@@ -1038,13 +1024,6 @@ object IndexBuilder {
     Files.createDirectories(p.getParent)
     Files.write(p, mapper.writeValueAsBytes(s))
   }
-
-  /** Maintenance hooks (segment merge refreshes these). */
-  def saveStatsPublic(indexDir: String, s: CorpusStats): Unit =
-    saveStats(indexDir, s)
-
-  def replaceSegments(indexDir: String, segs: Seq[SegmentMeta]): Unit =
-    saveSegments(indexDir, segs)
 
   def loadStats(indexDir: String): CorpusStats =
     mapper.readValue(
@@ -1058,13 +1037,11 @@ object IndexBuilder {
       m.toSeq.sortBy(_._1).map { case (k, v) => Array(k.toLong, v) }.toArray))
   }
 
-  def loadDocCounts(indexDir: String): Option[Map[Int, Long]] = {
-    val p = Paths.get(indexDir, "_checkpoints", "doccounts.json")
-    if (!Files.exists(p)) None
-    else Some(mapper.readValue(Files.readAllBytes(p),
+  private def loadDocCounts(indexDir: String): Map[Int, Long] =
+    mapper.readValue(
+      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "doccounts.json")),
       classOf[Array[Array[Long]]])
-      .map(a => a(0).toInt -> a(1)).toMap)
-  }
+      .map(a => a(0).toInt -> a(1)).toMap
 
   private def saveVocab(indexDir: String, vocab: Long): Unit = {
     val p = Paths.get(indexDir, "_checkpoints", "vocab.json")
@@ -1072,11 +1049,10 @@ object IndexBuilder {
     Files.write(p, mapper.writeValueAsBytes(vocab))
   }
 
-  def loadVocab(indexDir: String): Option[Long] = {
-    val p = Paths.get(indexDir, "_checkpoints", "vocab.json")
-    if (!Files.exists(p)) None
-    else Some(mapper.readValue(Files.readAllBytes(p), classOf[Long]))
-  }
+  private def loadVocab(indexDir: String): Long =
+    mapper.readValue(
+      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "vocab.json")),
+      classOf[Long])
 
   /** Per-batch cluster encode stats (a rerun batch overwrites its own
     * file; clusters never span batches, so merging = concatenation).
@@ -1088,21 +1064,12 @@ object IndexBuilder {
     Files.write(p, mapper.writeValueAsBytes(stats.toArray))
   }
 
-  def loadAllClusterStats(indexDir: String): Map[Int, ClusterStat] = {
-    val dir = Paths.get(indexDir, "_checkpoints").toFile
-    if (!dir.isDirectory) Map.empty
-    else dir.listFiles()
+  private def loadAllClusterStats(indexDir: String): Map[Int, ClusterStat] =
+    sumClusterStats(Paths.get(indexDir, "_checkpoints").toFile.listFiles()
       .filter(_.getName.startsWith("clusterstats_batch_"))
-      .sortBy(_.getName)
+      .sortBy(_.getName).toSeq
       .flatMap(f => mapper.readValue(Files.readAllBytes(f.toPath),
-        classOf[Array[ClusterStat]]))
-      .groupBy(_.cluster_id)
-      .map { case (cid, cs) =>
-        cid -> ClusterStat(cid,
-          cs.map(_.num_postings).sum, cs.map(_.num_blocks).sum,
-          cs.map(_.bytes).sum, cs.map(_.build_millis).sum)
-      }
-  }
+        classOf[Array[ClusterStat]])))
 
   private def saveCentroids(indexDir: String, c: Array[Array[Double]]): Unit = {
     val p = Paths.get(indexDir, "_checkpoints", "centroids.json")
@@ -1122,10 +1089,9 @@ object IndexBuilder {
   }
 
   /** Merge new segment metas into the checkpoint: a (re-)run batch
-    * replaces its ENTIRE segment-id range [from, until). Public because
-    * Maintenance.append records its mini-segments the same way.
+    * replaces its ENTIRE segment-id range [from, until).
     */
-  def appendSegments(indexDir: String, segs: Seq[SegmentMeta],
+  private def appendSegments(indexDir: String, segs: Seq[SegmentMeta],
       from: Int, until: Int): Unit = {
     val merged = (loadSegments(indexDir)
       .filterNot(s => s.segment_id >= from && s.segment_id < until)

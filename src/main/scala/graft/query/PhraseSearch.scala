@@ -19,8 +19,8 @@ import graft.plans.{BlockKernel, BlockScan}
   * Runs through the same [[graft.plans.BlockScan]] operator as the WAND
   * scorer: term-pushed block scan → (cluster_id, _split) exchange →
   * per-group [[PhraseKernel]] (decode docs + positions, merge-intersect
-  * the phrase terms' doc lists, count adjacency). One shuffle,
-  * partition-local work, tiny output.
+  * the phrase terms' doc lists, count adjacency) → the tiny output
+  * gathered into one partition and sorted there.
   */
 object PhraseSearch {
 
@@ -34,8 +34,12 @@ object PhraseSearch {
     require(phrase.size >= 2, "phrase needs >= 2 terms")
     val kernel = PhraseKernel(phrase,
       graft.maintain.Maintenance.loadTombstones(indexDir))
+    // the hits are few: one partition sorts them locally, where a global
+    // sort's range exchange would first sample its input and thereby
+    // run the kernel a second time
     BlockScan.frame(spark, indexDir, ManifestIO.read(s"$indexDir/manifest.json"),
       kernel, phrase.distinct, None, IndexSearcher.SplitsPerCluster)
+      .repartition(1)
       .orderBy(col("occurrences").desc, col("doc_id").asc)
   }
 

@@ -74,46 +74,6 @@ object Corpus {
       |       lang, text AS content
       |FROM documents""".stripMargin
 
-  /** Dense 0-based id assignment in global (sortCols) order — the graft
-    * analog of the reference's dense insertion-order point ids
-    * (/root/reference/src/index.jl:189, 0-based).
-    *
-    * Scalable form: a global `row_number() OVER (ORDER BY ...)` would
-    * funnel all rows through ONE partition. Two strategies, both exact,
-    * both producing the identical ids (= global rank of the unique key):
-    *
-    *  - "broadcast" (default up to [[IdBroadcastMaxDocs]] rows): ONE
-    *    keys-only job (range-repartition just the sort columns — tiny
-    *    bytes — sort, and collect each partition's xxhash64 sequence in
-    *    order) gives the driver the exact (key hash → rank) map, which
-    *    is broadcast and applied to the ORIGINAL frame by a codegen
-    *    lookup expression. The full content rows are never exchanged,
-    *    never cached: the dense-id step costs a keys exchange (~2% of
-    *    the content bytes) plus one hash probe per row. Any hash
-    *    collision (or duplicate key) is detected exactly on the driver
-    *    and falls back to the exchange strategy.
-    *  - "exchange" (any scale): range-repartition the full rows on the
-    *    sort key, count rows per partition (one light job over the
-    *    cached exchange), then id = partition offset + local row index
-    *    via a stateful leaf expression (PartitionOffsetRowIndex)
-    *    streaming the sorted partitions in place.
-    *
-    * The broadcast strategy exists because the exchange one moves every
-    * content byte through a shuffle ONLY to learn each row's rank — at
-    * ~32 B of driver/broadcast memory per row, corpora up to tens of
-    * millions of docs resolve ranks from a keys-only pass instead (the
-    * same size-based strategy pick as a broadcast join). Above the
-    * threshold the exchange path takes over; per-partition key counts
-    * are capped so an over-threshold corpus never materializes the
-    * hashes (one wasted keys pass, then fallback).
-    */
-  def withDenseId(
-      df: DataFrame,
-      sortCols: Seq[String],
-      idCol: String,
-      numPartitions: Int = 0): DataFrame =
-    withDenseIdCounted(df, sortCols, idCol, numPartitions).df
-
   /** Dense-id result: the id'd frame, the TOTAL row count (free — both
     * strategies learn it from their per-partition counts, so callers
     * never need a separate count job), an unpersist handle for the
@@ -147,6 +107,39 @@ object Corpus {
     */
   val IdDriverSortMaxDocs: Long = 65536L
 
+  /** Dense 0-based id assignment in global (sortCols) order — the graft
+    * analog of the reference's dense insertion-order point ids
+    * (/root/reference/src/index.jl:189, 0-based).
+    *
+    * Scalable form: a global `row_number() OVER (ORDER BY ...)` would
+    * funnel all rows through ONE partition. Two strategies, both exact,
+    * both producing the identical ids (= global rank of the unique key):
+    *
+    *  - "broadcast" (default up to [[IdBroadcastMaxDocs]] rows): ONE
+    *    keys-only job (range-repartition just the sort columns — tiny
+    *    bytes — sort, and collect each partition's xxhash64 sequence in
+    *    order) gives the driver the exact (key hash → rank) map, which
+    *    is broadcast and applied to the ORIGINAL frame by a codegen
+    *    lookup expression. The full content rows are never exchanged,
+    *    never cached: the dense-id step costs a keys exchange (~2% of
+    *    the content bytes) plus one hash probe per row. Any hash
+    *    collision (or duplicate key) is detected exactly on the driver
+    *    and falls back to the exchange strategy.
+    *  - "exchange" (any scale): range-repartition the full rows on the
+    *    sort key, count rows per partition (one light job over the
+    *    cached exchange), then id = partition offset + local row index
+    *    via a stateful leaf expression (PartitionOffsetRowIndex)
+    *    streaming the sorted partitions in place.
+    *
+    * The broadcast strategy exists because the exchange one moves every
+    * content byte through a shuffle ONLY to learn each row's rank — at
+    * ~32 B of driver/broadcast memory per row, corpora up to tens of
+    * millions of docs resolve ranks from a keys-only pass instead (the
+    * same size-based strategy pick as a broadcast join). Above the
+    * threshold the exchange path takes over; per-partition key counts
+    * are capped so an over-threshold corpus never materializes the
+    * hashes (one wasted keys pass, then fallback).
+    */
   def withDenseIdCounted(
       df: DataFrame,
       sortCols: Seq[String],

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, length, lit, sum}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.build.{IndexBuilder, ManifestIO}
+import graft.build.{ClusterStat, IndexBuilder, IndexSchemas, ManifestIO}
 import graft.maintain.Maintenance
 
 /** Structured Streaming ingestion: F1-shaped files landing in a
@@ -20,7 +20,7 @@ import graft.maintain.Maintenance
   *
   * Delivery semantics: foreachBatch is AT-LEAST-once, and
   * Maintenance.append is a non-atomic multi-step sequence (docstore,
-  * postings, segments, dictionary, manifest) — so the sink records an
+  * postings, dictionary, manifest) — so the sink records an
   * INTENT sidecar (batchId + pre-append doc/segment watermarks) before
   * appending and the applied batchId after. On replay:
   *  - batchId <= lastApplied → skip (the common duplicate-delivery case);
@@ -87,15 +87,16 @@ object StreamingAppend {
 
   /** Removes every trace of a partially-applied append: docstore rows
     * above the doc watermark, posting blocks above the segment
-    * watermark, their segment metas, then dictionary + manifest are
-    * rebuilt for the restored corpus. Idempotent (pure range filters),
-    * so a crash mid-rollback just rolls back again.
+    * watermark, their segment metas; the dictionary is rebuilt and the
+    * manifest's partitions re-counted from the rows kept. Idempotent
+    * (pure range filters), so a crash mid-rollback just rolls back
+    * again.
     */
   def rollbackPartial(spark: SparkSession, indexDir: String, intent: Intent): Unit = {
     System.err.println(s"[stream] rolling back partial batch " +
       s"${intent.batchId}: docs>=${intent.numDocsBefore}, " +
       s"segments>${intent.maxSegBefore}")
-    def rewrite(sub: String, keep: DataFrame => DataFrame): Unit = {
+    def rewrite(sub: String, keep: => DataFrame): Unit = {
       val live = java.nio.file.Paths.get(s"$indexDir/$sub")
       val aside = java.nio.file.Paths.get(s"$indexDir/${sub}_old")
       // A previous rollback may have died between moving the live dir
@@ -107,26 +108,38 @@ object StreamingAppend {
         java.nio.file.Files.move(aside, live)
       if (java.nio.file.Files.isDirectory(live)) {
         val tmp = s"$indexDir/${sub}_rollback"
-        keep(spark.read.parquet(live.toString))
-          .write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
+        keep.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
         org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
         java.nio.file.Files.move(live, aside)
         java.nio.file.Files.move(java.nio.file.Paths.get(tmp), live)
         org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
       }
     }
-    rewrite("docstore", _.filter(col("doc_id") < intent.numDocsBefore))
-    rewrite("postings", _.filter(col("segment_id") <= intent.maxSegBefore))
-    // drop the partial batch's segment metas: replace the whole range
-    // above the watermark with nothing
-    IndexBuilder.appendSegments(indexDir, Seq.empty,
-      intent.maxSegBefore + 1, Int.MaxValue)
+    rewrite("docstore", IndexSchemas.readDocstore(spark, indexDir)
+      .filter(col("doc_id") < intent.numDocsBefore))
+    rewrite("postings", IndexSchemas.readPostings(spark, indexDir)
+      .filter(col("segment_id") <= intent.maxSegBefore))
+    val docCounts = IndexSchemas.readDocstore(spark, indexDir)
+      .groupBy("cluster_id").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val blockStats = IndexSchemas.readPostings(spark, indexDir)
+      .groupBy("cluster_id")
+      .agg(
+        sum(col("count")).as("postings"),
+        count(lit(1)).as("blocks"),
+        sum(length(col("doc_gaps")) + length(col("tfs")) +
+          length(col("dls")) + length(col("positions"))).as("bytes"))
+      .collect()
+      .map(r => r.getInt(0) -> ClusterStat(r.getInt(0), r.getLong(1),
+        r.getLong(2), r.getLong(3), build_millis = 0L)).toMap
+    val vocab = IndexBuilder.writeDictionary(spark, indexDir, intent.numDocsBefore)
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-    IndexBuilder.writeDictionary(spark, indexDir, intent.numDocsBefore)
-    IndexBuilder.writeManifest(spark, indexDir, intent.numDocsBefore,
-      manifest.avgdl, manifest.lineage.source_dir,
-      granuleWindow = manifest.granule_window,
-      distanceName = manifest.distance)
+    ManifestIO.write(s"$indexDir/manifest.json", manifest.copy(
+      num_docs = intent.numDocsBefore,
+      vocab_size = vocab,
+      lineage = manifest.lineage.copy(num_source_rows = intent.numDocsBefore),
+      partitions = IndexBuilder.partitionMetas(docCounts, blockStats),
+      segments = manifest.segments.filter(_.segment_id <= intent.maxSegBefore)))
   }
 
   /** Idempotent micro-batch application; returns true iff the batch was

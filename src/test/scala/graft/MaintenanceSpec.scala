@@ -118,9 +118,47 @@ class MaintenanceSpec extends SparkSpec {
     assert(desc.contains("B/posting") && desc.contains(s"docs=${n - 1}"))
   }
 
+  /** The maintained manifest against what scans of the index say:
+    * partitions, vocab and segments as observed, quantizer and coarse
+    * graph as built.
+    */
+  def assertManifestMatchesScan(dir: String,
+      built: graft.build.IndexManifest): Unit = {
+    import graft.build.IndexSchemas
+    val m = ManifestIO.read(s"$dir/manifest.json")
+    val docs = IndexSchemas.readDocstore(spark, dir)
+      .groupBy("cluster_id").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val blocks = IndexSchemas.readPostings(spark, dir)
+      .groupBy("cluster_id")
+      .agg(sum(col("count")), count(lit(1)),
+        sum(length(col("doc_gaps")) + length(col("tfs")) +
+          length(col("dls")) + length(col("positions"))))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
+        r.getLong(3))).toMap
+    val scanned = docs.keys.toSeq.sorted.map { c =>
+      val (p, b, bytes) = blocks.getOrElse(c, (0L, 0L, 0L))
+      (c, docs(c), p, b, bytes)
+    }
+    assert(m.partitions.map(p => (p.cluster_id, p.num_docs, p.num_postings,
+      p.num_blocks, p.bytes)) == scanned)
+    assert(m.vocab_size == IndexSchemas.readDictionary(spark, dir).count())
+    val segIds = m.segments.map(_.segment_id)
+    assert(segIds.distinct.size == segIds.size, segIds)
+    assert(segIds.toSet == IndexSchemas.readPostings(spark, dir)
+      .select("segment_id").distinct().collect().map(_.getInt(0)).toSet)
+    assert(m.centroids.map(_.toSeq).toSeq == built.centroids.map(_.toSeq).toSeq)
+    assert(m.coarse_graph.map(_.toSeq).toSeq ==
+      built.coarse_graph.map(_.toSeq).toSeq)
+    assert(m.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq ==
+      built.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(m.coarse_graph_metric == built.coarse_graph_metric)
+  }
+
   test("segment merge consolidates appended blocks and refreshes avgdl") {
     import spark.implicits._
     val dir = freshIndex()
+    val built = ManifestIO.read(s"$dir/manifest.json")
     (1 to 2).foreach { i =>
       Maintenance.append(spark, dir, Seq(
         (s"repo-m$i", s"src/m$i/a.c", f"feed$i%08d0001", "c",
@@ -128,6 +166,7 @@ class MaintenanceSpec extends SparkSpec {
         (s"repo-m$i", s"src/m$i/b.c", f"feed$i%08d0002", "c",
           "melody xylophone join hash"))
         .toDF("repo", "path", "commit", "lang", "content"))
+      assertManifestMatchesScan(dir, built)
     }
     val preBlocks = spark.read.parquet(s"$dir/postings")
       .groupBy("cluster_id", "term").count()
@@ -135,6 +174,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(preBlocks > 0, "appends should leave fragmented (cluster,term) runs")
 
     Maintenance.mergeSegments(spark, dir)
+    assertManifestMatchesScan(dir, built)
 
     val m = ManifestIO.read(s"$dir/manifest.json")
     assert(m.num_docs == 504)
@@ -191,5 +231,48 @@ class MaintenanceSpec extends SparkSpec {
       .map(s => java.security.MessageDigest.getInstance("SHA-256")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString)
     assert(shas.toSeq == exp)
+  }
+
+  test("append fails loudly on a non-deterministic source; nothing is written") {
+    import spark.implicits._
+    val dir = freshIndex()
+    val manifestPath = java.nio.file.Paths.get(dir, "manifest.json")
+    val manifestBytes = Files.readAllBytes(manifestPath)
+    val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+    def ids() = graft.build.IndexSchemas.readDocstore(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    // the dense-id keys pass and the docstore write each draw new paths
+    val randomPath = udf(() => java.util.UUID.randomUUID().toString)
+      .asNondeterministic()
+    val batch = Seq(("repo-u", "c", "quokka one"), ("repo-u", "c", "quokka two"))
+      .toDF("repo", "lang", "content")
+      .select(col("repo"), randomPath().as("path"), lit("c0ffee0000ff").as("commit"),
+        col("lang"), col("content"))
+    intercept[Exception](Maintenance.append(spark, dir, batch))
+    assert(ids() == (0L until n))
+    assert(Files.readAllBytes(manifestPath).sameElements(manifestBytes))
+
+    Maintenance.append(spark, dir, Seq(
+      ("repo-u", "src/u/a.c", "c0ffee000001", "c", "quokka one"),
+      ("repo-u", "src/u/b.c", "c0ffee000002", "c", "quokka two"))
+      .toDF("repo", "path", "commit", "lang", "content"))
+    assert(ids() == (0L until n + 2))
+  }
+
+  test("compacting a fully tombstoned index gives an empty, queryable index") {
+    val dir = freshIndex()
+    val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+    Maintenance.delete(dir, 0L until n)
+    val out = Files.createTempDirectory("graft-maint-empty").toString
+    Maintenance.compact(spark, dir, out)
+    val m = ManifestIO.read(s"$out/manifest.json")
+    assert(m.num_docs == 0 && m.vocab_size == 0 && m.partitions.isEmpty)
+    assert(m.avgdl == 0.0)
+    assert(!new String(Files.readAllBytes(
+      java.nio.file.Paths.get(out, "manifest.json"))).contains("NaN"))
+    assert(IndexSearcher.topK(spark, out, QuerySet.queries.take(5), 10)
+      .collect().isEmpty)
+    assert(graft.query.PhraseSearch.search(spark, out, Seq("hash", "join"))
+      .collect().isEmpty)
   }
 }

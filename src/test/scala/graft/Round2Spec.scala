@@ -129,6 +129,12 @@ class Round2Spec extends SparkSpec {
       Seq("cmp", "common")))
     assert(phrase("blocksIn") > 0 && phrase("groups") > 1, phrase)
     assert(phrase("blocksDecoded") == phrase("blocksIn"), phrase)
+    // the kernel runs once: each posting row of the phrase's terms is
+    // scanned exactly once (no sampling job re-running the scan)
+    assert(phrase("blocksIn") == graft.build.IndexSchemas
+      .readPostings(spark, multiGranuleDir)
+      .filter(org.apache.spark.sql.functions.col("term")
+        .isin("cmp", "common")).count(), phrase)
     // rareword's docs take the first ids: once they are scored, the top-1
     // threshold exceeds what `common` alone can reach
     val wand = metrics(IndexSearcher.topK(spark, multiGranuleDir,
