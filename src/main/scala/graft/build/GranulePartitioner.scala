@@ -67,8 +67,9 @@ object GranulePartitioner {
   /** Column carrying the engineered key of the granule's slot.
     * Unseen granules fall back to the granule-index round-robin slot
     * (only sampling-invisible, i.e. tiny, granules take this path; an
-    * EMPTY map — maintenance appends — degrades to pure round-robin,
-    * fine for mini-segments).
+    * EMPTY map — an append's docstore write, which has no sample to
+    * weigh granules by — degrades to pure round-robin, fine for
+    * mini-segments).
     *
     * Pure Catalyst expressions (literal-map lookup + literal-array
     * index), NOT a udf: this column sits on the build's hottest

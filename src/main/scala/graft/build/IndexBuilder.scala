@@ -349,59 +349,12 @@ object IndexBuilder {
         }
         .groupBy(identity).map { case (g, xs) => g -> xs.length.toLong }
         .toSeq
-      val slotCol = GranulePartitioner.slotKeyCol(
-        GranulePartitioner.slotMap(weights, parts), window, parts) _
-      val obs = Observation()
-      val metrics = docstoreMetrics(kc)
-      // fused content→features→argmin assignment, one codegen call per
-      // row with a reused feature buffer — no feat array column, no udf
-      // Seq boxing on the build's biggest stage (r3; ClusterAssignExpr).
-      // Late r3: doc_len rides the SAME scan (packed Long) — the
-      // docsFromCounted TokenCountExpr column is dropped and its
-      // second full tokenize pass pruned from this job entirely
-      // (token count == sum of feature buckets, property-tested)
-      val clustered = dense.df
-        .drop("doc_len")
-        .withColumn("_cl", graft.functions.ClusterAssignExpr
-          .clusterIdAndLen(col("content"), centroids, cfg.distance))
-        .withColumn("cluster_id", shiftright(col("_cl"), 32).cast("int"))
-        .withColumn("doc_len",
-          col("_cl").bitwiseAND(lit(0xffffffffL)).cast("int"))
-        .drop("_cl")
-        .observe(obs, metrics.head, metrics.tail: _*)
-      // granule-slot exchange ahead of the write: each task holds a few
-      // CONTIGUOUS (cluster, doc range) slices → ~2 files per cluster
-      // instead of tasks × clusters; measured faster end-to-end than
-      // writing from the dense-id partitioning despite the extra shuffle
-      // (BASELINE.md r3), and it makes every docstore file a disjoint,
-      // sorted doc range — the invariant the zero-shuffle postings step
-      // reads by. content_sha is recomputed on the POST-exchange side:
-      // the column is derivable from content, so shipping it through the
-      // shuffle would pay 64 B/row of exchange bytes (the non-scaling
-      // resource) to save a sha2 recompute (CPU, which scales) —
-      // backwards at 4 threads and at 4N executors alike
-      clustered.drop("content_sha")
-        .withColumn("_slot", slotCol(col("cluster_id"), col("doc_id")))
-        .repartition(parts, col("_slot"))
-        .drop("_slot")
-        .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-        .withColumn("content_sha", sha2(col("content"), 256))
-        .select("doc_id", "repo", "path", "commit", "lang",
-          "content", "cluster_id", "doc_len", "content_sha")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(s"$indexDir/docstore")
-      dense.unpersist()
-      val m = obs.get
-      // a negative id = the broadcast id lookup saw a key its keys-only
-      // pass did not (non-deterministic source) — fail the build, the
-      // docstore written above is not trustworthy
-      require(m("min_id").asInstanceOf[Long] >= 0,
-        s"dense-id lookup missed a key (min doc_id = ${m("min_id")}): " +
-          "the source is not deterministic across jobs")
+      val m = try writeDocstore(dense.df, indexDir, centroids, cfg.distance,
+          GranulePartitioner.slotMap(weights, parts), window, minId = 0L)
+        finally dense.unpersist()
       saveStats(indexDir,
         CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-      saveDocCounts(indexDir, observedDocCounts(m, kc))
+      saveDocCounts(indexDir, observedDocCounts(m, centroids.length))
       }
     }
 
@@ -486,7 +439,7 @@ object IndexBuilder {
           val marker = s"postings_batch_$bi"
           // each batch writes to its own staging dir (concurrent jobs
           // must not share a FileOutputCommitter _temporary), then the
-          // driver moves the cluster dirs into postings/ — idempotent
+          // driver installs its cluster dirs into postings/ — idempotent
           // restart wipes partial moves first
           val staging = s"$indexDir/postings_staging_$bi"
           clusters.foreach { cid =>
@@ -506,21 +459,11 @@ object IndexBuilder {
             case None =>
               val slice = docstore
                 .filter(col("cluster_id").isin(clusters: _*))
-              encodeBlocks(spark, slice, avgdl,
-                segOffset, stats.granule_window, exchange = false)
+              encodeBlocks(spark, slice, avgdl, segOffset,
+                stats.granule_window)
           }
-          blocks.write.mode("overwrite")
-            .partitionBy("cluster_id")
-            .parquet(staging)
-          Files.createDirectories(Paths.get(s"$indexDir/postings"))
-          new java.io.File(staging).listFiles()
-            .filter(_.getName.startsWith("cluster_id="))
-            .foreach { d =>
-              Files.move(d.toPath,
-                Paths.get(s"$indexDir/postings/${d.getName}"))
-            }
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(staging))
+          writeByCluster(blocks, staging)
+          installStaged(staging, s"$indexDir/postings")
           val segs = {
             import scala.jdk.CollectionConverters._
             acc.value.asScala.toSeq.sortBy(_.segment_id)
@@ -624,14 +567,12 @@ object IndexBuilder {
     // anywhere. Stored content_sha rides through unchanged (it is
     // already materialized — re-deriving it would cost n sha2 calls to
     // save nothing).
-    source
+    writeByCluster(source
       .observe(obs, metrics.head, metrics.tail: _*)
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
       .select("doc_id", "repo", "path", "commit", "lang",
-        "content", "cluster_id", "doc_len", "content_sha")
-      .write.mode("overwrite")
-      .partitionBy("cluster_id")
-      .parquet(s"$indexDir/docstore")
+        "content", "cluster_id", "doc_len", "content_sha"),
+      s"$indexDir/docstore")
     val m = obs.get
     val n = m("n").asInstanceOf[Long]
     require(n == knownRows,
@@ -642,6 +583,123 @@ object IndexBuilder {
     saveStats(indexDir,
       CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
     saveDocCounts(indexDir, observedDocCounts(m, kc))
+  }
+
+  /** The docstore write of the build and of an append into
+    * `$dir/docstore`; returns its [[docstoreMetrics]]. `slots` is the
+    * build's sample-weighted slot map, empty for an append (round-robin).
+    * Ids must be >= `minId` (0, or num_docs for an append): a key the
+    * dense-id keys pass did not see (non-deterministic source) looks up
+    * as −1 plus the id offset, which lands below it.
+    */
+  private[graft] def writeDocstore(
+      docs: DataFrame,
+      dir: String,
+      centroids: Array[Array[Double]],
+      dist: graft.cluster.Distance,
+      slots: Map[(Int, Long), Int],
+      window: Long,
+      minId: Long): Map[String, Any] = {
+    val obs = Observation()
+    writeByCluster(docstoreRows(docs, centroids, dist, slots, window, obs),
+      s"$dir/docstore")
+    val m = obs.get
+    // over zero rows the min is null
+    require(m("min_id") == null || m("min_id").asInstanceOf[Long] >= minId,
+      s"dense-id lookup missed a key (min doc_id = ${m("min_id")} < " +
+        s"$minId): the source is not deterministic across jobs")
+    m
+  }
+
+  /** The rows [[writeDocstore]] writes, in write order. */
+  private[graft] def docstoreRows(
+      docs: DataFrame,
+      centroids: Array[Array[Double]],
+      dist: graft.cluster.Distance,
+      slots: Map[(Int, Long), Int],
+      window: Long,
+      obs: Observation): DataFrame = {
+    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val slotCol = GranulePartitioner.slotKeyCol(slots, window, parts) _
+    val metrics = docstoreMetrics(centroids.length)
+    // fused content→features→argmin assignment, one codegen call per
+    // row with a reused feature buffer — no feat array column, no udf
+    // Seq boxing on the build's biggest stage (r3; ClusterAssignExpr).
+    // Late r3: doc_len rides the SAME scan (packed Long) — the
+    // docsFromCounted TokenCountExpr column is dropped and its
+    // second full tokenize pass pruned from this job entirely
+    // (token count == sum of feature buckets, property-tested)
+    val clustered = docs
+      .drop("doc_len")
+      .withColumn("_cl", graft.functions.ClusterAssignExpr
+        .clusterIdAndLen(col("content"), centroids, dist))
+      .withColumn("cluster_id", shiftright(col("_cl"), 32).cast("int"))
+      .withColumn("doc_len",
+        col("_cl").bitwiseAND(lit(0xffffffffL)).cast("int"))
+      .drop("_cl")
+      .observe(obs, metrics.head, metrics.tail: _*)
+    // granule-slot exchange ahead of the write: each task holds a few
+    // CONTIGUOUS (cluster, doc range) slices → ~2 files per cluster
+    // instead of tasks × clusters; measured faster end-to-end than
+    // writing from the dense-id partitioning despite the extra shuffle
+    // (BASELINE.md r3), and it makes every docstore file a disjoint,
+    // sorted doc range — the invariant the zero-shuffle postings step
+    // reads by. content_sha is recomputed on the POST-exchange side:
+    // the column is derivable from content, so shipping it through the
+    // shuffle would pay 64 B/row of exchange bytes (the non-scaling
+    // resource) to save a sha2 recompute (CPU, which scales) —
+    // backwards at 4 threads and at 4N executors alike
+    clustered.drop("content_sha")
+      .withColumn("_slot", slotCol(col("cluster_id"), col("doc_id")))
+      .repartition(parts, col("_slot"))
+      .drop("_slot")
+      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
+      .withColumn("content_sha", sha2(col("content"), 256))
+      .select("doc_id", "repo", "path", "commit", "lang",
+        "content", "cluster_id", "doc_len", "content_sha")
+  }
+
+  /** Writes `rows` to `dir` partitioned by cluster_id, replacing it. */
+  private[graft] def writeByCluster(rows: org.apache.spark.sql.Dataset[_],
+      dir: String): Unit =
+    rows.write.mode("overwrite").partitionBy("cluster_id").parquet(dir)
+
+  /** Moves the files of every `cluster_id=*` directory under `staging`
+    * into the same-named directory under `live` (created when missing),
+    * then deletes `staging`. Part-file names carry their write job's id,
+    * so files installed beside existing ones never collide.
+    */
+  private[graft] def installStaged(staging: String, live: String): Unit = {
+    Files.createDirectories(Paths.get(live))
+    val dir = new java.io.File(staging)
+    dir.listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("cluster_id="))
+      .foreach { d =>
+        val target = Files.createDirectories(Paths.get(live, d.getName))
+        d.listFiles().foreach(f =>
+          Files.move(f.toPath, target.resolve(f.getName)))
+      }
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  /** Replaces directory `live` with what `write` writes to the path it
+    * is given: live moves ASIDE, the new dir moves in, the aside copy is
+    * dropped, so a crash mid-swap leaves `<live>_old`, never no dir
+    * [ADVICE r1]. Such a dangling aside copy is restored before `write`
+    * runs, so `write` always reads the full live state.
+    */
+  private[graft] def swapDir[T](live: String)(write: String => T): T = {
+    val livePath = Paths.get(live)
+    val aside = Paths.get(s"${live}_old")
+    if (!Files.isDirectory(livePath) && Files.isDirectory(aside))
+      Files.move(aside, livePath)
+    val tmp = s"${live}_new"
+    val out = write(tmp)
+    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
+    if (Files.exists(livePath)) Files.move(livePath, aside)
+    Files.move(Paths.get(tmp), livePath)
+    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
+    out
   }
 
   /** What every docstore write observes (build, compaction, append):
@@ -667,14 +725,15 @@ object IndexBuilder {
     m
   }
 
-  /** The B6 heart: docs → posting rows (one char-scan tokenize pass) →
-    * (`exchange` only: ONE granule-hash shuffle on (cluster_id, doc_id
-    * div window)) → sorted runs per (cluster, granule, term) →
-    * delta+varint blocks with idf-free g-max headers. Granule windows
-    * replace round 1's range partitioner: same balance (window size
-    * bounds granule size), same disjoint-doc-range blocks (a block never
-    * crosses its granule), but NO partitioner sampling job — which
-    * re-ran the whole tokenize pass.
+  /** The B6 heart: stored docstore rows → posting rows (one char-scan
+    * tokenize pass) → sorted runs per (cluster, granule, term) →
+    * delta+varint blocks with idf-free g-max headers, with NO exchange:
+    * the docstore writer placed every granule in one file, sorted by
+    * (cluster_id, doc_id), so the input streams straight into a
+    * partition-local sort. Block correctness never depended on the
+    * placement, only on that local sort, since blocks group by
+    * (cluster, granule, term) within each partition; a block never
+    * crosses its granule.
     * Per-segment and per-cluster lineage/metrics flow back via
     * accumulators (the manifest step then needs no postings scan).
     * `segmentOffset` keeps appended segments' ids distinct from the base
@@ -685,8 +744,7 @@ object IndexBuilder {
       docs: DataFrame,
       avgdl: Double,
       segmentOffset: Int,
-      window: Long,
-      exchange: Boolean = true):
+      window: Long):
       (org.apache.spark.sql.Dataset[PostingBlock],
       CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) = {
     import spark.implicits._
@@ -695,31 +753,10 @@ object IndexBuilder {
       spark.sparkContext.collectionAccumulator[SegmentMeta]("segments")
     val cacc: CollectionAccumulator[ClusterStat] =
       spark.sparkContext.collectionAccumulator[ClusterStat]("cluster-stats")
-    val parts = spark.sessionState.conf.numShufflePartitions
     val w = window
-
-    // With exchange=true (Maintenance.append, whose new docs arrive in
-    // source order), DOC rows move to their round-robin granule slot and
-    // the tokenize/explode runs AFTER it, partition-locally: the shuffle
-    // carries the text once (~3-5× fewer bytes than shuffling exploded
-    // posting rows), and the (cluster, granule, term, doc) ordering is
-    // restored by a LOCAL external sort — no second exchange.
-    // With exchange=false (the build path, r3), even that shuffle is
-    // gone: the input (granule-aligned docstore files) streams straight
-    // into the local sort — block correctness never depended on the
-    // placement, only on the local sort, since blocks group by
-    // (cluster, granule, term) within each partition.
-    val selected = docs
+    val postingRows = docs
       .select(col("doc_id"), col("cluster_id"), col("content"),
         col("doc_len"))
-    val routed =
-      if (exchange) selected
-        .withColumn("_slot", GranulePartitioner
-          .slotKeyCol(Map.empty, w, parts)(col("cluster_id"), col("doc_id")))
-        .repartition(parts, col("_slot"))
-        .drop("_slot")
-      else selected
-    val postingRows = routed
       .as[(Long, Int, String, Int)]
       .mapPartitions { docRows =>
         // per-term position grouping with REUSED structures: the
@@ -906,38 +943,29 @@ object IndexBuilder {
     * Also used by maintenance to refresh idf after its postings change.
     * Returns the vocabulary size, observed on the write.
     */
-  def writeDictionary(spark: SparkSession, indexDir: String, n: Long): Long = {
-    val tmp = s"$indexDir/dictionary_tmp"
-    val obs = Observation()
-    // read-task sizing: the scan touches three tiny metadata columns of
-    // the postings files; the session's fine-grained maxPartitionBytes
-    // (tuned for content scans) fragments it into ~80 near-empty tasks
-    // whose scheduling overhead dominates the sub-second aggregation
-    val mpbKey = "spark.sql.files.maxPartitionBytes"
-    val mpbPrev = spark.conf.get(mpbKey)
-    val postingsBytes = org.apache.commons.io.FileUtils
-      .sizeOfDirectory(new java.io.File(s"$indexDir/postings"))
-    val parts = spark.sessionState.conf.numShufflePartitions
-    spark.conf.set(mpbKey,
-      math.max(4L << 20, postingsBytes / math.max(1, parts)).toString)
-    try IndexSchemas.readPostings(spark, indexDir)
-      .groupBy(col("term"))
-      .agg(sum(col("count")).as("df"), sum(col("tf_sum")).as("cf"))
-      .withColumn("idf", Bm25.idfCol(lit(n), col("df")))
-      .observe(obs, count(lit(1)).as("vocab"))
-      .write.mode("overwrite").parquet(tmp)
-    finally spark.conf.set(mpbKey, mpbPrev)
-    // swap: move the live dir ASIDE first, then the new one in, then
-    // drop the aside copy — a crash mid-swap leaves a recoverable
-    // dictionary_old instead of no dictionary at all [ADVICE r1]
-    val target = Paths.get(s"$indexDir/dictionary")
-    val aside = Paths.get(s"$indexDir/dictionary_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    if (Files.exists(target)) Files.move(target, aside)
-    Files.move(Paths.get(tmp), target)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    obs.get("vocab").asInstanceOf[Long]
-  }
+  def writeDictionary(spark: SparkSession, indexDir: String, n: Long): Long =
+    swapDir(s"$indexDir/dictionary") { tmp =>
+      val obs = Observation()
+      // read-task sizing: the scan touches three tiny metadata columns of
+      // the postings files; the session's fine-grained maxPartitionBytes
+      // (tuned for content scans) fragments it into ~80 near-empty tasks
+      // whose scheduling overhead dominates the sub-second aggregation
+      val mpbKey = "spark.sql.files.maxPartitionBytes"
+      val mpbPrev = spark.conf.get(mpbKey)
+      val postingsBytes = org.apache.commons.io.FileUtils
+        .sizeOfDirectory(new java.io.File(s"$indexDir/postings"))
+      val parts = spark.sessionState.conf.numShufflePartitions
+      spark.conf.set(mpbKey,
+        math.max(4L << 20, postingsBytes / math.max(1, parts)).toString)
+      try IndexSchemas.readPostings(spark, indexDir)
+        .groupBy(col("term"))
+        .agg(sum(col("count")).as("df"), sum(col("tf_sum")).as("cf"))
+        .withColumn("idf", Bm25.idfCol(lit(n), col("df")))
+        .observe(obs, count(lit(1)).as("vocab"))
+        .write.mode("overwrite").parquet(tmp)
+      finally spark.conf.set(mpbKey, mpbPrev)
+      obs.get("vocab").asInstanceOf[Long]
+    }
 
   /** Writes the build's manifest from the stats its steps observed and
     * accumulated — ZERO jobs: doc counts from the docstore write

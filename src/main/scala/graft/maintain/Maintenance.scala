@@ -4,11 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.{ClusterStat, IndexBuilder, IndexSchemas, ManifestIO}
-import graft.cluster.CoarseClusterer
 import graft.sources.Corpus
 
 /** Incremental index maintenance — the graft of the reference's point
@@ -51,65 +50,57 @@ object Maintenance {
     else mapper.readValue(Files.readAllBytes(p), classOf[Array[Long]]).toSet
   }
 
-  /** M5: tombstone docIDs (idempotent, merges with existing). */
+  /** M5: tombstone docIDs (idempotent, merges with existing). Every id
+    * must name a doc of the index, i.e. lie in [0, num_docs): a tombstone
+    * past the end would hide the doc the next append gives that id.
+    */
   def delete(indexDir: String, docIds: Seq[Long]): Unit = {
+    val n = ManifestIO.read(s"$indexDir/manifest.json").num_docs
+    val bad = docIds.filter(id => id < 0 || id >= n).distinct.sorted
+    require(bad.isEmpty,
+      s"delete: ids outside [0, $n): ${bad.mkString(", ")}")
     val merged = (loadTombstones(indexDir) ++ docIds).toArray.sorted
     Files.write(tombstonePath(indexDir), mapper.writeValueAsBytes(merged))
   }
 
   /** M1: append an F1-shaped batch of new source files as a mini-segment.
     * New docIDs = num_docs + rank within the batch by (repo,path,commit).
-    * The manifest is a copy of the one read, updated from what the
-    * append's own jobs observed: per-cluster doc counts on the docstore
-    * write, block stats and segments from the encode accumulators, vocab
-    * from the dictionary write.
+    * The batch runs the build's docstore writer into the staging area
+    * `_append`, the build's encoder over the rows it stored (so the
+    * postings index exactly the stored content), then both staged tables
+    * are installed. The manifest is a copy of the one read, updated from
+    * what the append's own jobs observed: per-cluster doc counts on the
+    * docstore write, block stats and segments from the encode
+    * accumulators, vocab from the dictionary write.
     */
   def append(spark: SparkSession, indexDir: String, newSource: DataFrame): Unit = {
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-    val avgdl = manifest.avgdl // held until compaction
     // appended segments REUSE the base build's granule window so every
     // block — old or new — stays inside one (cluster, window) granule
     // and query-side granule splits remain safe
     val window = graft.plans.BlockScan.window(manifest)
-
-    // no withFeatures wrap: without a pre-materialized `feat` column,
-    // withClusterId assigns through the fused codegen content→argmin
-    // expression — the r4 wrap materialized `feat` through the boxed-Seq
-    // udf and routed the append down the udf branch, leaving the codegen
-    // branch dead on the one production caller [VERDICT r4 #2]
     val dense = Corpus.docsFromCounted(newSource,
       idOffset = manifest.num_docs)
-    val docs = CoarseClusterer.withClusterId(dense.df, manifest.centroids,
-      graft.cluster.Distance.byName(manifest.distance))
-
-    val obs = Observation()
-    val metrics = IndexBuilder.docstoreMetrics(manifest.kc)
-    docs
-      // a key the dense-id keys pass did not see (non-deterministic
-      // source) looks up as −1, i.e. id num_docs − 1 after the offset:
-      // fail the write job, which then commits no file
-      .withColumn("doc_id", when(col("doc_id") < manifest.num_docs,
-        raise_error(lit("append: dense-id lookup missed a key: the " +
-          "source is not deterministic across jobs")))
-        .otherwise(col("doc_id")))
-      .observe(obs, metrics.head, metrics.tail: _*)
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("cluster_id"), expr(s"doc_id div $window"))
-      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-      .write.mode("append")
-      .partitionBy("cluster_id")
-      .parquet(s"$indexDir/docstore")
-    val docCounts = IndexBuilder.observedDocCounts(obs.get, manifest.kc)
+    // an empty batch leaves the index as it is
+    if (dense.numRows == 0) { dense.unpersist(); return }
+    val stage = s"$indexDir/_append"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
+    val m = try IndexBuilder.writeDocstore(dense.df, stage,
+        manifest.centroids, graft.cluster.Distance.byName(manifest.distance),
+        Map.empty, window, minId = manifest.num_docs)
+      finally dense.unpersist()
 
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
-    val (blocks, acc, cacc) =
-      IndexBuilder.encodeBlocks(spark, docs, avgdl, segOffset, window)
-    blocks.write.mode("append")
-      .partitionBy("cluster_id")
-      .parquet(s"$indexDir/postings")
+    val (blocks, acc, cacc) = IndexBuilder.encodeBlocks(spark,
+      IndexSchemas.readDocstore(spark, stage),
+      manifest.avgdl, // held until compaction
+      segOffset, window)
+    IndexBuilder.writeByCluster(blocks, s"$stage/postings")
+    IndexBuilder.installStaged(s"$stage/docstore", s"$indexDir/docstore")
+    IndexBuilder.installStaged(s"$stage/postings", s"$indexDir/postings")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
 
     val nNew = manifest.num_docs + dense.numRows
-    dense.unpersist()
     val vocab = IndexBuilder.writeDictionary(spark, indexDir, nNew)
     val old = manifest.partitions
     ManifestIO.write(s"$indexDir/manifest.json", manifest.copy(
@@ -117,7 +108,8 @@ object Maintenance {
       vocab_size = vocab,
       lineage = manifest.lineage.copy(num_source_rows = nNew),
       partitions = IndexBuilder.partitionMetas(
-        (old.map(p => p.cluster_id -> p.num_docs) ++ docCounts)
+        (old.map(p => p.cluster_id -> p.num_docs) ++
+          IndexBuilder.observedDocCounts(m, manifest.kc))
           .groupMapReduce(_._1)(_._2)(_ + _),
         IndexBuilder.sumClusterStats(old.map(p => ClusterStat(p.cluster_id,
           p.num_postings, p.num_blocks, p.bytes, p.build_millis)) ++
@@ -148,22 +140,15 @@ object Maintenance {
       if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)).avgdl
 
     // hash placement on cluster_id: a segment id is the partition id
-    val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
-      IndexSchemas.readPostings(spark, indexDir).repartition(col("cluster_id")),
-      spark.sparkContext.broadcast(Array.emptyLongArray), avgdl,
-      segmentOffset = 0, graft.plans.BlockScan.window(manifest))
-
-    // write to a sibling dir, then swap: live dir moves ASIDE first so a
-    // crash mid-swap leaves a recoverable postings_old, never a missing
-    // postings dir [ADVICE r1]
-    val tmp = s"$indexDir/postings_merged"
-    merged.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-    val old = Paths.get(s"$indexDir/postings")
-    val aside = Paths.get(s"$indexDir/postings_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    if (Files.exists(old)) Files.move(old, aside)
-    Files.move(Paths.get(tmp), old)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
+    val (acc, cacc) = IndexBuilder.swapDir(s"$indexDir/postings") { tmp =>
+      val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
+        IndexSchemas.readPostings(spark, indexDir)
+          .repartition(col("cluster_id")),
+        spark.sparkContext.broadcast(Array.emptyLongArray), avgdl,
+        segmentOffset = 0, graft.plans.BlockScan.window(manifest))
+      IndexBuilder.writeByCluster(merged, tmp)
+      (acc, cacc)
+    }
 
     // docs and their clusters are unchanged; blocks and segments are new
     val vocab = IndexBuilder.writeDictionary(spark, indexDir, n)

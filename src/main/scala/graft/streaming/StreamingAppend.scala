@@ -96,25 +96,10 @@ object StreamingAppend {
     System.err.println(s"[stream] rolling back partial batch " +
       s"${intent.batchId}: docs>=${intent.numDocsBefore}, " +
       s"segments>${intent.maxSegBefore}")
-    def rewrite(sub: String, keep: => DataFrame): Unit = {
-      val live = java.nio.file.Paths.get(s"$indexDir/$sub")
-      val aside = java.nio.file.Paths.get(s"$indexDir/${sub}_old")
-      // A previous rollback may have died between moving the live dir
-      // aside and installing the rewrite; the live dir is then absent
-      // but the aside copy holds the full pre-rollback state. Restore
-      // it so the (idempotent range-filter) rewrite runs again.
-      if (!java.nio.file.Files.isDirectory(live) &&
-          java.nio.file.Files.isDirectory(aside))
-        java.nio.file.Files.move(aside, live)
-      if (java.nio.file.Files.isDirectory(live)) {
-        val tmp = s"$indexDir/${sub}_rollback"
-        keep.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-        org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-        java.nio.file.Files.move(live, aside)
-        java.nio.file.Files.move(java.nio.file.Paths.get(tmp), live)
-        org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-      }
-    }
+    // a previous rollback that died mid-swap is restored first by the
+    // swap itself, so the (idempotent range-filter) rewrite runs again
+    def rewrite(sub: String, keep: => DataFrame): Unit =
+      IndexBuilder.swapDir(s"$indexDir/$sub")(IndexBuilder.writeByCluster(keep, _))
     rewrite("docstore", IndexSchemas.readDocstore(spark, indexDir)
       .filter(col("doc_id") < intent.numDocsBefore))
     rewrite("postings", IndexSchemas.readPostings(spark, indexDir)

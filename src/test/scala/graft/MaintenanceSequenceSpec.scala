@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.build.IndexBuilder
+import graft.build.{IndexBuilder, IndexSchemas}
 import graft.maintain.Maintenance
 import graft.query.{IndexSearcher, QuerySet}
 
@@ -29,16 +29,43 @@ class MaintenanceSequenceSpec extends SparkSpec {
       .toDF("repo", "path", "commit", "lang", "content")
   }
 
+  /** One maintenance op; `Delete` picks its victims from the live
+    * model ids when it runs.
+    */
+  private sealed trait Op
+  private case class Append(docs: Seq[Doc]) extends Op
+  private case object PopLast extends Op
+  private case object PopFirst extends Op
+  private case class Delete(pick: Vector[Int] => Seq[Int]) extends Op
+  private case object Compact extends Op
+
   test("random op sequences == list model (3 seeds x 6 ops)") {
     // 11: delete,compact,popFirst,popLast,compact,popFirst
     // 47: delete,popFirst,popFirst,delete,popLast,append
     // 3:  compact,append,popFirst,popFirst,compact,popLast (append
     //     lands early — later pops/compacts run over a mixed
     //     base+appended corpus)
-    Seq(11, 47, 3).foreach(runSequence)
+    Seq(11, 47, 3).foreach(runSequence(_))
   }
 
-  private def runSequence(seed: Int): Unit = {
+  test("scripted edge inputs == list model: empty batch, duplicate, null " +
+      "key, supplementary plane, delete-all, compact, append") {
+    def doc(path: String, commit: String, content: String) =
+      Doc("repo-edge", path, commit, "x", content)
+    val dup = doc("src/edge/b.x", "c-edge-01", "index search engine")
+    runSequence(0, Some(Seq(
+      Append(Nil),
+      Append(Seq(dup, dup, doc(null, "c-edge-02", "posting query"),
+        doc("src/edge/c.x", "c-edge-03", "𝔘𝔫𝔦 😀 index"))),
+      Delete(live => live),
+      Compact,
+      Append(Seq(doc("src/edge/d.x", "c-edge-04", "merge score block"))))))
+  }
+
+  /** Runs `script` (default: 6 ops drawn from `seed`) on a fresh base
+    * index against the list model.
+    */
+  private def runSequence(seed: Int, script: Option[Seq[Op]] = None): Unit = {
     val rnd = new scala.util.Random(seed)
     val dirs = scala.collection.mutable.Buffer.empty[String]
     def tmp(tag: String): String = {
@@ -78,7 +105,8 @@ class MaintenanceSequenceSpec extends SparkSpec {
 
       def checkLiveContents(): Unit = {
         val ts = Maintenance.loadTombstones(dir)
-        val got = spark.read.parquet(s"$dir/docstore")
+        // by schema: a fully tombstoned index compacts to no files
+        val got = IndexSchemas.readDocstore(spark, dir)
           .select("doc_id", "content").collect()
           .filter(r => !ts(r.getLong(0)))
           .sortBy(_.getLong(0)).map(_.getString(1)).toSeq
@@ -86,16 +114,27 @@ class MaintenanceSequenceSpec extends SparkSpec {
           s"seed=$seed: live docstore diverged from model")
       }
 
-      (1 to 6).foreach { opNo =>
-        val op = rnd.nextInt(5)
+      // drawn one at a time: an op's own draws follow its kind's
+      def randomOp(): Op = rnd.nextInt(5) match {
+        case 0 => Append(newBatch(1 + rnd.nextInt(3)))
+        case 1 => PopLast
+        case 2 => PopFirst
+        case 3 => Delete(live => rnd.shuffle(live).take(1 + rnd.nextInt(3)))
+        case 4 => Compact
+      }
+      val ops = script.map(_.iterator).getOrElse(Iterator.fill(6)(randomOp()))
+      ops.zipWithIndex.foreach { case (op, i) =>
+        val opNo = i + 1
         System.err.println(s"[seq] seed=$seed op#$opNo -> " +
-          Seq("append", "popLast", "popFirst", "delete", "compact")(op))
+          op.getClass.getSimpleName.stripSuffix("$"))
         op match {
-          case 0 =>
-            val b = newBatch(1 + rnd.nextInt(3))
+          case Append(b) =>
             Maintenance.append(spark, dir, batchDf(b))
-            model = model ++ b
-          case 1 =>
+            // ids follow (repo, path, commit) order within the batch,
+            // a null key first
+            model = model ++ b.sortBy(d =>
+              (Option(d.repo), Option(d.path), Option(d.commit)))
+          case PopLast =>
             val r = Maintenance.popLast(spark, dir)
             if (liveIdx.nonEmpty) {
               val i = liveIdx.max
@@ -103,7 +142,7 @@ class MaintenanceSequenceSpec extends SparkSpec {
                 s"seed=$seed op=$opNo: popLast returned the wrong doc")
               dead += i
             } else assert(r.isEmpty)
-          case 2 =>
+          case PopFirst =>
             val r = Maintenance.popFirst(spark, dir)
             if (liveIdx.nonEmpty) {
               val i = liveIdx.min
@@ -111,13 +150,13 @@ class MaintenanceSequenceSpec extends SparkSpec {
                 s"seed=$seed op=$opNo: popFirst returned the wrong doc")
               dead += i
             } else assert(r.isEmpty)
-          case 3 =>
-            val victims = rnd.shuffle(liveIdx).take(1 + rnd.nextInt(3))
+          case Delete(pick) =>
+            val victims = pick(liveIdx)
             if (victims.nonEmpty) {
               Maintenance.delete(dir, victims.map(_.toLong))
               dead ++= victims
             }
-          case 4 =>
+          case Compact =>
             val out = tmp(s"compact-$seed-$opNo")
             Maintenance.compact(spark, dir, out)
             dir = out

@@ -259,6 +259,54 @@ class MaintenanceSpec extends SparkSpec {
     assert(ids() == (0L until n + 2))
   }
 
+  test("append indexes the rows it stored when the source content changes between jobs") {
+    import spark.implicits._
+    val dir = freshIndex()
+    val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+    // fixed keys; every evaluation of content draws a new rare token
+    val randomContent = udf(() => "zz" +
+      java.util.UUID.randomUUID().toString.replace("-", "") + " quokka join")
+      .asNondeterministic()
+    Maintenance.append(spark, dir,
+      Seq(("repo-v", "src/v/a.c", "c0ffee0000a1"), ("repo-v", "src/v/b.c", "c0ffee0000a2"))
+        .toDF("repo", "path", "commit")
+        .select(col("repo"), col("path"), col("commit"), lit("c").as("lang"),
+          randomContent().as("content")))
+    val stored = Maintenance.fetchDocs(spark, dir, Seq(n, n + 1))
+      .map(_.getAs[String]("content").split(" ").head)
+    assert(stored.length == 2)
+    val queries = stored.toSeq.zipWithIndex.map { case (t, i) => (90 + i) -> Seq(t) }
+    val hits = IndexSearcher.topK(spark, dir, queries, 10).collect()
+      .map(r => r.getInt(0) -> r.getLong(2)).toSeq
+    assert(hits == Seq(90 -> n, 91 -> (n + 1)))
+    // WAND == declarative scoring over the live docstore, once merge has
+    // refreshed the avgdl that append holds
+    Maintenance.mergeSegments(spark, dir)
+    val qs = queries.map { case (i, t) => i -> (t :+ "join") } ++
+      QuerySet.queries.take(3)
+    val wand = IndexSearcher.topK(spark, dir, qs, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val sql = graft.query.Bm25SqlPath.topK(spark,
+      graft.build.IndexSchemas.readDocstore(spark, dir), qs, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(wand.toSeq == sql.toSeq)
+  }
+
+  test("delete rejects ids outside [0, num_docs), so no tombstone hides a later append") {
+    import spark.implicits._
+    val dir = freshIndex()
+    val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+    val e = intercept[IllegalArgumentException](Maintenance.delete(dir, Seq(3L, n)))
+    assert(e.getMessage.contains(s"[0, $n): $n"), e.getMessage)
+    intercept[IllegalArgumentException](Maintenance.delete(dir, Seq(-1L)))
+    assert(Maintenance.loadTombstones(dir).isEmpty)
+    Maintenance.append(spark, dir,
+      Seq(("repo-t", "src/t/a.c", "c0ffee0000b1", "c", "wombatburrow fresh"))
+        .toDF("repo", "path", "commit", "lang", "content"))
+    assert(IndexSearcher.topK(spark, dir, Seq(1 -> Seq("wombatburrow")), 10)
+      .collect().map(_.getLong(2)).toSeq == Seq(n))
+  }
+
   test("compacting a fully tombstoned index gives an empty, queryable index") {
     val dir = freshIndex()
     val n = ManifestIO.read(s"$dir/manifest.json").num_docs

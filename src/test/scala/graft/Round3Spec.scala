@@ -289,8 +289,7 @@ class Round3Spec extends SparkSpec {
     // local sort → encode, no Exchange anywhere in the plan
     val docstore = spark.read.parquet(s"$dir/docstore")
     val (blocks, _, _) = IndexBuilder.encodeBlocks(
-      spark, docstore, avgdl = 10.0, segmentOffset = 0, window = 8192,
-      exchange = false)
+      spark, docstore, avgdl = 10.0, segmentOffset = 0, window = 8192)
     val postingsPlan = blocks.queryExecution.executedPlan.toString
     assert(!postingsPlan.contains("Exchange"), postingsPlan)
 

@@ -21,7 +21,7 @@ class Round5Spec extends SparkSpec {
   test("append-path frame assigns via codegen ClusterAssign, no udf in plan") {
     import spark.implicits._
     // mirrors Maintenance.append's construction exactly: docsFromCounted
-    // (no feat column) → withClusterId
+    // → the docstore writer's frame shared with the build
     // repartition: a bare LocalRelation source would let
     // ConvertToLocalRelation constant-fold the whole projection chain
     // into a LocalTableScan and there'd be no plan to assert on
@@ -33,7 +33,9 @@ class Round5Spec extends SparkSpec {
     val dense = graft.sources.Corpus.docsFromCounted(src, idOffset = 100)
     val centroids = Array(Array.fill(CoarseClusterer.Dim)(0.0),
       Array.fill(CoarseClusterer.Dim)(2.0))
-    val docs = CoarseClusterer.withClusterId(dense.df, centroids)
+    val docs = IndexBuilder.docstoreRows(dense.df, centroids,
+      graft.cluster.Distance.SqEuclidean, Map.empty, window = 8192,
+      org.apache.spark.sql.Observation())
     assert(docs.count() == 20)
     val plan = docs.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("clusterassign"), plan.take(1200))
