@@ -166,8 +166,8 @@ object SparkEntry {
       // delete head/middle/tail ranges, then compact. The explicit dead
       // set keeps the shared cached index read-only (the r2 harness
       // copied the WHOLE index dir per run, inflating the measured wall
-      // well above the operator's cost [VERDICT r2]); the tombstones.json
-      // file flow is covered by MaintenanceSpec.
+      // well above the operator's cost [VERDICT r2]); the manifest's
+      // tombstone flow is covered by MaintenanceSpec.
       val dead = (0L until 10L) ++ (100L until 120L) ++ ((n - 5) until n)
       try graft.maintain.Maintenance.compact(s, idx, work,
         deadOverride = Some(dead.toSet))

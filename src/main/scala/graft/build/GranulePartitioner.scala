@@ -65,11 +65,13 @@ object GranulePartitioner {
   }
 
   /** Column carrying the engineered key of the granule's slot.
-    * Unseen granules fall back to the granule-index round-robin slot
-    * (only sampling-invisible, i.e. tiny, granules take this path; an
-    * EMPTY map — an append's docstore write, which has no sample to
-    * weigh granules by — degrades to pure round-robin, fine for
-    * mini-segments).
+    * Unseen granules fall back to the round-robin slot
+    * `(cluster_id + window) mod parts` (only sampling-invisible, i.e.
+    * tiny, granules take this path; an EMPTY map — an append's docstore
+    * write, which has no sample to weigh granules by — degrades to pure
+    * round-robin, fine for mini-segments). The clusters of one window
+    * take distinct slots whenever kc <= parts, so an append writes its
+    * batch from one task per cluster.
     *
     * Pure Catalyst expressions (literal-map lookup + literal-array
     * index), NOT a udf: this column sits on the build's hottest
@@ -88,11 +90,8 @@ object GranulePartitioner {
       org.apache.spark.sql.catalyst.expressions.IntegralDivide(
         GraftColumnBridge.expression(docIdCol.cast("long")),
         GraftColumnBridge.expression(lit(window))))
-    // round-robin fallback — same arithmetic as the old udf (all values
-    // non-negative, so % == pmod)
     val fallback =
-      pmod(clusterCol.cast("long") * 1024L + winCol, lit(parts.toLong))
-        .cast("int")
+      pmod(clusterCol.cast("long") + winCol, lit(parts.toLong)).cast("int")
     // (cluster, window) packed into one long map key: window index is
     // < 2^32 for any corpus below 2^45 docs at the 8192 window floor
     val slotCol =

@@ -31,7 +31,8 @@ import graft.tokenize.Tokenizer
   *   docstore/    parquet, partitionBy(cluster_id) — lossless row store
   *   dictionary/  parquet (term, df, cf, idf)
   *   postings/    parquet, partitionBy(cluster_id) of PostingBlock rows
-  *   manifest.json
+  *   manifest.json — the snapshot: stats, the live files of the three
+  *                tables, tombstones, last stream batch; the commit point
   *   _checkpoints/<step>.done — resumable build markers
   *
   * SCALE NOTES (100 TB):
@@ -49,11 +50,6 @@ import graft.tokenize.Tokenizer
   *    pruned incremental rebuild).
   */
 object IndexBuilder {
-
-  /** On-disk layout version, part of the resume fingerprint: bumping it
-    * invalidates checkpoints of older layouts (r2: granule windows).
-    */
-  val FormatVersion = 2
 
   /** Granule window: each (cluster_id, doc_id div W) granule holds at
     * most W dense doc ids. Because W bounds granule size regardless of
@@ -182,7 +178,7 @@ object IndexBuilder {
     // config, and on-disk format; on mismatch all checkpoint state and
     // the append-mode postings dir are wiped before any step runs.
     val fingerprint =
-      s"v=$FormatVersion input=$sfDir kc=${cfg.kc} amplify=${cfg.amplify} " +
+      s"v=${ManifestIO.FormatVersion} input=$sfDir kc=${cfg.kc} amplify=${cfg.amplify} " +
         s"batches=${cfg.postingsBatches} idOrder=${idOrder.mkString(",")} " +
         s"dist=${cfg.distance.getClass.getSimpleName}" +
         fixedCentroids.map(c => s" fixed=${java.util.Arrays.deepHashCode(
@@ -240,6 +236,8 @@ object IndexBuilder {
     // write's range-partitioner sampling; the granule-hash exchange
     // needs no sampling at all.
     step("docstore") {
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"$indexDir/docstore"))
       preAssigned match {
         case Some(_) =>
           docstorePreAssigned(spark, source, indexDir,
@@ -349,8 +347,9 @@ object IndexBuilder {
         }
         .groupBy(identity).map { case (g, xs) => g -> xs.length.toLong }
         .toSeq
-      val m = try writeDocstore(dense.df, indexDir, centroids, cfg.distance,
-          GranulePartitioner.slotMap(weights, parts), window, minId = 0L)
+      val (m, _) = try writeDocstore(dense.df, indexDir, centroids,
+          cfg.distance, GranulePartitioner.slotMap(weights, parts), window,
+          minId = 0L)
         finally dense.unpersist()
       saveStats(indexDir,
         CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
@@ -358,7 +357,8 @@ object IndexBuilder {
       }
     }
 
-    def docstore = IndexSchemas.readDocstore(spark, indexDir)
+    def docstore = IndexSchemas.read(spark, s"$indexDir/docstore",
+      IndexSchemas.docstore, None)
 
     // ---- step 2: postings (blocks, no shuffle) --------------------------
     // BM25 factorizes as idf × g(tf, dl): blocks store the idf-free
@@ -462,7 +462,7 @@ object IndexBuilder {
               encodeBlocks(spark, slice, avgdl, segOffset,
                 stats.granule_window)
           }
-          writeByCluster(blocks, staging)
+          writeParts(blocks, staging)
           installStaged(staging, s"$indexDir/postings")
           val segs = {
             import scala.jdk.CollectionConverters._
@@ -502,8 +502,10 @@ object IndexBuilder {
         }
       }
     step("dictionary") {
-      saveVocab(indexDir,
-        writeDictionary(spark, indexDir, loadStats(indexDir).num_docs))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"$indexDir/dictionary"))
+      saveVocab(indexDir, writeDictionary(spark, indexDir, None,
+        loadStats(indexDir).num_docs)._1)
     }
 
     // ---- step 4: manifest (ZERO jobs: assembled from the stats the
@@ -517,6 +519,11 @@ object IndexBuilder {
           graphF.get, scala.concurrent.duration.Duration.Inf))
     }
 
+    // a resumed build that re-ran a step under the manifest it kept
+    // re-lists the files the step wrote
+    if (run.nonEmpty && !run.contains("manifest"))
+      ManifestIO.write(s"$indexDir/manifest.json", ManifestIO.read(
+        s"$indexDir/manifest.json").copy(files = tableFiles(indexDir)))
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
     val totalMillis = (System.nanoTime() - t0) / 1000000L
     BuildResult(manifest, totalMillis,
@@ -567,7 +574,7 @@ object IndexBuilder {
     // anywhere. Stored content_sha rides through unchanged (it is
     // already materialized — re-deriving it would cost n sha2 calls to
     // save nothing).
-    writeByCluster(source
+    writeParts(source
       .observe(obs, metrics.head, metrics.tail: _*)
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
       .select("doc_id", "repo", "path", "commit", "lang",
@@ -586,7 +593,8 @@ object IndexBuilder {
   }
 
   /** The docstore write of the build and of an append into
-    * `$dir/docstore`; returns its [[docstoreMetrics]]. `slots` is the
+    * `$dir/docstore`; returns its [[docstoreMetrics]] and the part files
+    * it added. `slots` is the
     * build's sample-weighted slot map, empty for an append (round-robin).
     * Ids must be >= `minId` (0, or num_docs for an append): a key the
     * dense-id keys pass did not see (non-deterministic source) looks up
@@ -599,16 +607,16 @@ object IndexBuilder {
       dist: graft.cluster.Distance,
       slots: Map[(Int, Long), Int],
       window: Long,
-      minId: Long): Map[String, Any] = {
+      minId: Long): (Map[String, Any], Seq[String]) = {
     val obs = Observation()
-    writeByCluster(docstoreRows(docs, centroids, dist, slots, window, obs),
-      s"$dir/docstore")
+    val files = writeParts(
+      docstoreRows(docs, centroids, dist, slots, window, obs), s"$dir/docstore")
     val m = obs.get
     // over zero rows the min is null
     require(m("min_id") == null || m("min_id").asInstanceOf[Long] >= minId,
       s"dense-id lookup missed a key (min doc_id = ${m("min_id")} < " +
         s"$minId): the source is not deterministic across jobs")
-    m
+    (m, files)
   }
 
   /** The rows [[writeDocstore]] writes, in write order. */
@@ -659,10 +667,17 @@ object IndexBuilder {
         "content", "cluster_id", "doc_len", "content_sha")
   }
 
-  /** Writes `rows` to `dir` partitioned by cluster_id, replacing it. */
-  private[graft] def writeByCluster(rows: org.apache.spark.sql.Dataset[_],
-      dir: String): Unit =
-    rows.write.mode("overwrite").partitionBy("cluster_id").parquet(dir)
+  /** Writes `rows` into `dir` beside what it holds (part names carry the
+    * write job's id), partitioned by cluster_id unless `flat`; returns
+    * the part files it added, relative to `dir`.
+    */
+  private[graft] def writeParts(rows: org.apache.spark.sql.Dataset[_],
+      dir: String, flat: Boolean = false): Seq[String] = {
+    val before = IndexSchemas.partFiles(dir).toSet
+    val w = rows.write.mode("append")
+    (if (flat) w else w.partitionBy("cluster_id")).parquet(dir)
+    IndexSchemas.partFiles(dir).filterNot(before)
+  }
 
   /** Moves the files of every `cluster_id=*` directory under `staging`
     * into the same-named directory under `live` (created when missing),
@@ -680,26 +695,6 @@ object IndexBuilder {
           Files.move(f.toPath, target.resolve(f.getName)))
       }
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
-  }
-
-  /** Replaces directory `live` with what `write` writes to the path it
-    * is given: live moves ASIDE, the new dir moves in, the aside copy is
-    * dropped, so a crash mid-swap leaves `<live>_old`, never no dir
-    * [ADVICE r1]. Such a dangling aside copy is restored before `write`
-    * runs, so `write` always reads the full live state.
-    */
-  private[graft] def swapDir[T](live: String)(write: String => T): T = {
-    val livePath = Paths.get(live)
-    val aside = Paths.get(s"${live}_old")
-    if (!Files.isDirectory(livePath) && Files.isDirectory(aside))
-      Files.move(aside, livePath)
-    val tmp = s"${live}_new"
-    val out = write(tmp)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    if (Files.exists(livePath)) Files.move(livePath, aside)
-    Files.move(Paths.get(tmp), livePath)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    out
   }
 
   /** What every docstore write observes (build, compaction, append):
@@ -940,39 +935,42 @@ object IndexBuilder {
     * no content pass. Map-side partial aggregation already spreads
     * stop-word-heavy terms (each reducer key receives pre-combined
     * partials per task — the effect salting gives non-combinable aggs).
-    * Also used by maintenance to refresh idf after its postings change.
-    * Returns the vocabulary size, observed on the write.
+    * Also used by maintenance to refresh idf over the `postings` files
+    * its new snapshot lists (None: the whole dir, a build's). Returns the
+    * vocabulary size, observed on the write, and the files written.
     */
-  def writeDictionary(spark: SparkSession, indexDir: String, n: Long): Long =
-    swapDir(s"$indexDir/dictionary") { tmp =>
-      val obs = Observation()
-      // read-task sizing: the scan touches three tiny metadata columns of
-      // the postings files; the session's fine-grained maxPartitionBytes
-      // (tuned for content scans) fragments it into ~80 near-empty tasks
-      // whose scheduling overhead dominates the sub-second aggregation
-      val mpbKey = "spark.sql.files.maxPartitionBytes"
-      val mpbPrev = spark.conf.get(mpbKey)
-      val postingsBytes = org.apache.commons.io.FileUtils
-        .sizeOfDirectory(new java.io.File(s"$indexDir/postings"))
-      val parts = spark.sessionState.conf.numShufflePartitions
-      spark.conf.set(mpbKey,
-        math.max(4L << 20, postingsBytes / math.max(1, parts)).toString)
-      try IndexSchemas.readPostings(spark, indexDir)
+  def writeDictionary(spark: SparkSession, indexDir: String,
+      postings: Option[Seq[String]], n: Long): (Long, Seq[String]) = {
+    val obs = Observation()
+    // read-task sizing: the scan touches three tiny metadata columns of
+    // the postings files; the session's fine-grained maxPartitionBytes
+    // (tuned for content scans) fragments it into ~80 near-empty tasks
+    // whose scheduling overhead dominates the sub-second aggregation
+    val mpbKey = "spark.sql.files.maxPartitionBytes"
+    val mpbPrev = spark.conf.get(mpbKey)
+    val dir = s"$indexDir/postings"
+    val postingsBytes = postings.getOrElse(IndexSchemas.partFiles(dir))
+      .map(f => Files.size(Paths.get(dir, f))).sum
+    val parts = spark.sessionState.conf.numShufflePartitions
+    spark.conf.set(mpbKey,
+      math.max(4L << 20, postingsBytes / math.max(1, parts)).toString)
+    val files =
+      try writeParts(IndexSchemas.read(spark, dir, IndexSchemas.postings, postings)
         .groupBy(col("term"))
         .agg(sum(col("count")).as("df"), sum(col("tf_sum")).as("cf"))
         .withColumn("idf", Bm25.idfCol(lit(n), col("df")))
-        .observe(obs, count(lit(1)).as("vocab"))
-        .write.mode("overwrite").parquet(tmp)
+        .observe(obs, count(lit(1)).as("vocab")),
+        s"$indexDir/dictionary", flat = true)
       finally spark.conf.set(mpbKey, mpbPrev)
-      obs.get("vocab").asInstanceOf[Long]
-    }
+    (obs.get("vocab").asInstanceOf[Long], files)
+  }
 
   /** Writes the build's manifest from the stats its steps observed and
     * accumulated — ZERO jobs: doc counts from the docstore write
     * observation, block stats from the encode accumulators, vocab from
     * the dictionary write observation, the coarse graph built while the
-    * dictionary job ran. Maintenance edits a copy of the manifest it
-    * read instead.
+    * dictionary job ran, the live files from a walk of the table dirs.
+    * Maintenance edits a copy of the manifest it read instead.
     */
   private def writeManifest(indexDir: String, lineageName: String,
       distanceName: String,
@@ -985,7 +983,7 @@ object IndexBuilder {
     val stats = loadStats(indexDir)
     val centroids = loadCentroids(indexDir)
     val manifest = IndexManifest(
-      version = FormatVersion,
+      version = ManifestIO.FormatVersion,
       num_docs = stats.num_docs,
       avgdl = stats.avgdl,
       vocab_size = loadVocab(indexDir),
@@ -1003,9 +1001,16 @@ object IndexBuilder {
       lineage = InputLineage(lineageName, stats.num_docs),
       partitions = partitionMetas(loadDocCounts(indexDir),
         loadAllClusterStats(indexDir)),
-      segments = loadSegments(indexDir))
+      segments = loadSegments(indexDir),
+      files = tableFiles(indexDir))
     ManifestIO.write(s"$indexDir/manifest.json", manifest)
   }
+
+  /** What a build wrote: every part file of its three table dirs. */
+  private def tableFiles(indexDir: String): IndexFiles = IndexFiles(
+    IndexSchemas.partFiles(s"$indexDir/docstore"),
+    IndexSchemas.partFiles(s"$indexDir/postings"),
+    IndexSchemas.partFiles(s"$indexDir/dictionary"))
 
   /** Manifest partitions: one per cluster holding docs, its block stats
     * from `clusterStats` (none = an empty posting partition).

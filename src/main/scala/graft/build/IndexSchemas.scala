@@ -1,17 +1,24 @@
 package graft.build
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
-/** Explicit schemas for the index's on-disk tables (r7): every
-  * `spark.read.parquet` without a schema pays a footer-inference pass
-  * (a driver job + footer I/O) per call — and the hot query paths
-  * (WAND, phrase, compact, dictionary refresh) re-open these tables on
-  * every invocation. The schemas are fixed by the writers (model case
-  * classes + the docstore column list), so inference re-derives a
-  * constant. Build and append write the docstore through one writer,
-  * so their files share one column order; resolution is by name, which
-  * still reads the differently ordered append files of older indexes.
+/** The index's on-disk tables. Schemas are explicit (r7): every
+  * `spark.read.parquet` without a schema pays a footer-inference pass (a
+  * driver job + footer I/O) per call, on hot query paths that re-open
+  * these tables on every invocation.
+  *
+  * A reader reads exactly the part files its manifest lists, as a filter
+  * on `_metadata.file_path` over the table dir: Spark prunes the unlisted
+  * files before the scan, and the `cluster_id` partition pruning and the
+  * pushdowns stay as they are. A mutation writes new part files only,
+  * [[commit]]s a manifest listing the live ones, then sweeps the rest,
+  * so between mutations a table dir holds exactly the listed files.
   */
 object IndexSchemas {
 
@@ -26,12 +33,79 @@ object IndexSchemas {
 
   val dictionary: StructType = Encoders.product[graft.model.DictEntry].schema
 
-  def readDocstore(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema(docstore).parquet(s"$indexDir/docstore")
+  // each reader reads the files of manifest `m`, or of the index's
+  // manifest when none is given: a query passes the one it planned with
+  def readDocstore(spark: SparkSession, indexDir: String,
+      m: IndexManifest = null): DataFrame =
+    read(spark, s"$indexDir/docstore", docstore, Some(files(indexDir, m).docstore))
 
-  def readPostings(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema(postings).parquet(s"$indexDir/postings")
+  def readPostings(spark: SparkSession, indexDir: String,
+      m: IndexManifest = null): DataFrame =
+    read(spark, s"$indexDir/postings", postings, Some(files(indexDir, m).postings))
 
-  def readDictionary(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema(dictionary).parquet(s"$indexDir/dictionary")
+  def readDictionary(spark: SparkSession, indexDir: String,
+      m: IndexManifest = null): DataFrame =
+    read(spark, s"$indexDir/dictionary", dictionary,
+      Some(files(indexDir, m).dictionary))
+
+  private def files(indexDir: String, m: IndexManifest): IndexFiles =
+    Option(m).getOrElse(ManifestIO.read(s"$indexDir/manifest.json")).files
+
+  /** The table dir `dir`: only `files` (relative to `dir`) when given,
+    * else every file in it (a build reading what it has just written).
+    * The names are qualified the way Spark reports `_metadata.file_path`.
+    */
+  private[graft] def read(spark: SparkSession, dir: String, schema: StructType,
+      files: Option[Seq[String]]): DataFrame = {
+    val all = spark.read.schema(schema).parquet(dir)
+    files.fold(all) { fs =>
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val base = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(root)
+      all.filter(col("_metadata.file_path").isin(
+        fs.map(f => new org.apache.hadoop.fs.Path(base, f).toUri.toString): _*))
+    }
+  }
+
+  /** Part files under table dir `dir`, relative to it and sorted, outside
+    * `_`-prefixed dirs (a writer's `_temporary`). A driver-side walk.
+    */
+  def partFiles(dir: String): Seq[String] = {
+    val root = Paths.get(dir)
+    if (!Files.isDirectory(root)) Nil
+    else {
+      val w = Files.walk(root)
+      try w.iterator.asScala.map(root.relativize(_).toString)
+        .filter(f => f.split('/').last.startsWith("part-") &&
+          !f.split('/').exists(_.startsWith("_")))
+        .toVector.sorted
+      finally w.close()
+    }
+  }
+
+  /** Commits `m` as the index's snapshot with one atomic manifest write,
+    * then [[sweep]]s what it no longer lists.
+    */
+  def commit(indexDir: String, m: IndexManifest): Unit = {
+    ManifestIO.write(s"$indexDir/manifest.json", m)
+    sweep(indexDir, m)
+  }
+
+  /** Deletes every part file of the three tables that `m` does not list,
+    * checksum first, and the writers' `_temporary` dirs: what a crashed
+    * mutation left before its commit, or a committed one before its
+    * sweep. Every mutation runs it first.
+    */
+  def sweep(indexDir: String, m: IndexManifest): Unit =
+    Seq("docstore" -> m.files.docstore, "postings" -> m.files.postings,
+        "dictionary" -> m.files.dictionary).foreach { case (table, live) =>
+      val root = Paths.get(indexDir, table)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        root.resolve("_temporary").toFile)
+      partFiles(root.toString).filterNot(live.toSet).foreach { f =>
+        val part = root.resolve(f)
+        Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+        Files.delete(part)
+      }
+    }
 }

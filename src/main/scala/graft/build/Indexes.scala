@@ -4,13 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-JVM index build cache: SparkEntry query functions need a built
   * index for a given data dir; build once (resumable) and reuse.
-  * The dir name carries a format version so stale on-disk indexes from
-  * older code are never resumed.
+  * The dir name carries the format version
+  * ([[ManifestIO.FormatVersion]]) so stale on-disk indexes from older
+  * code are never resumed.
   */
 object Indexes {
-
-  /** Bump when the on-disk index format changes. */
-  val FormatVersion = 5 // r2: granule windows, coarse_graph, distance
 
   /** Scratch base for engine-managed index/snapshot dirs: env override >
     * roomy /dev/shm (needs >= 16 GiB free) > OS tmp — the same policy
@@ -33,7 +31,7 @@ object Indexes {
 
   def indexDirFor(sfDir: String): String = {
     val slug = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"$scratchBase/graft-index-v$FormatVersion$slug"
+    s"$scratchBase/graft-index-v${ManifestIO.FormatVersion}$slug"
   }
 
   /** Drop the memo for sfDir so the next [[ensureBuilt]] really builds

@@ -38,12 +38,23 @@ case class InputLineage(
     source_dir: String,
     num_source_rows: Long)
 
+/** The live part files of the three tables, relative to each table dir
+  * (`cluster_id=3/part-….parquet`), so a copied index stays valid.
+  */
+case class IndexFiles(
+    docstore: Seq[String] = Nil,
+    postings: Seq[String] = Nil,
+    dictionary: Seq[String] = Nil)
+
 /** The index manifest — the graft analog of the reference's persisted
   * header + centroids (/root/reference/src/persistency.jl:22-41): all
   * global stats, BM25 params, the coarse-quantizer centroids, and
   * per-partition/per-segment lineage + metrics. Parquet segments +
   * this JSON manifest emulate an Iceberg snapshot (no Iceberg jar in
-  * /opt/spark/jars — documented in SURVEY.md §7.0).
+  * /opt/spark/jars — documented in SURVEY.md §7.0): the manifest lists
+  * the live files, tombstones and last stream batch, readers read only
+  * what it lists, and writing it is the one commit point of every
+  * mutation.
   */
 case class IndexManifest(
     version: Int,
@@ -82,9 +93,20 @@ case class IndexManifest(
     coarse_graph_metric: String = "",
     lineage: InputLineage,
     partitions: Seq[PartitionMeta],
-    segments: Seq[SegmentMeta])
+    segments: Seq[SegmentMeta],
+    files: IndexFiles = IndexFiles(),
+    // deleted doc ids, ascending
+    tombstones: Array[Long] = Array.emptyLongArray,
+    // last stream micro-batch applied (−1: none)
+    stream_batch: Long = -1L)
 
 object ManifestIO {
+
+  /** The manifest's `version`; also in the build's resume fingerprint
+    * and the cached index dir name.
+    */
+  val FormatVersion = 7
+
   private val mapper = new ObjectMapper()
   mapper.registerModule(DefaultScalaModule)
   mapper.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
@@ -98,10 +120,15 @@ object ManifestIO {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def read(path: String): IndexManifest =
-    mapper.readValue(
+  def read(path: String): IndexManifest = {
+    val m = mapper.readValue(
       new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8),
       classOf[IndexManifest])
+    if (m.version != FormatVersion) throw new IllegalStateException(
+      s"$path has index format version ${m.version}, this code reads " +
+        s"version $FormatVersion: rebuild the index")
+    m
+  }
 
   def exists(path: String): Boolean = Files.exists(Paths.get(path))
 }

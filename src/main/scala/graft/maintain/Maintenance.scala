@@ -1,13 +1,11 @@
 package graft.maintain
 
-import java.nio.file.{Files, Paths}
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{ClusterStat, IndexBuilder, IndexSchemas, ManifestIO}
+import graft.build.{ClusterStat, IndexBuilder, IndexManifest, IndexSchemas, ManifestIO}
 import graft.sources.Corpus
 
 /** Incremental index maintenance — the graft of the reference's point
@@ -21,9 +19,9 @@ import graft.sources.Corpus
   *    intentionally HELD at its last full-build value until compaction
   *    (stored g-maxes stay valid upper bounds; Lucene holds norms the
   *    same way).
-  *  - [[delete]]  = `delete_from_index!` (M5): a tombstone set — O(1)
-  *    visibility-only delete; queries filter tombstoned docs before
-  *    top-k selection.
+  *  - [[delete]]  = `delete_from_index!` (M5): a tombstone set in the
+  *    manifest — O(1) visibility-only delete; queries filter tombstoned
+  *    docs before top-k selection.
   *  - [[compact]] = the deferred id-shift (M8,
   *    /root/reference/src/utils.jl:16-20): rebuilds into a new snapshot
   *    directory with survivors re-ranked DENSE IN OLD-ID ORDER —
@@ -32,79 +30,95 @@ import graft.sources.Corpus
   *  - [[fetchDocs]] = `_decode_point` (M7): the docstore is lossless, so
   *    reconstruction is exact (the reference's PQ reconstruction is
   *    lossy).
+  *
+  * Every mutation sweeps what a crashed predecessor left, writes new part
+  * files beside the live ones and commits with one manifest write
+  * ([[IndexSchemas.commit]]): a crash before it leaves the old snapshot.
+  * [[compact]] and [[prepend]] build into a fresh `outDir` instead.
   */
 object Maintenance {
 
-  private def tombstonePath(indexDir: String) =
-    Paths.get(indexDir, "tombstones.json")
-
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
+  private def manifestOf(indexDir: String): IndexManifest = {
+    val m = ManifestIO.read(s"$indexDir/manifest.json")
+    IndexSchemas.sweep(indexDir, m)
     m
   }
 
-  def loadTombstones(indexDir: String): Set[Long] = {
-    val p = tombstonePath(indexDir)
-    if (!Files.exists(p)) Set.empty
-    else mapper.readValue(Files.readAllBytes(p), classOf[Array[Long]]).toSet
-  }
+  def loadTombstones(indexDir: String): Set[Long] =
+    ManifestIO.read(s"$indexDir/manifest.json").tombstones.toSet
 
   /** M5: tombstone docIDs (idempotent, merges with existing). Every id
     * must name a doc of the index, i.e. lie in [0, num_docs): a tombstone
     * past the end would hide the doc the next append gives that id.
     */
   def delete(indexDir: String, docIds: Seq[Long]): Unit = {
-    val n = ManifestIO.read(s"$indexDir/manifest.json").num_docs
+    val manifest = manifestOf(indexDir)
+    val n = manifest.num_docs
     val bad = docIds.filter(id => id < 0 || id >= n).distinct.sorted
     require(bad.isEmpty,
       s"delete: ids outside [0, $n): ${bad.mkString(", ")}")
-    val merged = (loadTombstones(indexDir) ++ docIds).toArray.sorted
-    Files.write(tombstonePath(indexDir), mapper.writeValueAsBytes(merged))
+    IndexSchemas.commit(indexDir, manifest.copy(tombstones =
+      (manifest.tombstones ++ docIds).distinct.sorted))
   }
 
   /** M1: append an F1-shaped batch of new source files as a mini-segment.
     * New docIDs = num_docs + rank within the batch by (repo,path,commit).
-    * The batch runs the build's docstore writer into the staging area
-    * `_append`, the build's encoder over the rows it stored (so the
-    * postings index exactly the stored content), then both staged tables
-    * are installed. The manifest is a copy of the one read, updated from
-    * what the append's own jobs observed: per-cluster doc counts on the
-    * docstore write, block stats and segments from the encode
-    * accumulators, vocab from the dictionary write.
+    * The batch runs the build's docstore writer, then the build's
+    * encoder over the rows it stored (so the postings index exactly the
+    * stored content), both into the live table dirs under new names. The
+    * manifest is a copy of the one read, updated from what the append's
+    * own jobs observed: per-cluster doc counts on the docstore write,
+    * block stats and segments from the encode accumulators, vocab from
+    * the dictionary write.
     */
-  def append(spark: SparkSession, indexDir: String, newSource: DataFrame): Unit = {
-    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
+  def append(spark: SparkSession, indexDir: String, newSource: DataFrame): Unit =
+    append(spark, indexDir, newSource, None)
+
+  /** [[append]] that commits `streamBatch` as the manifest's last stream
+    * batch in the same manifest write; returns the number of docs added.
+    */
+  private[graft] def append(spark: SparkSession, indexDir: String,
+      newSource: DataFrame, streamBatch: Option[Long]): Long = {
+    val manifest = manifestOf(indexDir)
+    val batch = streamBatch.getOrElse(manifest.stream_batch)
     // appended segments REUSE the base build's granule window so every
     // block — old or new — stays inside one (cluster, window) granule
     // and query-side granule splits remain safe
     val window = graft.plans.BlockScan.window(manifest)
     val dense = Corpus.docsFromCounted(newSource,
       idOffset = manifest.num_docs)
-    // an empty batch leaves the index as it is
-    if (dense.numRows == 0) { dense.unpersist(); return }
-    val stage = s"$indexDir/_append"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
-    val m = try IndexBuilder.writeDocstore(dense.df, stage,
+    // an empty batch adds nothing
+    if (dense.numRows == 0) {
+      dense.unpersist()
+      if (streamBatch.nonEmpty)
+        IndexSchemas.commit(indexDir, manifest.copy(stream_batch = batch))
+      return 0L
+    }
+    val (m, docFiles) = try IndexBuilder.writeDocstore(dense.df, indexDir,
         manifest.centroids, graft.cluster.Distance.byName(manifest.distance),
         Map.empty, window, minId = manifest.num_docs)
       finally dense.unpersist()
+    // avgdl is held until compaction; an empty index has none to hold
+    // and takes its first batch's
+    val avgdl = if (manifest.num_docs > 0) manifest.avgdl
+      else IndexBuilder.CorpusStats(dense.numRows,
+        m("sum_dl").asInstanceOf[Long]).avgdl
 
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
     val (blocks, acc, cacc) = IndexBuilder.encodeBlocks(spark,
-      IndexSchemas.readDocstore(spark, stage),
-      manifest.avgdl, // held until compaction
-      segOffset, window)
-    IndexBuilder.writeByCluster(blocks, s"$stage/postings")
-    IndexBuilder.installStaged(s"$stage/docstore", s"$indexDir/docstore")
-    IndexBuilder.installStaged(s"$stage/postings", s"$indexDir/postings")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
+      IndexSchemas.read(spark, s"$indexDir/docstore", IndexSchemas.docstore,
+        Some(docFiles)),
+      avgdl, segOffset, window)
+    val postings = manifest.files.postings ++
+      IndexBuilder.writeParts(blocks, s"$indexDir/postings")
 
     val nNew = manifest.num_docs + dense.numRows
-    val vocab = IndexBuilder.writeDictionary(spark, indexDir, nNew)
+    val (vocab, dictionary) =
+      IndexBuilder.writeDictionary(spark, indexDir, Some(postings), nNew)
     val old = manifest.partitions
-    ManifestIO.write(s"$indexDir/manifest.json", manifest.copy(
+    IndexSchemas.commit(indexDir, manifest.copy(
       num_docs = nNew,
+      avgdl = avgdl,
       vocab_size = vocab,
       lineage = manifest.lineage.copy(num_source_rows = nNew),
       partitions = IndexBuilder.partitionMetas(
@@ -115,7 +129,11 @@ object Maintenance {
           p.num_postings, p.num_blocks, p.bytes, p.build_millis)) ++
           cacc.value.asScala)),
       segments = (manifest.segments ++ acc.value.asScala)
-        .sortBy(_.segment_id)))
+        .sortBy(_.segment_id),
+      files = manifest.files.copy(docstore = manifest.files.docstore ++ docFiles,
+        postings = postings, dictionary = dictionary),
+      stream_batch = batch))
+    dense.numRows
   }
 
   /** Segment merge (north_star: "merge partition-local segments into a
@@ -130,29 +148,27 @@ object Maintenance {
     * query-side split key relies on.
     */
   def mergeSegments(spark: SparkSession, indexDir: String): Unit = {
-    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
+    val manifest = manifestOf(indexDir)
 
     // exact refreshed stats (Long sums → deterministic)
-    val statsRow = IndexSchemas.readDocstore(spark, indexDir)
+    val statsRow = IndexSchemas.readDocstore(spark, indexDir, manifest)
       .agg(count(lit(1)), sum(col("doc_len"))).head()
     val n = statsRow.getLong(0)
     val avgdl = IndexBuilder.CorpusStats(n,
       if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)).avgdl
 
     // hash placement on cluster_id: a segment id is the partition id
-    val (acc, cacc) = IndexBuilder.swapDir(s"$indexDir/postings") { tmp =>
-      val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
-        IndexSchemas.readPostings(spark, indexDir)
-          .repartition(col("cluster_id")),
-        spark.sparkContext.broadcast(Array.emptyLongArray), avgdl,
-        segmentOffset = 0, graft.plans.BlockScan.window(manifest))
-      IndexBuilder.writeByCluster(merged, tmp)
-      (acc, cacc)
-    }
+    val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
+      IndexSchemas.readPostings(spark, indexDir, manifest)
+        .repartition(col("cluster_id")),
+      spark.sparkContext.broadcast(Array.emptyLongArray), avgdl,
+      segmentOffset = 0, graft.plans.BlockScan.window(manifest))
+    val postings = IndexBuilder.writeParts(merged, s"$indexDir/postings")
 
     // docs and their clusters are unchanged; blocks and segments are new
-    val vocab = IndexBuilder.writeDictionary(spark, indexDir, n)
-    ManifestIO.write(s"$indexDir/manifest.json", manifest.copy(
+    val (vocab, dictionary) =
+      IndexBuilder.writeDictionary(spark, indexDir, Some(postings), n)
+    IndexSchemas.commit(indexDir, manifest.copy(
       num_docs = n,
       avgdl = avgdl,
       vocab_size = vocab,
@@ -160,24 +176,25 @@ object Maintenance {
       partitions = IndexBuilder.partitionMetas(
         manifest.partitions.map(p => p.cluster_id -> p.num_docs).toMap,
         IndexBuilder.sumClusterStats(cacc.value.asScala.toSeq)),
-      segments = acc.value.asScala.toSeq.sortBy(_.segment_id)))
+      segments = acc.value.asScala.toSeq.sortBy(_.segment_id),
+      files = manifest.files.copy(postings = postings, dictionary = dictionary)))
   }
 
   /** M5/M8 compaction: survivors re-ranked dense in OLD-id order into a
     * fresh snapshot directory (avgdl/idf refreshed there). The
-    * tombstone set defaults to the index's tombstones.json; passing
+    * tombstone set defaults to the manifest's tombstones; passing
     * `deadOverride` compacts against an explicit set WITHOUT mutating
     * the source index (read-only source — e.g. benchmark harnesses that
     * must not leave tombstones behind for later queries).
     */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
       deadOverride: Option[Set[Long]] = None): IndexBuilder.BuildResult = {
-    val dead = deadOverride.getOrElse(loadTombstones(indexDir))
+    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
+    val dead = deadOverride.getOrElse(manifest.tombstones.toSet)
     // survivor count from the manifest, EXACT for any dead set: docstore
     // ids are dense 0..n-1, so only dead ids inside that range remove
     // rows — a deadOverride carrying absent ids (which bypasses
     // delete()'s validation) must not shrink the hint [ADVICE r4]
-    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
     val n = manifest.num_docs
     val deadArr = dead.filter(id => id >= 0 && id < n).toArray.sorted
     // r7 fast path: the docstore already holds dense old ids 0..n-1 AND
@@ -191,7 +208,7 @@ object Maintenance {
     // the whole docstore side of the rebuild collapses to one map-side
     // expression + the write.
     val deadBc = spark.sparkContext.broadcast(deadArr)
-    val survivors = IndexSchemas.readDocstore(spark, indexDir)
+    val survivors = IndexSchemas.readDocstore(spark, indexDir, manifest)
       .withColumn("_nid",
         graft.functions.TombstoneShiftExpr.col(col("doc_id"), deadBc))
       .filter(col("_nid") >= 0)
@@ -221,29 +238,26 @@ object Maintenance {
       .collect()
 
   private def liveIds(spark: SparkSession, indexDir: String) = {
-    val dead = loadTombstones(indexDir)
-    import spark.implicits._
-    IndexSchemas.readDocstore(spark, indexDir)
-      .join(broadcast(dead.toSeq.toDF("doc_id")), Seq("doc_id"), "left_anti")
+    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
+    IndexSchemas.readDocstore(spark, indexDir, manifest)
+      .filter(!col("doc_id").isin(manifest.tombstones.toSeq: _*))
   }
 
   /** M3 `pop!`: reconstruct + tombstone the highest live id. Dense-id
     * restoration happens at the next [[compact]], like the reference's
     * deferred shift.
     */
-  def popLast(spark: SparkSession, indexDir: String): Option[Row] = {
-    val last = liveIds(spark, indexDir).orderBy(col("doc_id").desc).limit(1)
-      .collect().headOption
-    last.foreach(r => delete(indexDir, Seq(r.getAs[Long]("doc_id"))))
-    last
-  }
+  def popLast(spark: SparkSession, indexDir: String): Option[Row] =
+    pop(indexDir, liveIds(spark, indexDir).orderBy(col("doc_id").desc))
 
   /** M4 `popfirst!`: reconstruct + tombstone the lowest live id. */
-  def popFirst(spark: SparkSession, indexDir: String): Option[Row] = {
-    val first = liveIds(spark, indexDir).orderBy(col("doc_id").asc).limit(1)
-      .collect().headOption
-    first.foreach(r => delete(indexDir, Seq(r.getAs[Long]("doc_id"))))
-    first
+  def popFirst(spark: SparkSession, indexDir: String): Option[Row] =
+    pop(indexDir, liveIds(spark, indexDir).orderBy(col("doc_id").asc))
+
+  private def pop(indexDir: String, ordered: DataFrame): Option[Row] = {
+    val row = ordered.limit(1).collect().headOption
+    row.foreach(r => delete(indexDir, Seq(r.getAs[Long]("doc_id"))))
+    row
   }
 
   /** M2 `pushfirst!`: prepend — new docs get ids 0..k-1, ALL existing

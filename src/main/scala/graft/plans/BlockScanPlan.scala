@@ -79,7 +79,8 @@ object BlockScan {
     if (manifest.granule_window > 0) manifest.granule_window
     else Long.MaxValue
 
-  /** `kernel` over the posting blocks of `terms` — restricted to
+  /** `kernel` over the posting blocks of `terms` in the files `manifest`
+    * lists — restricted to
     * `clusters` when the caller probes (partition pruning), `term`
     * pushed down, only the kernel's columns read. `_split` spreads a hot
     * cluster over up to `splitsPerCluster` tasks; it is a function of
@@ -97,7 +98,7 @@ object BlockScan {
     val splits = if (manifest.granule_window > 0) splitsPerCluster else 1
     val inClusters =
       clusters.fold(lit(true))(cs => col("cluster_id").isin(cs: _*))
-    val blocks = IndexSchemas.readPostings(spark, indexDir)
+    val blocks = IndexSchemas.readPostings(spark, indexDir, manifest)
       .filter(inClusters && col("term").isin(terms: _*))
       .select(kernel.columns.map(col): _*)
       .withColumn("_split",

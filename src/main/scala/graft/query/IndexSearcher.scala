@@ -164,7 +164,7 @@ object IndexSearcher {
     // dictionary idf for the query terms (predicate pushdown on term;
     // r7: explicit schema — no per-query footer-inference pass)
     val idfMap: Map[String, Double] = graft.build.IndexSchemas
-      .readDictionary(spark, indexDir)
+      .readDictionary(spark, indexDir, manifest)
       .filter(col("term").isin(allTerms: _*))
       .select("term", "idf")
       .collect()
@@ -175,8 +175,8 @@ object IndexSearcher {
     // and never reads the positions payload (the heaviest column);
     // each (cluster, split) group keeps its COMPRESSED blocks, lazily
     // decoded by the WAND cursors [VERDICT r1 #4]
-    val kernel = WandKernel(parsed, idfMap,
-      graft.maintain.Maintenance.loadTombstones(indexDir), manifest.avgdl, k)
+    val kernel = WandKernel(parsed, idfMap, manifest.tombstones.toSet,
+      manifest.avgdl, k)
     val localHits = BlockScan.frame(spark, indexDir, manifest, kernel,
       allTerms, Some(allClusters), splitsPerCluster)
 

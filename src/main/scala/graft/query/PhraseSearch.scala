@@ -32,13 +32,13 @@ object PhraseSearch {
       indexDir: String,
       phrase: Seq[String]): DataFrame = {
     require(phrase.size >= 2, "phrase needs >= 2 terms")
-    val kernel = PhraseKernel(phrase,
-      graft.maintain.Maintenance.loadTombstones(indexDir))
+    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
     // the hits are few: one partition sorts them locally, where a global
     // sort's range exchange would first sample its input and thereby
     // run the kernel a second time
-    BlockScan.frame(spark, indexDir, ManifestIO.read(s"$indexDir/manifest.json"),
-      kernel, phrase.distinct, None, IndexSearcher.SplitsPerCluster)
+    BlockScan.frame(spark, indexDir, manifest,
+      PhraseKernel(phrase, manifest.tombstones.toSet), phrase.distinct, None,
+      IndexSearcher.SplitsPerCluster)
       .repartition(1)
       .orderBy(col("occurrences").desc, col("doc_id").asc)
   }

@@ -125,4 +125,22 @@ class IndexSpec extends SparkSpec {
     assert(stored.exceptAll(fresh).count() == 0)
     assert(fresh.exceptAll(stored).count() == 0)
   }
+
+  test("round-robin docstore slots put the clusters of one window in distinct partitions") {
+    import org.apache.spark.sql.functions.col
+    val m = ManifestIO.read(s"$indexDir/manifest.json")
+    assert(Set(0, 1).subsetOf(m.partitions.map(_.cluster_id).toSet))
+    // one doc of cluster 0 and one of cluster 1, both in window 0; an
+    // append's write has no slot map
+    val store = graft.build.IndexSchemas.readDocstore(spark, indexDir, m)
+    val two = Seq(0, 1).map(c => store.filter(col("cluster_id") === c)
+        .orderBy("doc_id").limit(1))
+      .reduce(_ union _)
+      .select("doc_id", "repo", "path", "commit", "lang", "content")
+    val rows = IndexBuilder.docstoreRows(two, m.centroids,
+      graft.cluster.Distance.byName(m.distance), Map.empty, m.granule_window,
+      org.apache.spark.sql.Observation())
+    val filled = rows.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(filled.length == 4 && filled.count(_ > 0) == 2, filled.toSeq)
+  }
 }

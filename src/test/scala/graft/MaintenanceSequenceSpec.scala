@@ -15,7 +15,8 @@ import graft.query.{IndexSearcher, QuerySet}
   * specs (MaintenanceSpec) pin each op alone; this pins their
   * INTERPLAY: ids assigned over tombstoned ranges, pops after appends,
   * compaction mid-sequence, stale-avgdl windows closed by the final
-  * compact. Mirrors the reference's list semantics
+  * compact, and crashes before a mutation's commit at seeded random
+  * steps, which must leave the index as the model has it. Mirrors the reference's list semantics
   * (/root/reference/src/utils.jl:2-20) under composition.
   */
 class MaintenanceSequenceSpec extends SparkSpec {
@@ -122,9 +123,33 @@ class MaintenanceSequenceSpec extends SparkSpec {
         case 3 => Delete(live => rnd.shuffle(live).take(1 + rnd.nextInt(3)))
         case 4 => Compact
       }
+      // a crash before the commit of an append, merge or delete, drawn
+      // from its own seeded stream so the op sequences stay as they are:
+      // some of the mutation's files land beside the index's, its
+      // manifest does not, and the model is unchanged
+      val crashRnd = new scala.util.Random(seed + 1000)
+      def crash(opNo: Int): Unit = {
+        val kind = crashRnd.nextInt(3)
+        System.err.println(s"[seq] seed=$seed crash before op#$opNo -> " +
+          Seq("append", "merge", "delete")(kind))
+        val content = Seq.fill(8)(words(crashRnd.nextInt(words.size))).mkString(" ")
+        val live = liveIdx
+        val victim = if (live.isEmpty) None
+          else Some(live(crashRnd.nextInt(live.size)).toLong)
+        dirs += CrashStates.crashBeforeCommit(dir, d => kind match {
+          case 0 => Maintenance.append(spark, d, batchDf(Seq(Doc("repo-crash",
+            f"src/crash/$seed%02d-$opNo%02d.x", f"c-crash-$seed%02d-$opNo%02d",
+            "x", content))))
+          case 1 => Maintenance.mergeSegments(spark, d)
+          case _ => victim.foreach(v => Maintenance.delete(d, Seq(v)))
+        }, Some(crashRnd))
+        checkLiveContents()
+      }
+
       val ops = script.map(_.iterator).getOrElse(Iterator.fill(6)(randomOp()))
       ops.zipWithIndex.foreach { case (op, i) =>
         val opNo = i + 1
+        if (crashRnd.nextInt(3) == 0) crash(opNo)
         System.err.println(s"[seq] seed=$seed op#$opNo -> " +
           op.getClass.getSimpleName.stripSuffix("$"))
         op match {

@@ -322,5 +322,119 @@ class MaintenanceSpec extends SparkSpec {
       .collect().isEmpty)
     assert(graft.query.PhraseSearch.search(spark, out, Seq("hash", "join"))
       .collect().isEmpty)
+    // the first append to the empty index scores with its own avgdl
+    import spark.implicits._
+    Maintenance.append(spark, out, Seq(
+      ("repo-e", "src/e/a.c", "c0ffee0000e1", "c", "hash join hash"),
+      ("repo-e", "src/e/b.c", "c0ffee0000e2", "c", "join index"),
+      ("repo-e", "src/e/c.c", "c0ffee0000e3", "c", ""))
+      .toDF("repo", "path", "commit", "lang", "content"))
+    val qs = Seq(1 -> Seq("hash"), 2 -> Seq("join", "index"))
+    val wand = IndexSearcher.topK(spark, out, qs, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val sql = graft.query.Bm25SqlPath.topK(spark,
+      graft.build.IndexSchemas.readDocstore(spark, out), qs, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(wand.toSeq == sql.toSeq)
+    assert(wand.forall(_._4 > 0), wand.toSeq)
+  }
+
+  // ------------------------------------------------------------------
+  // crash states: the manifest is the one commit point
+  // ------------------------------------------------------------------
+
+  lazy val baseIndex: String = freshIndex()
+
+  private def batch(tag: String) = {
+    import spark.implicits._
+    Seq((s"repo-$tag", s"src/$tag/a.c", "c0ffee0000c1", "c",
+        "zebra quail zebra hash join"),
+      (s"repo-$tag", s"src/$tag/b.c", "c0ffee0000c2", "c", "zebra index merge"))
+      .toDF("repo", "path", "commit", "lang", "content")
+  }
+
+  /** What queries see: WAND hits, phrase hits and the docstore ids. */
+  private def results(dir: String) = (
+    IndexSearcher.topK(spark, dir,
+      QuerySet.queries.take(5) :+ (99 -> Seq("zebra", "join")), 10)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq,
+    graft.query.PhraseSearch.search(spark, dir, Seq("hash", "join"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq,
+    ids(dir))
+
+  private def ids(dir: String) = graft.build.IndexSchemas.readDocstore(spark, dir)
+    .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  /** The ids in the docstore dir, read as a directory. */
+  private def dirIds(dir: String) = spark.read.parquet(s"$dir/docstore")
+    .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("a crash before an append's commit changes nothing; the retried append gives dense unique ids") {
+    Seq(None, Some(new scala.util.Random(7))).foreach { rnd =>
+      val dir = CrashStates.copyIndex(baseIndex)
+      val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+      val before = results(dir)
+      CrashStates.crashBeforeCommit(dir,
+        Maintenance.append(spark, _, batch("crash")), rnd)
+      assert(results(dir) == before)
+      Maintenance.append(spark, dir, batch("crash"))
+      assert(ids(dir) == (0L until n + 2))
+      assert(dirIds(dir) == (0L until n + 2))
+      assert(IndexSearcher.topK(spark, dir, Seq(1 -> Seq("zebra")), 10)
+        .collect().map(_.getLong(2)).toSet == Set(n, n + 1))
+    }
+  }
+
+  test("a crash before a merge's or a delete's commit changes nothing") {
+    val dir = CrashStates.copyIndex(baseIndex)
+    Maintenance.append(spark, dir, batch("pre"))
+    val before = results(dir)
+    val merged = CrashStates.crashBeforeCommit(dir,
+      Maintenance.mergeSegments(spark, _))
+    assert(results(dir) == before)
+    val victims = before._1.filter(_._1 == 99).map(_._3).take(2)
+    CrashStates.crashBeforeCommit(dir, Maintenance.delete(_, victims),
+      Some(new scala.util.Random(11)))
+    assert(results(dir) == before)
+    assert(Maintenance.loadTombstones(dir).isEmpty)
+    // each then runs once, as on the copy
+    Maintenance.mergeSegments(spark, dir)
+    assert(results(dir) == results(merged))
+    Maintenance.delete(dir, victims)
+    assert(Maintenance.loadTombstones(dir) == victims.toSet)
+    assert(results(dir)._1.forall(h => !victims.contains(h._3)))
+    assert(spark.read.parquet(s"$dir/postings").count() ==
+      graft.build.IndexSchemas.readPostings(spark, dir).count())
+  }
+
+  test("a crash after a commit, before its sweep, reads as the committed snapshot") {
+    val dir = CrashStates.copyIndex(baseIndex)
+    val appended = CrashStates.crashBeforeSweep(dir,
+      Maintenance.append(spark, _, batch("sweep")))(results(dir))
+    assert(results(dir) == appended)
+    val merged = CrashStates.crashBeforeSweep(dir,
+      Maintenance.mergeSegments(spark, _))(results(dir))
+    assert(results(dir) == merged)
+    // the next mutation sweeps the leftovers: the dirs hold what is listed
+    Maintenance.delete(dir, Seq(0L))
+    val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+    assert(dirIds(dir) == (0L until n))
+    assert(spark.read.parquet(s"$dir/postings").count() ==
+      graft.build.IndexSchemas.readPostings(spark, dir).count())
+    assert(spark.read.parquet(s"$dir/dictionary").count() ==
+      ManifestIO.read(s"$dir/manifest.json").vocab_size)
+  }
+
+  test("a manifest of another format version fails loudly and asks for a rebuild") {
+    val dir = CrashStates.copyIndex(baseIndex)
+    val m = ManifestIO.read(s"$dir/manifest.json")
+    // written as an older build wrote it: the check is on read
+    ManifestIO.write(s"$dir/manifest.json", m.copy(version = 2))
+    val e = intercept[IllegalStateException](
+      IndexSearcher.topK(spark, dir, QuerySet.queries.take(1), 10))
+    assert(e.getMessage.contains("version 2") && e.getMessage.contains("rebuild"),
+      e.getMessage)
+    intercept[IllegalStateException](Maintenance.append(spark, dir, batch("v")))
   }
 }

@@ -10,11 +10,10 @@ import graft.maintain.Maintenance
 import graft.ops.Dedup
 import graft.parity.{IvfAdc, Pq}
 import graft.sources.Corpus
-import graft.streaming.StreamingAppend
 
 /** Round-3 features: exchange-free dense-id assignment
   * (PartitionOffsetRowIndex), PPJoin prefix-filtered exact n-gram
-  * Jaccard, streaming partial-append rollback, pluggable Dr
+  * Jaccard, pluggable Dr
   * quantization distance and :opq rotation
   * (/root/reference/src/index.jl:109-110), resume-wipe covering
   * cluster-stats checkpoints, and merge preserving the granule window.
@@ -64,51 +63,6 @@ class Round3Spec extends SparkSpec {
       Dedup.minhash(spark, sh))
     assert(collectPairs(Dedup.verifyJaccardFused(cand2, sh, 0.5)) ==
       collectPairs(Dedup.verifyJaccard(cand2, sh, 0.5)))
-  }
-
-  // ------------------------------------------------------------------
-  // streaming: partial-append rollback
-  // ------------------------------------------------------------------
-
-  private def newBatch(n: Int) = {
-    import spark.implicits._
-    (0 until n).map(i =>
-      (s"repo-new", f"src/new/$i%03d.scala", f"c$i%012d", "scala",
-        s"object New$i { val fresh = $i; def batch = ${i * 7} }"))
-      .toDF("repo", "path", "commit", "lang", "content")
-  }
-
-  test("replay after crash-before-applied-record rolls back, then reapplies") {
-    val dir = Files.createTempDirectory("graft-r3-stream").toString
-    IndexBuilder.build(spark, sf0001, dir,
-      IndexBuilder.BuildConfig(resume = false))
-    val m0 = ManifestIO.read(s"$dir/manifest.json")
-    val maxSeg0 = (m0.segments.map(_.segment_id) :+ 0).max
-    val batch = newBatch(5)
-
-    // simulate the crash window [ADVICE r2]: append fully applied, but
-    // the applied record was never written — only the intent remains
-    Maintenance.append(spark, dir, batch)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "stream_intent.json"),
-      s"""{"batchId":0,"numDocsBefore":${m0.num_docs},"maxSegBefore":$maxSeg0}"""
-        .getBytes)
-    assert(StreamingAppend.lastAppliedBatch(dir) == -1L)
-    assert(StreamingAppend.pendingIntent(dir).nonEmpty)
-
-    // replay: must roll the partial batch back, then apply ONCE
-    assert(StreamingAppend.applyBatch(dir, batch, 0L))
-    val m1 = ManifestIO.read(s"$dir/manifest.json")
-    assert(m1.num_docs == m0.num_docs + 5)
-    val store = spark.read.parquet(s"$dir/docstore")
-    assert(store.count() == m0.num_docs + 5) // no duplicated rows
-    assert(store.select("doc_id").distinct().count() == m0.num_docs + 5)
-    assert(StreamingAppend.lastAppliedBatch(dir) == 0L)
-    assert(StreamingAppend.pendingIntent(dir).isEmpty)
-    // a further replay of the same batch is skipped outright
-    assert(!StreamingAppend.applyBatch(dir, batch, 0L))
-    assert(spark.read.parquet(s"$dir/docstore").count() == m0.num_docs + 5)
   }
 
   // ------------------------------------------------------------------
@@ -478,6 +432,14 @@ class Round3Spec extends SparkSpec {
   // ------------------------------------------------------------------
   // merge preserves the granule window in the stats checkpoint [ADVICE r2]
   // ------------------------------------------------------------------
+
+  private def newBatch(n: Int) = {
+    import spark.implicits._
+    (0 until n).map(i =>
+      (s"repo-new", f"src/new/$i%03d.scala", f"c$i%012d", "scala",
+        s"object New$i { val fresh = $i; def batch = ${i * 7} }"))
+      .toDF("repo", "path", "commit", "lang", "content")
+  }
 
   test("mergeSegments keeps stats.granule_window == manifest.granule_window") {
     val dir = Files.createTempDirectory("graft-r3-merge").toString

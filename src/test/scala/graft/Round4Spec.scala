@@ -1,67 +1,16 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
 import graft.build.{IndexBuilder, ManifestIO}
-import graft.maintain.Maintenance
-import graft.streaming.StreamingAppend
 
-/** Round-4 hardening: the two streaming crash windows from ADVICE r3 —
-  * (1) a dangling intent for a batch that COMMITTED (crash between the
-  * applied record and the intent clear) must never be rolled back, and
-  * (2) a rollback that crashed between moving the live dir aside and
-  * installing the rewrite must self-heal from the _old copy.
+/** Round-4 hardening: the graph coarse probe under a non-sqeuclidean
+  * metric, a deterministic concurrent build head, non-ASCII content,
+  * the PPJoin positional bound and non-parametric OPQ.
   */
 class Round4Spec extends SparkSpec {
-
-  private def newBatch(tag: String, n: Int) = {
-    import spark.implicits._
-    (0 until n).map(i =>
-      (s"repo-$tag", f"src/$tag/$i%03d.scala", f"$tag$i%08d".take(12).padTo(12, '0'),
-        "scala", s"object ${tag.capitalize}$i { val fresh = $i }"))
-      .toDF("repo", "path", "commit", "lang", "content")
-  }
-
-  test("stale intent for a committed batch is cleared, never rolled back") {
-    val dir = Files.createTempDirectory("graft-r4-stale-intent").toString
-    IndexBuilder.build(spark, sf0001, dir,
-      IndexBuilder.BuildConfig(resume = false))
-    val m0 = ManifestIO.read(s"$dir/manifest.json")
-    val maxSeg0 = (m0.segments.map(_.segment_id) :+ 0).max
-
-    // batch 0 fully applies and records applied…
-    assert(StreamingAppend.applyBatch(dir, newBatch("a", 3), 0L))
-    val m1 = ManifestIO.read(s"$dir/manifest.json")
-    assert(m1.num_docs == m0.num_docs + 3)
-    // …but the crash hits before clearIntent: re-create the intent that
-    // applyBatch wrote for batch 0 (pre-append watermarks)
-    Files.write(Paths.get(dir, "stream_intent.json"),
-      s"""{"batchId":0,"numDocsBefore":${m0.num_docs},"maxSegBefore":$maxSeg0}"""
-        .getBytes)
-    assert(StreamingAppend.pendingIntent(dir).nonEmpty)
-    assert(StreamingAppend.lastAppliedBatch(dir) == 0L)
-
-    // batch 1 must NOT roll back batch 0's committed docs
-    assert(StreamingAppend.applyBatch(dir, newBatch("b", 2), 1L))
-    val m2 = ManifestIO.read(s"$dir/manifest.json")
-    assert(m2.num_docs == m0.num_docs + 5) // 3 from batch 0 + 2 from batch 1
-    val store = spark.read.parquet(s"$dir/docstore")
-    assert(store.count() == m0.num_docs + 5)
-    assert(store.filter(col("path").startsWith("src/a/")).count() == 3)
-    assert(StreamingAppend.pendingIntent(dir).isEmpty)
-
-    // same staleness on the SKIP branch: replay of batch 1 with its
-    // intent dangling must clear the intent and leave data untouched
-    val m1seg = (m2.segments.map(_.segment_id) :+ 0).max
-    Files.write(Paths.get(dir, "stream_intent.json"),
-      s"""{"batchId":1,"numDocsBefore":${m0.num_docs + 3},"maxSegBefore":$m1seg}"""
-        .getBytes)
-    assert(!StreamingAppend.applyBatch(dir, newBatch("b", 2), 1L))
-    assert(StreamingAppend.pendingIntent(dir).isEmpty)
-    assert(ManifestIO.read(s"$dir/manifest.json").num_docs == m0.num_docs + 5)
-  }
 
   test("graph coarse probe under cosine Dc == naive argsort, end to end") {
     import graft.cluster.{Distance, GraphCoarseSearch}
@@ -237,32 +186,5 @@ class Round4Spec extends SparkSpec {
     IvfAdc.save(p, IvfAdc.Model(1, Array(Array.fill(4)(0.0)), np))
     assert(IvfAdc.load(p).codebooks.rotation.get.map(_.toSeq).toSeq ==
       r.map(_.toSeq).toSeq)
-  }
-
-  test("rollback self-heals when a prior rollback died mid-swap") {
-    val dir = Files.createTempDirectory("graft-r4-midswap").toString
-    IndexBuilder.build(spark, sf0001, dir,
-      IndexBuilder.BuildConfig(resume = false))
-    val m0 = ManifestIO.read(s"$dir/manifest.json")
-    val maxSeg0 = (m0.segments.map(_.segment_id) :+ 0).max
-
-    // a partial append (docs landed, applied record missing)
-    Maintenance.append(spark, dir, newBatch("c", 4))
-    val intent = StreamingAppend.Intent(0L, m0.num_docs, maxSeg0)
-
-    // simulate the mid-swap crash: live docstore moved aside, rewrite
-    // never installed
-    Files.move(Paths.get(dir, "docstore"), Paths.get(dir, "docstore_old"))
-    assert(!Files.isDirectory(Paths.get(dir, "docstore")))
-
-    StreamingAppend.rollbackPartial(spark, dir, intent)
-    val store = spark.read.parquet(s"$dir/docstore")
-    assert(store.count() == m0.num_docs) // batch gone, base corpus intact
-    assert(!Files.isDirectory(Paths.get(dir, "docstore_old")))
-    assert(ManifestIO.read(s"$dir/manifest.json").num_docs == m0.num_docs)
-
-    // and the batch re-applies cleanly afterwards
-    assert(StreamingAppend.applyBatch(dir, newBatch("c", 4), 0L))
-    assert(spark.read.parquet(s"$dir/docstore").count() == m0.num_docs + 4)
   }
 }

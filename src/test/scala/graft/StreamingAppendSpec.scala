@@ -83,4 +83,32 @@ class StreamingAppendSpec extends SparkSpec {
     // higher tf ranks first: batch-2 doc has quartz tf=2
     assert(hits.head.getLong(2) == n0 + 1)
   }
+
+  test("a crash before a stream batch's commit: the replayed batch applies exactly once") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-stream-crash").toString
+    IndexBuilder.build(spark, sf0001, base,
+      IndexBuilder.BuildConfig(resume = false))
+    val n0 = ManifestIO.read(s"$base/manifest.json").num_docs
+    val batch = (0 until 3).map(i =>
+      ("repo-r", f"src/r/$i%03d.c", f"beef0000000$i", "c", s"replay guard $i"))
+      .toDF("repo", "path", "commit", "lang", "content")
+    def dirIds(dir: String) = spark.read.parquet(s"$dir/docstore")
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    Seq(None, Some(new scala.util.Random(5))).foreach { rnd =>
+      val dir = CrashStates.copyIndex(base)
+      CrashStates.crashBeforeCommit(dir,
+        StreamingAppend.applyBatch(_, batch, 0L), rnd)
+      assert(StreamingAppend.lastAppliedBatch(dir) == -1L)
+      assert(ManifestIO.read(s"$dir/manifest.json").num_docs == n0)
+      // the replay applies the batch once
+      assert(StreamingAppend.applyBatch(dir, batch, 0L))
+      assert(StreamingAppend.lastAppliedBatch(dir) == 0L)
+      assert(ManifestIO.read(s"$dir/manifest.json").num_docs == n0 + 3)
+      assert(dirIds(dir) == (0L until n0 + 3))
+      // and a further replay is skipped
+      assert(!StreamingAppend.applyBatch(dir, batch, 0L))
+      assert(dirIds(dir) == (0L until n0 + 3))
+    }
+  }
 }
