@@ -1,6 +1,5 @@
 package graft.build
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.TaskContext
@@ -32,8 +31,8 @@ import graft.tokenize.Tokenizer
   *   dictionary/  parquet (term, df, cf, idf)
   *   postings/    parquet, partitionBy(cluster_id) of PostingBlock rows
   *   manifest.json — the snapshot: stats, the live files of the three
-  *                tables, tombstones, last stream batch; the commit point
-  *   _checkpoints/<step>.done — resumable build markers
+  *                tables, tombstones, last stream batch, the build steps
+  *                done; the commit point and the index's only state
   *
   * SCALE NOTES (100 TB):
   *  - range partitioning on (cluster_id, doc_id) both balances segment
@@ -45,9 +44,10 @@ import graft.tokenize.Tokenizer
   *    dictionary join, and the dictionary aggregates from three tiny
   *    block-metadata columns (map-side partial agg absorbs stop-word
   *    keys — the effect explicit salting gives non-combinable aggs);
-  *  - resume: step-level checkpoint markers, plus PER-PARTITION batch
-  *    markers inside the postings step (cluster batches, partition-
-  *    pruned incremental rebuild).
+  *  - resume: every step, and every PER-PARTITION batch inside the
+  *    postings step (cluster batches, partition-pruned incremental
+  *    rebuild), commits the manifest with its name in `build_done`; a
+  *    resumed build runs only what that lacks.
   */
 object IndexBuilder {
 
@@ -96,18 +96,6 @@ object IndexBuilder {
       // time window and emit the per-step wall/core-seconds scaling
       // evidence machine-readably [VERDICT r5 #3]
       stepWindows: Seq[(String, Long, Long)] = Nil)
-
-  private def ckptPath(indexDir: String, step: String) =
-    Paths.get(indexDir, "_checkpoints", s"$step.done")
-
-  private def markDone(indexDir: String, step: String, info: String): Unit = {
-    val p = ckptPath(indexDir, step)
-    Files.createDirectories(p.getParent)
-    Files.write(p, info.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def isDone(indexDir: String, step: String): Boolean =
-    Files.exists(ckptPath(indexDir, step))
 
   def build(
       spark: SparkSession,
@@ -172,11 +160,10 @@ object IndexBuilder {
         s"idOrder keys ${idOrder.mkString("(", ",", ")")} must be unique: " +
           s"$total rows, $distinctKeys distinct")
     }
-    // Resume identity [ADVICE r1]: a marker's existence is not enough —
-    // a dir previously built from a different source/config must NOT
-    // have its steps silently skipped. The fingerprint covers input,
-    // config, and on-disk format; on mismatch all checkpoint state and
-    // the append-mode postings dir are wiped before any step runs.
+    // Resume identity [ADVICE r1]: a dir previously built from a different
+    // source/config/format must NOT have its steps silently skipped. The
+    // fingerprint covers input, config and on-disk format; the build
+    // resumes only a manifest of its own fingerprint.
     val fingerprint =
       s"v=${ManifestIO.FormatVersion} input=$sfDir kc=${cfg.kc} amplify=${cfg.amplify} " +
         s"batches=${cfg.postingsBatches} idOrder=${idOrder.mkString(",")} " +
@@ -184,21 +171,28 @@ object IndexBuilder {
         fixedCentroids.map(c => s" fixed=${java.util.Arrays.deepHashCode(
           c.asInstanceOf[Array[AnyRef]])}").getOrElse("") +
         (if (preAssigned.nonEmpty) " pre=1" else "")
-    val fpPath = Paths.get(indexDir, "_checkpoints", "fingerprint.txt")
-    val fpMatches = Files.exists(fpPath) &&
-      new String(Files.readAllBytes(fpPath), StandardCharsets.UTF_8) ==
-        fingerprint
-    // no fingerprint but markers present = a pre-fingerprint-era or
-    // partially-wiped dir: equally stale
-    if (cfg.resume && !fpMatches &&
-        Files.isDirectory(Paths.get(indexDir, "_checkpoints"))) {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$indexDir/_checkpoints"))
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$indexDir/postings"))
+    // The committed state the build continues from: the dir's manifest
+    // when resuming and it is readable, of this format and of this
+    // fingerprint; else none, a fresh build (an old index in the dir
+    // stays readable until the docstore step commits). Every step and
+    // postings batch commits it with its name in `build_done`, so a
+    // crashed build resumes at what that lacks.
+    var current: IndexManifest =
+      if (!cfg.resume) null
+      else ManifestIO.readForResume(s"$indexDir/manifest.json")
+        .filter(_.fingerprint == fingerprint).orNull
+    // what a crashed step or batch left: unlisted part files, writers'
+    // _temporary dirs, postings batches' staging dirs
+    if (current != null) IndexSchemas.sweep(indexDir, current)
+    Option(new java.io.File(indexDir).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("postings_staging_"))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    def done(name: String) =
+      current != null && current.build_done.contains(name)
+    def commit(m: IndexManifest): Unit = {
+      IndexSchemas.commit(indexDir, m)
+      current = m
     }
-    Files.createDirectories(fpPath.getParent)
-    Files.write(fpPath, fingerprint.getBytes(StandardCharsets.UTF_8))
 
     var run = Vector.empty[String]
     var skip = Vector.empty[String]
@@ -210,13 +204,15 @@ object IndexBuilder {
     val epochAnchor = System.currentTimeMillis()
     def monoMs(): Long = epochAnchor + (System.nanoTime() - t0) / 1000000L
 
-    def step[T](name: String)(body: => T): Unit =
-      if (cfg.resume && isDone(indexDir, name)) { skip :+= name }
+    // runs a step that is not done and commits the manifest it returns,
+    // marked done
+    def step(name: String)(body: => IndexManifest): Unit =
+      if (done(name)) { skip :+= name }
       else {
         val t = System.nanoTime()
         val ms0 = monoMs()
-        body
-        markDone(indexDir, name, s"input=$sfDir")
+        val m = body
+        commit(m.copy(build_done = m.build_done :+ name))
         stepWin :+= ((name, ms0, monoMs()))
         System.err.println(
           f"[build] step $name%-10s ${(System.nanoTime() - t) / 1e9}%.2fs")
@@ -236,14 +232,13 @@ object IndexBuilder {
     // write's range-partitioner sampling; the granule-hash exchange
     // needs no sampling at all.
     step("docstore") {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$indexDir/docstore"))
-      preAssigned match {
+      val (centroids, stats, docCounts, files) = preAssigned match {
         case Some(_) =>
-          docstorePreAssigned(spark, source, indexDir,
-            fixedCentroids.getOrElse(sys.error(
-              "preAssigned requires fixedCentroids")),
-            knownRows)
+          val centroids = fixedCentroids.getOrElse(sys.error(
+            "preAssigned requires fixedCentroids"))
+          val (stats, docCounts, files) =
+            docstorePreAssigned(spark, source, indexDir, centroids, knownRows)
+          (centroids, stats, docCounts, files)
         case None =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -335,7 +330,6 @@ object IndexBuilder {
         if (pre != null) pre
         else CoarseClusterer.fitLocal(sampleIds, kc, dist = cfg.distance)
       }
-      saveCentroids(indexDir, centroids)
       val parts = spark.sessionState.conf.numShufflePartitions
       val window = granuleWindow(n, parts)
       // granule weights estimated from the (deterministic) kmeans sample
@@ -347,18 +341,37 @@ object IndexBuilder {
         }
         .groupBy(identity).map { case (g, xs) => g -> xs.length.toLong }
         .toSeq
-      val (m, _) = try writeDocstore(dense.df, indexDir, centroids,
+      val (m, files) = try writeDocstore(dense.df, indexDir, centroids,
           cfg.distance, GranulePartitioner.slotMap(weights, parts), window,
           minId = 0L)
         finally dense.unpersist()
-      saveStats(indexDir,
-        CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-      saveDocCounts(indexDir, observedDocCounts(m, centroids.length))
+      (centroids, CorpusStats(n, m("sum_dl").asInstanceOf[Long], window),
+        observedDocCounts(m, centroids.length), files)
       }
+      IndexManifest(
+        version = ManifestIO.FormatVersion,
+        num_docs = stats.num_docs,
+        avgdl = stats.avgdl,
+        vocab_size = 0L,
+        kc = centroids.length,
+        feature_dim = CoarseClusterer.Dim,
+        k1 = Bm25.K1,
+        b = Bm25.B,
+        round_scale = Bm25.Scale,
+        distance = graft.cluster.Distance.name(cfg.distance),
+        granule_window = stats.granule_window,
+        centroids = centroids,
+        coarse_graph = Array.empty,
+        coarse_graph_upper = Array.empty,
+        lineage = InputLineage(sfDir, stats.num_docs),
+        partitions = partitionMetas(docCounts, Map.empty),
+        segments = Nil,
+        files = IndexFiles(files, Nil, Nil),
+        tombstones = Array.emptyLongArray,
+        stream_batch = -1L,
+        fingerprint = fingerprint,
+        build_done = Nil)
     }
-
-    def docstore = IndexSchemas.read(spark, s"$indexDir/docstore",
-      IndexSchemas.docstore, None)
 
     // ---- step 2: postings (blocks, no shuffle) --------------------------
     // BM25 factorizes as idf × g(tf, dl): blocks store the idf-free
@@ -366,44 +379,24 @@ object IndexBuilder {
     // (step 3) aggregates from block metadata — one tokenize pass total.
     // Per-PARTITION resumability (north_rule): clusters are built in
     // batches; each batch reads only its clusters' docstore partitions
-    // (partition pruning), writes its posting partitions, and commits a
-    // marker. A crashed build resumes at the first unfinished batch,
-    // first wiping that batch's partial partition dirs.
+    // (partition pruning), writes its posting partitions, and commits
+    // them in the manifest. A crashed build resumes at the batches the
+    // manifest lacks; the sweep has removed their uncommitted files.
     step("postings") {
-      val stats = loadStats(indexDir)
-      val avgdl = stats.avgdl
-      val kc = loadCentroids(indexDir).length
+      val m0 = current
       val parts = spark.sessionState.conf.numShufflePartitions
-      val batches = clusterBatches(kc, cfg.postingsBatches)
-      if (!cfg.resume) {
-        // fresh build: wipe all posting partitions + batch markers (a
-        // reused dir may hold state from a different kc)
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$indexDir/postings"))
-        val ck = new java.io.File(s"$indexDir/_checkpoints")
-        // batch markers AND per-batch cluster stats: a dir previously
-        // built with a different postingsBatches count would otherwise
-        // leave stale clusterstats_batch_*.json files that
-        // loadAllClusterStats sums into the manifest [ADVICE r2]
-        if (ck.isDirectory) ck.listFiles()
-          .filter(f => f.getName.startsWith("postings_batch_") ||
-            f.getName.startsWith("clusterstats_batch_"))
-          .foreach(_.delete())
-        saveSegments(indexDir, Seq.empty)
-      }
+      val batches = clusterBatches(m0.kc, cfg.postingsBatches)
       // batches are INDEPENDENT (disjoint clusters, own staging dir, own
       // marker), so pending ones are submitted CONCURRENTLY from driver
       // threads — the scheduler interleaves their stages and the
       // inter-batch barrier (idle cores at each batch's straggler tail)
       // disappears. Spark's FIFO scheduler backfills idle slots with the
-      // next job's tasks. Metadata checkpoint writes share `metaLock`.
+      // next job's tasks. Manifest commits share `metaLock`.
       val metaLock = new Object
       val pending = batches.zipWithIndex.flatMap { case (clusters, bi) =>
         val marker = s"postings_batch_$bi"
-        if (cfg.resume && isDone(indexDir, marker)) {
-          metaLock.synchronized { skip :+= marker }
-          None
-        } else Some((clusters, bi, bi * 10000))
+        if (done(marker)) { skip :+= marker; None }
+        else Some((clusters, bi, bi * 10000))
       }
       // ZERO-shuffle postings (r3): the docstore was WRITTEN from
       // granule-slot tasks sorted by (cluster_id, doc_id), so its files
@@ -437,52 +430,50 @@ object IndexBuilder {
       val jobs = pending.map { case (clusters, bi, segOffset) =>
         Future {
           val marker = s"postings_batch_$bi"
-          // each batch writes to its own staging dir (concurrent jobs
-          // must not share a FileOutputCommitter _temporary), then the
-          // driver installs its cluster dirs into postings/ — idempotent
-          // restart wipes partial moves first
+          // each batch writes to its own staging dir: concurrent jobs
+          // must not share a FileOutputCommitter _temporary
           val staging = s"$indexDir/postings_staging_$bi"
-          clusters.foreach { cid =>
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$indexDir/postings/cluster_id=$cid"))
-          }
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(staging))
           val (blocks, acc, cacc) = transformFrom match {
             case Some((srcDir, deadBc)) =>
               // decode→shift→re-encode the source index's blocks — no
               // content pass (see transformBlocks)
               val oldSlice = IndexSchemas.readPostings(spark, srcDir)
                 .filter(col("cluster_id").isin(clusters: _*))
-              transformBlocks(spark, oldSlice, deadBc, avgdl, segOffset,
-                stats.granule_window)
+              transformBlocks(spark, oldSlice, deadBc, m0.avgdl, segOffset,
+                m0.granule_window)
             case None =>
-              val slice = docstore
+              val slice = IndexSchemas.readDocstore(spark, indexDir, m0)
                 .filter(col("cluster_id").isin(clusters: _*))
-              encodeBlocks(spark, slice, avgdl, segOffset,
-                stats.granule_window)
+              encodeBlocks(spark, slice, m0.avgdl, segOffset,
+                m0.granule_window)
           }
           writeParts(blocks, staging)
-          installStaged(staging, s"$indexDir/postings")
           val segs = {
             import scala.jdk.CollectionConverters._
             acc.value.asScala.toSeq.sortBy(_.segment_id)
           }
           val cstats = {
             import scala.jdk.CollectionConverters._
-            cacc.value.asScala.toSeq.sortBy(_.cluster_id)
+            cacc.value.asScala.toSeq
           }
+          // install and commit under one lock: another batch's commit
+          // sweeps every postings file its manifest does not list
           metaLock.synchronized {
-            appendSegments(indexDir, segs, segOffset, segOffset + 10000)
-            saveClusterStats(indexDir, bi, cstats)
-            markDone(indexDir, marker,
-              s"input=$sfDir clusters=${clusters.mkString(",")}")
+            val installed = installStaged(staging, s"$indexDir/postings")
+            val m = current
+            commit(m.copy(
+              partitions = addToPartitions(m.partitions, Map.empty, cstats),
+              segments = (m.segments ++ segs).sortBy(_.segment_id),
+              files = m.files.copy(
+                postings = (m.files.postings ++ installed).sorted),
+              build_done = m.build_done :+ marker))
             run :+= marker
           }
         }
       }
       try jobs.foreach(Await.result(_, Duration.Inf))
       finally spark.conf.set(mpbKey, mpbPrev)
+      current
     }
 
     // ---- step 3: dictionary (df/cf/idf from block metadata) ------------
@@ -493,37 +484,38 @@ object IndexBuilder {
     // serially inside the manifest step [VERDICT r5 #6].
     val graphF: Option[scala.concurrent.Future[
         (Array[Array[Int]], Array[Array[Array[Int]]])]] =
-      if (cfg.resume && isDone(indexDir, "manifest")) None
+      if (done("manifest")) None
       else Some {
         import scala.concurrent.ExecutionContext.Implicits.global
+        val centroids = current.centroids
         scala.concurrent.Future {
           graft.cluster.GraphCoarseSearch.buildGraph(
-            loadCentroids(indexDir), metric = cfg.distance)
+            centroids, metric = cfg.distance)
         }
       }
     step("dictionary") {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$indexDir/dictionary"))
-      saveVocab(indexDir, writeDictionary(spark, indexDir, None,
-        loadStats(indexDir).num_docs)._1)
+      val m = current
+      val (vocab, files) =
+        writeDictionary(spark, indexDir, m.files.postings, m.num_docs)
+      m.copy(vocab_size = vocab, files = m.files.copy(dictionary = files))
     }
 
-    // ---- step 4: manifest (ZERO jobs: assembled from the stats the
-    // earlier steps observed/accumulated — doc counts from the docstore
-    // write observation, block stats from the encode accumulator, vocab
-    // from the dictionary write observation) -----------------------------
+    // ---- step 4: manifest (ZERO jobs: every stat is already in the
+    // manifest, observed or accumulated by the jobs of the earlier
+    // steps; this step adds the coarse graph built while the dictionary
+    // job ran) ------------------------------------------------------------
     step("manifest") {
+      // one graph build, both regimes (exact kNN edges below
+      // ExactKnnMax, layered incremental insert above), under the
+      // index's own coarse metric so the sub-linear probe works for any
+      // Dc (the reference's HierarchicalNSW carries D the same way,
+      // /root/reference/src/coarsequantizers.jl:59-60) [VERDICT r3]
       // graphF is defined exactly when this step runs
-      writeManifest(indexDir, sfDir, graft.cluster.Distance.name(cfg.distance),
-        scala.concurrent.Await.result(
-          graphF.get, scala.concurrent.duration.Duration.Inf))
+      val (edges, upper) = scala.concurrent.Await.result(
+        graphF.get, scala.concurrent.duration.Duration.Inf)
+      current.copy(coarse_graph = edges, coarse_graph_upper = upper)
     }
 
-    // a resumed build that re-ran a step under the manifest it kept
-    // re-lists the files the step wrote
-    if (run.nonEmpty && !run.contains("manifest"))
-      ManifestIO.write(s"$indexDir/manifest.json", ManifestIO.read(
-        s"$indexDir/manifest.json").copy(files = tableFiles(indexDir)))
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
     val totalMillis = (System.nanoTime() - t0) / 1000000L
     BuildResult(manifest, totalMillis,
@@ -547,17 +539,17 @@ object IndexBuilder {
     * The write observation's row count is REQUIRED to equal knownRows:
     * a wrong caller-side id shift cannot silently produce a plausible
     * index. Zero rows (compacting a fully tombstoned index) give an
-    * empty docstore.
+    * empty docstore. Returns the corpus stats, the per-cluster doc counts
+    * and the part files written.
     */
   private def docstorePreAssigned(
       spark: SparkSession,
       source: DataFrame,
       indexDir: String,
       centroids: Array[Array[Double]],
-      knownRows: Long): Unit = {
+      knownRows: Long): (CorpusStats, Map[Int, Long], Seq[String]) = {
     require(knownRows >= 0, "preAssigned requires exact knownRows >= 0")
     val kc = centroids.length
-    saveCentroids(indexDir, centroids)
     val parts = spark.sessionState.conf.numShufflePartitions
     val window = granuleWindow(knownRows, parts)
     val obs = Observation()
@@ -574,7 +566,7 @@ object IndexBuilder {
     // anywhere. Stored content_sha rides through unchanged (it is
     // already materialized — re-deriving it would cost n sha2 calls to
     // save nothing).
-    writeParts(source
+    val files = writeParts(source
       .observe(obs, metrics.head, metrics.tail: _*)
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
       .select("doc_id", "repo", "path", "commit", "lang",
@@ -587,9 +579,8 @@ object IndexBuilder {
         "the caller's id shift and the source disagree")
     require(m("min_id").asInstanceOf[Long] >= 0,
       "preAssigned ids must be dense non-negative")
-    saveStats(indexDir,
-      CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-    saveDocCounts(indexDir, observedDocCounts(m, kc))
+    (CorpusStats(n, m("sum_dl").asInstanceOf[Long], window),
+      observedDocCounts(m, kc), files)
   }
 
   /** The docstore write of the build and of an append into
@@ -681,20 +672,25 @@ object IndexBuilder {
 
   /** Moves the files of every `cluster_id=*` directory under `staging`
     * into the same-named directory under `live` (created when missing),
-    * then deletes `staging`. Part-file names carry their write job's id,
-    * so files installed beside existing ones never collide.
+    * then deletes `staging`; returns the part files moved, relative to
+    * `live`. Part-file names carry their write job's id, so files
+    * installed beside existing ones never collide.
     */
-  private[graft] def installStaged(staging: String, live: String): Unit = {
+  private[graft] def installStaged(staging: String, live: String): Seq[String] = {
     Files.createDirectories(Paths.get(live))
     val dir = new java.io.File(staging)
-    dir.listFiles()
+    val moved = dir.listFiles().toSeq
       .filter(d => d.isDirectory && d.getName.startsWith("cluster_id="))
-      .foreach { d =>
+      .flatMap { d =>
         val target = Files.createDirectories(Paths.get(live, d.getName))
-        d.listFiles().foreach(f =>
-          Files.move(f.toPath, target.resolve(f.getName)))
+        d.listFiles().toSeq.flatMap { f =>
+          Files.move(f.toPath, target.resolve(f.getName))
+          if (f.getName.startsWith("part-")) Some(s"${d.getName}/${f.getName}")
+          else None
+        }
       }
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    moved
   }
 
   /** What every docstore write observes (build, compaction, append):
@@ -711,14 +707,6 @@ object IndexBuilder {
   private[graft] def observedDocCounts(m: Map[String, Any], kc: Int): Map[Int, Long] =
     (0 until kc).map(c => c -> m(s"c$c").asInstanceOf[Long])
       .filter(_._2 > 0).toMap
-
-  // centroids + segment metrics stashed as JSON between steps (part of
-  // the checkpoint state a resumed build reloads)
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m
-  }
 
   /** The B6 heart: stored docstore rows → posting rows (one char-scan
     * tokenize pass) → sorted runs per (cluster, granule, term) →
@@ -935,12 +923,13 @@ object IndexBuilder {
     * no content pass. Map-side partial aggregation already spreads
     * stop-word-heavy terms (each reducer key receives pre-combined
     * partials per task — the effect salting gives non-combinable aggs).
-    * Also used by maintenance to refresh idf over the `postings` files
-    * its new snapshot lists (None: the whole dir, a build's). Returns the
-    * vocabulary size, observed on the write, and the files written.
+    * Reads the `postings` files (relative to the postings dir) of the
+    * snapshot being written: a build's, or a maintenance refresh's.
+    * Returns the vocabulary size, observed on the write, and the files
+    * written.
     */
   def writeDictionary(spark: SparkSession, indexDir: String,
-      postings: Option[Seq[String]], n: Long): (Long, Seq[String]) = {
+      postings: Seq[String], n: Long): (Long, Seq[String]) = {
     val obs = Observation()
     // read-task sizing: the scan touches three tiny metadata columns of
     // the postings files; the session's fine-grained maxPartitionBytes
@@ -949,8 +938,7 @@ object IndexBuilder {
     val mpbKey = "spark.sql.files.maxPartitionBytes"
     val mpbPrev = spark.conf.get(mpbKey)
     val dir = s"$indexDir/postings"
-    val postingsBytes = postings.getOrElse(IndexSchemas.partFiles(dir))
-      .map(f => Files.size(Paths.get(dir, f))).sum
+    val postingsBytes = postings.map(f => Files.size(Paths.get(dir, f))).sum
     val parts = spark.sessionState.conf.numShufflePartitions
     spark.conf.set(mpbKey,
       math.max(4L << 20, postingsBytes / math.max(1, parts)).toString)
@@ -964,53 +952,6 @@ object IndexBuilder {
       finally spark.conf.set(mpbKey, mpbPrev)
     (obs.get("vocab").asInstanceOf[Long], files)
   }
-
-  /** Writes the build's manifest from the stats its steps observed and
-    * accumulated — ZERO jobs: doc counts from the docstore write
-    * observation, block stats from the encode accumulators, vocab from
-    * the dictionary write observation, the coarse graph built while the
-    * dictionary job ran, the live files from a walk of the table dirs.
-    * Maintenance edits a copy of the manifest it read instead.
-    */
-  private def writeManifest(indexDir: String, lineageName: String,
-      distanceName: String,
-      // one graph build, both regimes (exact kNN edges below
-      // ExactKnnMax, layered incremental insert above), under the
-      // index's own coarse metric so the sub-linear probe works for any
-      // Dc (the reference's HierarchicalNSW carries D the same way,
-      // /root/reference/src/coarsequantizers.jl:59-60) [VERDICT r3]
-      coarseGraph: (Array[Array[Int]], Array[Array[Array[Int]]])): Unit = {
-    val stats = loadStats(indexDir)
-    val centroids = loadCentroids(indexDir)
-    val manifest = IndexManifest(
-      version = ManifestIO.FormatVersion,
-      num_docs = stats.num_docs,
-      avgdl = stats.avgdl,
-      vocab_size = loadVocab(indexDir),
-      kc = centroids.length,
-      feature_dim = CoarseClusterer.Dim,
-      k1 = Bm25.K1,
-      b = Bm25.B,
-      round_scale = Bm25.Scale,
-      distance = distanceName,
-      granule_window = stats.granule_window,
-      centroids = centroids,
-      coarse_graph = coarseGraph._1,
-      coarse_graph_upper = coarseGraph._2,
-      coarse_graph_metric = distanceName,
-      lineage = InputLineage(lineageName, stats.num_docs),
-      partitions = partitionMetas(loadDocCounts(indexDir),
-        loadAllClusterStats(indexDir)),
-      segments = loadSegments(indexDir),
-      files = tableFiles(indexDir))
-    ManifestIO.write(s"$indexDir/manifest.json", manifest)
-  }
-
-  /** What a build wrote: every part file of its three table dirs. */
-  private def tableFiles(indexDir: String): IndexFiles = IndexFiles(
-    IndexSchemas.partFiles(s"$indexDir/docstore"),
-    IndexSchemas.partFiles(s"$indexDir/postings"),
-    IndexSchemas.partFiles(s"$indexDir/dictionary"))
 
   /** Manifest partitions: one per cluster holding docs, its block stats
     * from `clusterStats` (none = an empty posting partition).
@@ -1040,8 +981,19 @@ object IndexBuilder {
         cs.map(_.bytes).sum, cs.map(_.build_millis).sum)
     }
 
+  /** `partitions` with `docCounts` more docs and the blocks of `stats`
+    * added per cluster.
+    */
+  private[graft] def addToPartitions(partitions: Seq[PartitionMeta],
+      docCounts: Map[Int, Long], stats: Seq[ClusterStat]): Seq[PartitionMeta] =
+    partitionMetas(
+      (partitions.map(p => p.cluster_id -> p.num_docs) ++ docCounts)
+        .groupMapReduce(_._1)(_._2)(_ + _),
+      sumClusterStats(partitions.map(p => ClusterStat(p.cluster_id,
+        p.num_postings, p.num_blocks, p.bytes, p.build_millis)) ++ stats))
+
   /** Corpus stats observed once on the docstore write job (exact Long
-    * sum → deterministic avgdl) and reused by every later step.
+    * sum → deterministic avgdl) and carried into the manifest.
     * `granule_window` fixes the (cluster, doc_id div W) granule scheme
     * for the whole index lifetime — appends reuse it so query-side
     * granule splits stay valid across segments.
@@ -1050,92 +1002,5 @@ object IndexBuilder {
       granule_window: Long = 1L) {
     // an empty index has no mean length; 0 keeps NaN out of the manifest
     def avgdl: Double = if (num_docs == 0) 0.0 else sum_dl.toDouble / num_docs
-  }
-
-  private def saveStats(indexDir: String, s: CorpusStats): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "stats.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(s))
-  }
-
-  def loadStats(indexDir: String): CorpusStats =
-    mapper.readValue(
-      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "stats.json")),
-      classOf[CorpusStats])
-
-  private def saveDocCounts(indexDir: String, m: Map[Int, Long]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "doccounts.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(
-      m.toSeq.sortBy(_._1).map { case (k, v) => Array(k.toLong, v) }.toArray))
-  }
-
-  private def loadDocCounts(indexDir: String): Map[Int, Long] =
-    mapper.readValue(
-      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "doccounts.json")),
-      classOf[Array[Array[Long]]])
-      .map(a => a(0).toInt -> a(1)).toMap
-
-  private def saveVocab(indexDir: String, vocab: Long): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "vocab.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(vocab))
-  }
-
-  private def loadVocab(indexDir: String): Long =
-    mapper.readValue(
-      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "vocab.json")),
-      classOf[Long])
-
-  /** Per-batch cluster encode stats (a rerun batch overwrites its own
-    * file; clusters never span batches, so merging = concatenation).
-    */
-  private def saveClusterStats(indexDir: String, batch: Int,
-      stats: Seq[ClusterStat]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", s"clusterstats_batch_$batch.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(stats.toArray))
-  }
-
-  private def loadAllClusterStats(indexDir: String): Map[Int, ClusterStat] =
-    sumClusterStats(Paths.get(indexDir, "_checkpoints").toFile.listFiles()
-      .filter(_.getName.startsWith("clusterstats_batch_"))
-      .sortBy(_.getName).toSeq
-      .flatMap(f => mapper.readValue(Files.readAllBytes(f.toPath),
-        classOf[Array[ClusterStat]])))
-
-  private def saveCentroids(indexDir: String, c: Array[Array[Double]]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "centroids.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(c))
-  }
-
-  def loadCentroids(indexDir: String): Array[Array[Double]] =
-    mapper.readValue(
-      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "centroids.json")),
-      classOf[Array[Array[Double]]])
-
-  private def saveSegments(indexDir: String, segs: Seq[SegmentMeta]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "segments.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(segs.toArray))
-  }
-
-  /** Merge new segment metas into the checkpoint: a (re-)run batch
-    * replaces its ENTIRE segment-id range [from, until).
-    */
-  private def appendSegments(indexDir: String, segs: Seq[SegmentMeta],
-      from: Int, until: Int): Unit = {
-    val merged = (loadSegments(indexDir)
-      .filterNot(s => s.segment_id >= from && s.segment_id < until)
-      ++ segs).sortBy(_.segment_id)
-    saveSegments(indexDir, merged)
-  }
-
-  private def loadSegments(indexDir: String): Seq[SegmentMeta] = {
-    val p = Paths.get(indexDir, "_checkpoints", "segments.json")
-    if (!Files.exists(p)) Seq.empty
-    else mapper.readValue(Files.readAllBytes(p),
-      classOf[Array[SegmentMeta]]).toSeq
   }
 }

@@ -37,34 +37,30 @@ object IndexSchemas {
   // manifest when none is given: a query passes the one it planned with
   def readDocstore(spark: SparkSession, indexDir: String,
       m: IndexManifest = null): DataFrame =
-    read(spark, s"$indexDir/docstore", docstore, Some(files(indexDir, m).docstore))
+    read(spark, s"$indexDir/docstore", docstore, files(indexDir, m).docstore)
 
   def readPostings(spark: SparkSession, indexDir: String,
       m: IndexManifest = null): DataFrame =
-    read(spark, s"$indexDir/postings", postings, Some(files(indexDir, m).postings))
+    read(spark, s"$indexDir/postings", postings, files(indexDir, m).postings)
 
   def readDictionary(spark: SparkSession, indexDir: String,
       m: IndexManifest = null): DataFrame =
     read(spark, s"$indexDir/dictionary", dictionary,
-      Some(files(indexDir, m).dictionary))
+      files(indexDir, m).dictionary)
 
   private def files(indexDir: String, m: IndexManifest): IndexFiles =
     Option(m).getOrElse(ManifestIO.read(s"$indexDir/manifest.json")).files
 
-  /** The table dir `dir`: only `files` (relative to `dir`) when given,
-    * else every file in it (a build reading what it has just written).
-    * The names are qualified the way Spark reports `_metadata.file_path`.
+  /** The `files` (relative to `dir`) of the table dir `dir`, qualified
+    * the way Spark reports `_metadata.file_path`.
     */
   private[graft] def read(spark: SparkSession, dir: String, schema: StructType,
-      files: Option[Seq[String]]): DataFrame = {
-    val all = spark.read.schema(schema).parquet(dir)
-    files.fold(all) { fs =>
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val base = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(root)
-      all.filter(col("_metadata.file_path").isin(
-        fs.map(f => new org.apache.hadoop.fs.Path(base, f).toUri.toString): _*))
-    }
+      files: Seq[String]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val base = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root)
+    spark.read.schema(schema).parquet(dir).filter(col("_metadata.file_path")
+      .isin(files.map(f => new org.apache.hadoop.fs.Path(base, f).toUri.toString): _*))
   }
 
   /** Part files under table dir `dir`, relative to it and sorted, outside

@@ -26,14 +26,11 @@ object Distance {
   /** Strict resolution: an unknown metric name must FAIL, not silently
     * fall back to SqEuclidean — a third metric's index would otherwise
     * cluster docs under its own metric but rank centroid probes under
-    * SqEuclidean, degrading w<kc recall with no error (the silent-
-    * mismatch class the coarse_graph_metric stamp exists to prevent).
-    * "" is the pre-r5 manifest default, when SqEuclidean was the only
-    * metric — legacy indexes stay loadable.
+    * SqEuclidean, degrading w<kc recall with no error.
     */
   def byName(s: String): Distance = s match {
     case "cosine" => Cosine
-    case "sqeuclidean" | "" => SqEuclidean
+    case "sqeuclidean" => SqEuclidean
     case other => throw new IllegalArgumentException(
       s"unknown distance '$other': register it in Distance.byName/name " +
         "before persisting indexes built under it")

@@ -143,15 +143,6 @@ object GraphCoarseSearch {
     * save/load, /root/reference/src/persistency.jl:163-241); layered
     * incremental insert beyond [[ExactKnnMax]] [VERDICT r2 #9].
     */
-  /** Graph over `centroids` under `metric` (ONE layered build in the
-    * large regime) — the searcher's rebuild path for pre-r2 manifests.
-    */
-  def apply(centroids: Array[Array[Double]], numNeighbors: Int = 8,
-      metric: Distance = Distance.SqEuclidean): GraphCoarseSearch = {
-    val (e, u) = buildGraph(centroids, numNeighbors, metric)
-    new GraphCoarseSearch(centroids, e, u, metric)
-  }
-
   def buildEdges(
       centroids: Array[Array[Double]],
       numNeighbors: Int = 8,

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{ClusterStat, IndexBuilder, IndexManifest, IndexSchemas, ManifestIO}
+import graft.build.{IndexBuilder, IndexManifest, IndexSchemas, ManifestIO}
 import graft.sources.Corpus
 
 /** Incremental index maintenance — the graft of the reference's point
@@ -84,7 +84,7 @@ object Maintenance {
     // appended segments REUSE the base build's granule window so every
     // block — old or new — stays inside one (cluster, window) granule
     // and query-side granule splits remain safe
-    val window = graft.plans.BlockScan.window(manifest)
+    val window = manifest.granule_window
     val dense = Corpus.docsFromCounted(newSource,
       idOffset = manifest.num_docs)
     // an empty batch adds nothing
@@ -107,27 +107,21 @@ object Maintenance {
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
     val (blocks, acc, cacc) = IndexBuilder.encodeBlocks(spark,
       IndexSchemas.read(spark, s"$indexDir/docstore", IndexSchemas.docstore,
-        Some(docFiles)),
+        docFiles),
       avgdl, segOffset, window)
     val postings = manifest.files.postings ++
       IndexBuilder.writeParts(blocks, s"$indexDir/postings")
 
     val nNew = manifest.num_docs + dense.numRows
     val (vocab, dictionary) =
-      IndexBuilder.writeDictionary(spark, indexDir, Some(postings), nNew)
-    val old = manifest.partitions
+      IndexBuilder.writeDictionary(spark, indexDir, postings, nNew)
     IndexSchemas.commit(indexDir, manifest.copy(
       num_docs = nNew,
       avgdl = avgdl,
       vocab_size = vocab,
       lineage = manifest.lineage.copy(num_source_rows = nNew),
-      partitions = IndexBuilder.partitionMetas(
-        (old.map(p => p.cluster_id -> p.num_docs) ++
-          IndexBuilder.observedDocCounts(m, manifest.kc))
-          .groupMapReduce(_._1)(_._2)(_ + _),
-        IndexBuilder.sumClusterStats(old.map(p => ClusterStat(p.cluster_id,
-          p.num_postings, p.num_blocks, p.bytes, p.build_millis)) ++
-          cacc.value.asScala)),
+      partitions = IndexBuilder.addToPartitions(manifest.partitions,
+        IndexBuilder.observedDocCounts(m, manifest.kc), cacc.value.asScala.toSeq),
       segments = (manifest.segments ++ acc.value.asScala)
         .sortBy(_.segment_id),
       files = manifest.files.copy(docstore = manifest.files.docstore ++ docFiles,
@@ -162,12 +156,12 @@ object Maintenance {
       IndexSchemas.readPostings(spark, indexDir, manifest)
         .repartition(col("cluster_id")),
       spark.sparkContext.broadcast(Array.emptyLongArray), avgdl,
-      segmentOffset = 0, graft.plans.BlockScan.window(manifest))
+      segmentOffset = 0, manifest.granule_window)
     val postings = IndexBuilder.writeParts(merged, s"$indexDir/postings")
 
     // docs and their clusters are unchanged; blocks and segments are new
     val (vocab, dictionary) =
-      IndexBuilder.writeDictionary(spark, indexDir, Some(postings), n)
+      IndexBuilder.writeDictionary(spark, indexDir, postings, n)
     IndexSchemas.commit(indexDir, manifest.copy(
       num_docs = n,
       avgdl = avgdl,

@@ -71,21 +71,14 @@ case class BlockScan(
 
 object BlockScan {
 
-  /** The index's granule window: `(cluster_id, doc_id div window)` is the
-    * build's granule key and every posting block lies inside one
-    * granule. A pre-r2 manifest has no window (0): one unbounded window.
-    */
-  def window(manifest: IndexManifest): Long =
-    if (manifest.granule_window > 0) manifest.granule_window
-    else Long.MaxValue
-
   /** `kernel` over the posting blocks of `terms` in the files `manifest`
     * lists — restricted to
     * `clusters` when the caller probes (partition pruning), `term`
     * pushed down, only the kernel's columns read. `_split` spreads a hot
     * cluster over up to `splitsPerCluster` tasks; it is a function of
-    * the granule, so it never cuts a doc's blocks apart (pre-r2
-    * manifests: one split).
+    * the granule (`(cluster_id, doc_id div granule_window)`, the
+    * build's granule key; every posting block lies inside one granule),
+    * so it never cuts a doc's blocks apart.
     */
   def frame(
       spark: SparkSession,
@@ -95,14 +88,14 @@ object BlockScan {
       terms: Seq[String],
       clusters: Option[Seq[Int]],
       splitsPerCluster: Int): DataFrame = {
-    val splits = if (manifest.granule_window > 0) splitsPerCluster else 1
     val inClusters =
       clusters.fold(lit(true))(cs => col("cluster_id").isin(cs: _*))
     val blocks = IndexSchemas.readPostings(spark, indexDir, manifest)
       .filter(inClusters && col("term").isin(terms: _*))
       .select(kernel.columns.map(col): _*)
       .withColumn("_split",
-        pmod(expr(s"first_doc div ${window(manifest)}"), lit(splits)))
+        pmod(expr(s"first_doc div ${manifest.granule_window}"),
+          lit(splitsPerCluster)))
     BlockScanStrategy.setup(spark)
     GraftColumnBridge.ofRows(spark, BlockScan(kernel,
       StructType.fromDDL(kernel.output)

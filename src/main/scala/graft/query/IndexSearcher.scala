@@ -56,37 +56,6 @@ object IndexSearcher {
     */
   val GraphProbeKcThreshold = 64
 
-  /** Memo for graphs REBUILT at query time (manifest has no usable
-    * persisted adjacency: pre-r2, or a metric-mismatched stamp): the
-    * deterministic driver-side rebuild is paid once per (indexDir,
-    * metric) per JVM instead of once per query batch. Maintenance
-    * rewrites land in NEW dirs, but an in-place full rebuild (bench
-    * passes) can change a dir's centroids — the cached entry is
-    * verified against the manifest's centroids and replaced on
-    * mismatch, so a stale graph is unrepresentable. Bounded: cleared
-    * wholesale past 16 dirs (rebuilds are cheap relative to unbounded
-    * growth).
-    */
-  private val rebuiltGraphs = new java.util.concurrent.ConcurrentHashMap[
-    (String, String),
-    (Array[Array[Double]], graft.cluster.GraphCoarseSearch)]()
-
-  private def rebuiltGraph(indexDir: String, metricName: String,
-      centroids: Array[Array[Double]], metric: graft.cluster.Distance):
-      graft.cluster.GraphCoarseSearch = {
-    val key = (indexDir, metricName)
-    val cached = rebuiltGraphs.get(key)
-    if (cached != null && java.util.Arrays.deepEquals(
-        cached._1.asInstanceOf[Array[AnyRef]],
-        centroids.asInstanceOf[Array[AnyRef]])) cached._2
-    else {
-      val g = graft.cluster.GraphCoarseSearch(centroids, metric = metric)
-      if (rebuiltGraphs.size >= 16) rebuiltGraphs.clear()
-      rebuiltGraphs.put(key, (centroids, g))
-      g
-    }
-  }
-
   def topK(
       spark: SparkSession,
       indexDir: String,
@@ -112,22 +81,9 @@ object IndexSearcher {
     // (r4; it used to be SqEuclidean-only with a silent naive fallback
     // for any other Dc — exactly when the sub-linear probe mattered)
     val useGraph = graphProbe.getOrElse(kc > GraphProbeKcThreshold)
-    // P2: the persisted adjacency when present AND built under this
-    // index's metric, else a deterministic rebuild. A manifest recording
-    // no build metric ("" — pre-r5) is trusted only for sqeuclidean:
-    // every earlier builder built SqEuclidean edges for that case, while
-    // a non-sqeuclidean index with an unstamped graph may hold pre-r4
-    // SqEuclidean edges whose probe would silently degrade recall
-    // [ADVICE r4]
-    val graphMetricOk =
-      manifest.coarse_graph_metric == manifest.distance ||
-        (manifest.coarse_graph_metric.isEmpty &&
-          manifest.distance == "sqeuclidean")
-    lazy val graph =
-      if (manifest.coarse_graph.nonEmpty && graphMetricOk)
-        new graft.cluster.GraphCoarseSearch(centroids, manifest.coarse_graph,
-          manifest.coarse_graph_upper, metric)
-      else rebuiltGraph(indexDir, manifest.distance, centroids, metric)
+    // P2: the persisted adjacency, built under the index's metric
+    lazy val graph = new graft.cluster.GraphCoarseSearch(centroids,
+      manifest.coarse_graph, manifest.coarse_graph_upper, metric)
     val parsed = queries.map { case (qid, terms) =>
       val withQtf = terms.groupBy(identity).toArray
         .map { case (t, occ) => (t, occ.length) }

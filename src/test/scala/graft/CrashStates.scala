@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import graft.build.{IndexBuilder, IndexManifest}
+
 /** Crash states of an index mutation, built from files alone: a crash
   * before the commit leaves the pre-mutation files plus some of the
   * mutation's new files under the pre-mutation manifest; a crash after
@@ -47,6 +49,33 @@ object CrashStates {
     val gained = (files(copy) -- files(dir)).toSeq.sorted
     copyFiles(copy, dir, rnd.fold(gained)(r => gained.filter(_ => r.nextBoolean())))
     copy
+  }
+
+  /** The manifest a build of `m`'s config commits once every postings
+    * batch but `batch` is done: without `batch`'s postings files,
+    * segments and cluster stats, and without the dictionary and the
+    * coarse graph.
+    */
+  def postingsBatchPending(m: IndexManifest, batchesCfg: Int,
+      batch: Int): IndexManifest = {
+    val batches = IndexBuilder.clusterBatches(m.kc, batchesCfg)
+    val clusters = batches(batch).toSet
+    val segs = batch * 10000 until (batch + 1) * 10000
+    m.copy(
+      vocab_size = 0L,
+      coarse_graph = Array.empty,
+      coarse_graph_upper = Array.empty,
+      partitions = m.partitions.map(p =>
+        if (clusters(p.cluster_id)) IndexBuilder.partitionMetas(
+          Map(p.cluster_id -> p.num_docs), Map.empty).head
+        else p),
+      segments = m.segments.filterNot(s => segs.contains(s.segment_id)),
+      files = m.files.copy(
+        postings = m.files.postings.filterNot(f =>
+          clusters(f.stripPrefix("cluster_id=").takeWhile(_ != '/').toInt)),
+        dictionary = Nil),
+      build_done = "docstore" +: batches.indices.filter(_ != batch)
+        .map(b => s"postings_batch_$b"))
   }
 
   /** Runs `mutate` on `dir`, calls `committed` on the committed index,

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.build.{IndexBuilder, ManifestIO}
+import graft.build.{IndexBuilder, IndexSchemas, ManifestIO}
 import graft.query.{Bm25SqlPath, IndexSearcher, QuerySet}
 import graft.sources.Corpus
 
@@ -74,19 +74,16 @@ class IndexSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
 
     // simulate a crash mid-postings: batch 1 (clusters 2,3) incomplete
-    Files.delete(java.nio.file.Paths.get(dir, "_checkpoints", "postings.done"))
-    Files.delete(java.nio.file.Paths.get(dir, "_checkpoints", "postings_batch_1.done"))
-    Seq(2, 3).foreach { cid =>
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$dir/postings/cluster_id=$cid"))
-    }
+    IndexSchemas.commit(dir, CrashStates.postingsBatchPending(
+      ManifestIO.read(s"$dir/manifest.json"), 4, 1))
 
     val res = IndexBuilder.build(spark, sf0001, dir,
       IndexBuilder.BuildConfig(kc = 8, resume = true, postingsBatches = 4))
-    assert(res.stepsRun.toSet == Set("postings_batch_1", "postings"))
+    assert(res.stepsRun.toSet ==
+      Set("postings_batch_1", "postings", "dictionary", "manifest"))
     assert(res.stepsSkipped.toSet ==
       Set("docstore", "postings_batch_0", "postings_batch_2",
-        "postings_batch_3", "dictionary", "manifest"))
+        "postings_batch_3"))
 
     val after = IndexSearcher.topK(spark, dir, QuerySet.queries.take(5), 10)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -94,8 +91,10 @@ class IndexSpec extends SparkSpec {
   }
 
   test("resume: deleting one checkpoint re-runs only that step") {
-    ManifestIO.read(s"$indexDir/manifest.json")
-    Files.delete(java.nio.file.Paths.get(indexDir, "_checkpoints", "manifest.done"))
+    val m = ManifestIO.read(s"$indexDir/manifest.json")
+    IndexSchemas.commit(indexDir, m.copy(coarse_graph = Array.empty,
+      coarse_graph_upper = Array.empty,
+      build_done = m.build_done.filterNot(_ == "manifest")))
     val res = IndexBuilder.build(spark, sf0001, indexDir,
       IndexBuilder.BuildConfig(resume = true))
     assert(res.stepsRun == Seq("manifest"))

@@ -152,7 +152,6 @@ class MaintenanceSpec extends SparkSpec {
       built.coarse_graph.map(_.toSeq).toSeq)
     assert(m.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq ==
       built.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq)
-    assert(m.coarse_graph_metric == built.coarse_graph_metric)
   }
 
   test("segment merge consolidates appended blocks and refreshes avgdl") {

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.build.{IndexBuilder, ManifestIO}
 import graft.cluster.Distance
-import graft.maintain.Maintenance
 import graft.ops.Dedup
 import graft.parity.{IvfAdc, Pq}
 import graft.sources.Corpus
@@ -427,28 +426,5 @@ class Round3Spec extends SparkSpec {
     assert(edges.map(_.toSeq).toSeq == e2.map(_.toSeq).toSeq)
     assert(upper.map(_.map(_.toSeq).toSeq).toSeq ==
       u2.map(_.map(_.toSeq).toSeq).toSeq)
-  }
-
-  // ------------------------------------------------------------------
-  // merge preserves the granule window in the stats checkpoint [ADVICE r2]
-  // ------------------------------------------------------------------
-
-  private def newBatch(n: Int) = {
-    import spark.implicits._
-    (0 until n).map(i =>
-      (s"repo-new", f"src/new/$i%03d.scala", f"c$i%012d", "scala",
-        s"object New$i { val fresh = $i; def batch = ${i * 7} }"))
-      .toDF("repo", "path", "commit", "lang", "content")
-  }
-
-  test("mergeSegments keeps stats.granule_window == manifest.granule_window") {
-    val dir = Files.createTempDirectory("graft-r3-merge").toString
-    IndexBuilder.build(spark, sf0001, dir,
-      IndexBuilder.BuildConfig(resume = false))
-    Maintenance.append(spark, dir, newBatch(3))
-    Maintenance.mergeSegments(spark, dir)
-    val m = ManifestIO.read(s"$dir/manifest.json")
-    assert(m.granule_window > 0)
-    assert(IndexBuilder.loadStats(dir).granule_window == m.granule_window)
   }
 }

@@ -45,8 +45,9 @@ class Round4Spec extends SparkSpec {
     // rank identity of the probe itself under cosine needs a complete
     // graph (an 8-NN DIGRAPH need not reach every node, so ef=kc is
     // exact only when traversal can): numNeighbors = kc-1
-    val g = GraphCoarseSearch(m.centroids,
+    val (edges, upper) = GraphCoarseSearch.buildGraph(m.centroids,
       numNeighbors = m.centroids.length - 1, metric = Distance.Cosine)
+    val g = new GraphCoarseSearch(m.centroids, edges, upper, Distance.Cosine)
     (0 until 10).foreach { s =>
       val q = Array.tabulate(graft.cluster.CoarseClusterer.Dim)(i =>
         ((i * 31 + s * 17) % 7).toDouble)

@@ -73,34 +73,6 @@ class Round5Spec extends SparkSpec {
     assert(moved == 0, s"$moved docs changed cluster across compaction")
   }
 
-  test("unstamped persisted graph under non-sqeuclidean metric is rebuilt") {
-    import graft.cluster.Distance
-    import graft.query.IndexSearcher
-    val dir = Files.createTempDirectory("graft-r5-graphmetric").toString
-    IndexBuilder.build(spark, sf0001, dir,
-      IndexBuilder.BuildConfig(resume = false, kc = 96,
-        distance = Distance.Cosine))
-    val m = ManifestIO.read(s"$dir/manifest.json")
-    assert(m.coarse_graph_metric == "cosine") // r5 manifests stamp it
-    val queries = Seq(1 -> Seq("def", "return", "value"),
-      2 -> Seq("import", "class"))
-    val intact = IndexSearcher
-      .topK(spark, dir, queries, 5, w = 4, graphProbe = Some(true))
-      .collect().toSeq
-    // simulate a pre-r5 manifest whose persisted edges were built under
-    // a DIFFERENT metric: degenerate adjacency + no stamp. The searcher
-    // must ignore the persisted graph and rebuild deterministically
-    // under manifest.distance — results identical to the intact index.
-    ManifestIO.write(s"$dir/manifest.json", m.copy(
-      coarse_graph = m.coarse_graph.map(_ => Array.empty[Int]),
-      coarse_graph_upper = Array.empty,
-      coarse_graph_metric = ""))
-    val rebuilt = IndexSearcher
-      .topK(spark, dir, queries, 5, w = 4, graphProbe = Some(true))
-      .collect().toSeq
-    assert(rebuilt == intact)
-  }
-
   test("DerivedFrameCache: identity hits, tag separation, bounded eviction unpersists") {
     import spark.implicits._
     import graft.ops.DerivedFrameCache

@@ -48,7 +48,6 @@ class Round6Spec extends SparkSpec {
       assert(m.coarse_graph.map(_.toSeq).toSeq == edges.map(_.toSeq).toSeq)
       assert(m.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq ==
         upper.map(_.map(_.toSeq).toSeq).toSeq)
-      assert(m.coarse_graph_metric == m.distance)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(dir))
   }
