@@ -114,16 +114,16 @@ object IndexBuilder {
   }
 
   /** Build from any F1-shaped source DataFrame; `idOrder` defines the
-    * dense docID order (compaction passes the old id).
+    * dense docID order (prepend puts its new docs first, then the old
+    * ids).
     *
     * `fixedCentroids`: reuse an existing coarse quantizer instead of
     * fitting one — the kmeans fit is SKIPPED entirely and every doc is
-    * assigned under the given centroids. Compaction threads the source
-    * manifest's centroids through here: the reference's
-    * `delete_from_index!` only shifts ids and never retrains the coarse
-    * or residual quantizer (/root/reference/src/utils.jl:90-105), so
-    * cluster assignments stay STABLE across compactions and the rebuild
-    * spends no sample-fit driver time [VERDICT r4 #3].
+    * assigned under the given centroids. Prepend threads the source
+    * manifest's centroids through here: the reference's `pushfirst!`
+    * encodes under the existing quantizer and never retrains it
+    * (the reference's `src/utils.jl:2-6`), so cluster assignments stay
+    * STABLE and the rebuild spends no sample-fit driver time.
     */
   def buildFromSource(
       spark: SparkSession,
@@ -133,16 +133,7 @@ object IndexBuilder {
       idOrder: Seq[String] = Seq("repo", "path", "commit"),
       lineageName: String = "<dataframe>",
       knownRows: Long = 0L,
-      fixedCentroids: Option[Array[Array[Double]]] = None,
-      // compaction fast path (r7): the source ALREADY carries dense
-      // 0-based doc_id, cluster_id, doc_len and content_sha (the
-      // docstore is lossless and compaction never retrains, so every
-      // one of them is a stored, deterministic value — recomputing them
-      // was provably redundant work). The docstore step then skips the
-      // dense-id keys pass, the kmeans sample collect and the per-row
-      // content->cluster assignment entirely: ONE slot exchange + write.
-      // Requires fixedCentroids and an exact knownRows.
-      preAssigned: Option[PreAssignedSource] = None): BuildResult = {
+      fixedCentroids: Option[Array[Array[Double]]] = None): BuildResult = {
     import spark.implicits._
     val t0 = System.nanoTime()
     val sfDir = lineageName
@@ -169,8 +160,7 @@ object IndexBuilder {
         s"batches=${cfg.postingsBatches} idOrder=${idOrder.mkString(",")} " +
         s"dist=${cfg.distance.getClass.getSimpleName}" +
         fixedCentroids.map(c => s" fixed=${java.util.Arrays.deepHashCode(
-          c.asInstanceOf[Array[AnyRef]])}").getOrElse("") +
-        (if (preAssigned.nonEmpty) " pre=1" else "")
+          c.asInstanceOf[Array[AnyRef]])}").getOrElse("")
     // The committed state the build continues from: the dir's manifest
     // when resuming and it is readable, of this format and of this
     // fingerprint; else none, a fresh build (an old index in the dir
@@ -181,11 +171,15 @@ object IndexBuilder {
       if (!cfg.resume) null
       else ManifestIO.readForResume(s"$indexDir/manifest.json")
         .filter(_.fingerprint == fingerprint).orNull
-    // what a crashed step or batch left: unlisted part files, writers'
-    // _temporary dirs, postings batches' staging dirs
+    // what a crashed writer left, with or without a manifest to resume:
+    // writers' _temporary dirs, postings batches' staging dirs and a
+    // version-7 build's _checkpoints; under a resumed manifest also the
+    // part files it does not list
     if (current != null) IndexSchemas.sweep(indexDir, current)
+    else IndexSchemas.clearTemporary(indexDir)
     Option(new java.io.File(indexDir).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("postings_staging_"))
+      .filter(f => f.getName.startsWith("postings_staging_") ||
+        f.getName == "_checkpoints")
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     def done(name: String) =
       current != null && current.build_done.contains(name)
@@ -232,14 +226,6 @@ object IndexBuilder {
     // write's range-partitioner sampling; the granule-hash exchange
     // needs no sampling at all.
     step("docstore") {
-      val (centroids, stats, docCounts, files) = preAssigned match {
-        case Some(_) =>
-          val centroids = fixedCentroids.getOrElse(sys.error(
-            "preAssigned requires fixedCentroids"))
-          val (stats, docCounts, files) =
-            docstorePreAssigned(spark, source, indexDir, centroids, knownRows)
-          (centroids, stats, docCounts, files)
-        case None =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -345,9 +331,7 @@ object IndexBuilder {
           cfg.distance, GranulePartitioner.slotMap(weights, parts), window,
           minId = 0L)
         finally dense.unpersist()
-      (centroids, CorpusStats(n, m("sum_dl").asInstanceOf[Long], window),
-        observedDocCounts(m, centroids.length), files)
-      }
+      val stats = CorpusStats(n, m("sum_dl").asInstanceOf[Long], window)
       IndexManifest(
         version = ManifestIO.FormatVersion,
         num_docs = stats.num_docs,
@@ -364,7 +348,8 @@ object IndexBuilder {
         coarse_graph = Array.empty,
         coarse_graph_upper = Array.empty,
         lineage = InputLineage(sfDir, stats.num_docs),
-        partitions = partitionMetas(docCounts, Map.empty),
+        partitions = partitionMetas(observedDocCounts(m, centroids.length),
+          Map.empty),
         segments = Nil,
         files = IndexFiles(files, Nil, Nil),
         tombstones = Array.emptyLongArray,
@@ -409,14 +394,10 @@ object IndexBuilder {
       // rows — which is exactly the stage class that refuses to scale
       // with threads (BASELINE.md calibration). Read-partition sizing
       // replaces the exchange's balancing role: target ≈ bytes/parts.
-      // compaction transform (r7): source = the OLD index's postings
-      val transformFrom = preAssigned.flatMap(_.transformFrom)
       val mpbKey = "spark.sql.files.maxPartitionBytes"
       val mpbPrev = spark.conf.get(mpbKey)
       val totalBytes = org.apache.commons.io.FileUtils
-        .sizeOfDirectory(new java.io.File(transformFrom
-          .map { case (srcDir, _) => s"$srcDir/postings" }
-          .getOrElse(s"$indexDir/docstore")))
+        .sizeOfDirectory(new java.io.File(s"$indexDir/docstore"))
       // floor 1 MB (was 4 MB): the amplified bench docstore
       // dictionary-compresses to ~15-30 MB, and the 4 MB floor
       // collapsed the whole postings read to ~6 tasks — a 4-thread
@@ -433,20 +414,10 @@ object IndexBuilder {
           // each batch writes to its own staging dir: concurrent jobs
           // must not share a FileOutputCommitter _temporary
           val staging = s"$indexDir/postings_staging_$bi"
-          val (blocks, acc, cacc) = transformFrom match {
-            case Some((srcDir, deadBc)) =>
-              // decode→shift→re-encode the source index's blocks — no
-              // content pass (see transformBlocks)
-              val oldSlice = IndexSchemas.readPostings(spark, srcDir)
-                .filter(col("cluster_id").isin(clusters: _*))
-              transformBlocks(spark, oldSlice, deadBc, m0.avgdl, segOffset,
-                m0.granule_window)
-            case None =>
-              val slice = IndexSchemas.readDocstore(spark, indexDir, m0)
-                .filter(col("cluster_id").isin(clusters: _*))
-              encodeBlocks(spark, slice, m0.avgdl, segOffset,
-                m0.granule_window)
-          }
+          val slice = IndexSchemas.readDocstore(spark, indexDir, m0)
+            .filter(col("cluster_id").isin(clusters: _*))
+          val (blocks, acc, cacc) = encodeBlocks(spark, slice, m0.avgdl,
+            segOffset, m0.granule_window)
           writeParts(blocks, staging)
           val segs = {
             import scala.jdk.CollectionConverters._
@@ -523,66 +494,6 @@ object IndexBuilder {
       stepWin)
   }
 
-  /** Marker for the compaction fast path — see the `preAssigned`
-    * parameter of [[buildFromSource]]. `transformFrom` additionally
-    * routes the postings step through [[transformBlocks]]: (source index
-    * dir, broadcast sorted tombstone array).
-    */
-  case class PreAssignedSource(
-      transformFrom: Option[(String,
-        org.apache.spark.broadcast.Broadcast[Array[Long]])] = None)
-
-  /** The preAssigned docstore step: the source rows already carry dense
-    * doc_id, cluster_id, doc_len, content_sha — so the step is exactly
-    * ONE job: granule-slot exchange → local sort → partitioned write,
-    * with the corpus stats observed on the write like the normal path.
-    * The write observation's row count is REQUIRED to equal knownRows:
-    * a wrong caller-side id shift cannot silently produce a plausible
-    * index. Zero rows (compacting a fully tombstoned index) give an
-    * empty docstore. Returns the corpus stats, the per-cluster doc counts
-    * and the part files written.
-    */
-  private def docstorePreAssigned(
-      spark: SparkSession,
-      source: DataFrame,
-      indexDir: String,
-      centroids: Array[Array[Double]],
-      knownRows: Long): (CorpusStats, Map[Int, Long], Seq[String]) = {
-    require(knownRows >= 0, "preAssigned requires exact knownRows >= 0")
-    val kc = centroids.length
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val window = granuleWindow(knownRows, parts)
-    val obs = Observation()
-    val metrics = docstoreMetrics(kc)
-    // ZERO-exchange write (r7): the source IS the old docstore — its
-    // files are cluster-partitioned and (cluster, doc)-sorted, the
-    // tombstone filter preserves order, and the id shift is monotone,
-    // so every read split is already a sorted run with doc ranges
-    // disjoint across tasks (whole files, or pieces of one sorted
-    // file). The local sort re-states the invariant for free on
-    // already-sorted runs, and partitionBy(cluster_id) writes ~the same
-    // file count the source had. Compaction therefore moves the content
-    // bytes exactly ONCE — old files → new files — with no exchange
-    // anywhere. Stored content_sha rides through unchanged (it is
-    // already materialized — re-deriving it would cost n sha2 calls to
-    // save nothing).
-    val files = writeParts(source
-      .observe(obs, metrics.head, metrics.tail: _*)
-      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-      .select("doc_id", "repo", "path", "commit", "lang",
-        "content", "cluster_id", "doc_len", "content_sha"),
-      s"$indexDir/docstore")
-    val m = obs.get
-    val n = m("n").asInstanceOf[Long]
-    require(n == knownRows,
-      s"preAssigned row count $n != expected $knownRows: " +
-        "the caller's id shift and the source disagree")
-    require(m("min_id").asInstanceOf[Long] >= 0,
-      "preAssigned ids must be dense non-negative")
-    (CorpusStats(n, m("sum_dl").asInstanceOf[Long], window),
-      observedDocCounts(m, kc), files)
-  }
-
   /** The docstore write of the build and of an append into
     * `$dir/docstore`; returns its [[docstoreMetrics]] and the part files
     * it added. `slots` is the
@@ -608,6 +519,43 @@ object IndexBuilder {
       s"dense-id lookup missed a key (min doc_id = ${m("min_id")} < " +
         s"$minId): the source is not deterministic across jobs")
     (m, files)
+  }
+
+  /** The docstore write of compaction into `$dir/docstore`: `rows` are
+    * a docstore's own rows, filtered and with shifted ids, so they
+    * already carry dense doc_id, cluster_id, doc_len and content_sha.
+    * The write needs no exchange: each task sorts its rows by
+    * (cluster_id, doc_id) and writes them partitioned by cluster, so the
+    * content bytes move once, old files to new ones, and the stored
+    * content_sha rides through. The write's row count must equal
+    * `knownRows`, so a wrong caller-side id shift cannot give a
+    * plausible index; zero rows give an empty docstore. Returns the
+    * corpus stats, the per-cluster doc counts and the part files written.
+    */
+  private[graft] def writeAssignedDocstore(
+      rows: DataFrame,
+      dir: String,
+      kc: Int,
+      knownRows: Long): (CorpusStats, Map[Int, Long], Seq[String]) = {
+    val parts = rows.sparkSession.sessionState.conf.numShufflePartitions
+    val obs = Observation()
+    val metrics = docstoreMetrics(kc)
+    val files = writeParts(rows
+      .observe(obs, metrics.head, metrics.tail: _*)
+      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
+      .select("doc_id", "repo", "path", "commit", "lang",
+        "content", "cluster_id", "doc_len", "content_sha"),
+      s"$dir/docstore")
+    val m = obs.get
+    val n = m("n").asInstanceOf[Long]
+    require(n == knownRows,
+      s"docstore row count $n != expected $knownRows: " +
+        "the caller's id shift and the source disagree")
+    // over zero rows the min is null
+    require(m("min_id") == null || m("min_id").asInstanceOf[Long] >= 0,
+      "assigned doc ids must be dense non-negative")
+    (CorpusStats(n, m("sum_dl").asInstanceOf[Long], granuleWindow(n, parts)),
+      observedDocCounts(m, kc), files)
   }
 
   /** The rows [[writeDocstore]] writes, in write order. */
@@ -871,15 +819,15 @@ object IndexBuilder {
       }
   }
 
-  /** Compaction's postings path (r7): instead of re-tokenizing the
-    * compacted corpus, DECODE the source index's existing blocks, drop
-    * tombstoned entries, shift surviving doc ids (monotone, so decoded
-    * ascending runs stay ascending and per-(cluster, term) doc ranges
-    * stay disjoint across tasks), regroup by the NEW granule window and
-    * re-encode under the refreshed avgdl — the same streaming
-    * decode→encode shape as segment merge, with zero exchanges. At
-    * scale this replaces a full content pass (tokenize over every
-    * surviving document) with a pass over the compressed postings,
+  /** The postings path of segment merge and compaction: instead of
+    * re-tokenizing the corpus, DECODE an index's existing blocks, drop
+    * the entries of the ids in `deadBc` (none for a merge), shift
+    * surviving doc ids (monotone, so decoded ascending runs stay
+    * ascending), regroup by `window` and re-encode under `avgdl` with
+    * the build's encoder. New blocks of one (cluster, term) are disjoint
+    * across tasks when each task holds all of a cluster's blocks, as the
+    * callers place them. This replaces a full content pass (tokenize over
+    * every surviving document) with a pass over the compressed postings,
     * which are a fraction of the content bytes; correctness needs only
     * the decoded (doc, tf, dl, positions) tuples, all of which the
     * blocks store losslessly.

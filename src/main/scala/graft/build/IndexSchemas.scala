@@ -87,21 +87,31 @@ object IndexSchemas {
     sweep(indexDir, m)
   }
 
-  /** Deletes every part file of the three tables that `m` does not list,
-    * checksum first, and the writers' `_temporary` dirs: what a crashed
-    * mutation left before its commit, or a committed one before its
-    * sweep. Every mutation runs it first.
+  /** Deletes the three tables' writer `_temporary` dirs. A crashed
+    * writer leaves its committed task files there, and the next write's
+    * job commit (the v1 FileOutputCommitter's) would move them into the
+    * table as its own. Every writer into a dir runs it first.
     */
-  def sweep(indexDir: String, m: IndexManifest): Unit =
+  def clearTemporary(indexDir: String): Unit =
+    Seq("docstore", "postings", "dictionary").foreach(table =>
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        Paths.get(indexDir, table, "_temporary").toFile))
+
+  /** [[clearTemporary]], then deletes every part file of the three tables
+    * that `m` does not list, checksum first: what a crashed mutation left
+    * before its commit, or a committed one before its sweep. Every
+    * mutation runs it first.
+    */
+  def sweep(indexDir: String, m: IndexManifest): Unit = {
+    clearTemporary(indexDir)
     Seq("docstore" -> m.files.docstore, "postings" -> m.files.postings,
         "dictionary" -> m.files.dictionary).foreach { case (table, live) =>
       val root = Paths.get(indexDir, table)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        root.resolve("_temporary").toFile)
       partFiles(root.toString).filterNot(live.toSet).foreach { f =>
         val part = root.resolve(f)
         Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
         Files.delete(part)
       }
     }
+  }
 }

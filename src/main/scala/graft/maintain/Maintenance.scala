@@ -2,10 +2,12 @@ package graft.maintain
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{IndexBuilder, IndexManifest, IndexSchemas, ManifestIO}
+import graft.build.{IndexBuilder, IndexFiles, IndexManifest, IndexSchemas,
+  InputLineage, ManifestIO}
 import graft.sources.Corpus
 
 /** Incremental index maintenance — the graft of the reference's point
@@ -23,8 +25,8 @@ import graft.sources.Corpus
   *    manifest — O(1) visibility-only delete; queries filter tombstoned
   *    docs before top-k selection.
   *  - [[compact]] = the deferred id-shift (M8,
-  *    /root/reference/src/utils.jl:16-20): rebuilds into a new snapshot
-  *    directory with survivors re-ranked DENSE IN OLD-ID ORDER —
+  *    the reference's `src/utils.jl:16-20`): rewrites the index into a new
+  *    snapshot directory with survivors re-ranked DENSE IN OLD-ID ORDER —
   *    identical semantics to the reference's "shift all higher ids
   *    down", executed as one batch job instead of per-delete.
   *  - [[fetchDocs]] = `_decode_point` (M7): the docstore is lossless, so
@@ -34,7 +36,9 @@ import graft.sources.Corpus
   * Every mutation sweeps what a crashed predecessor left, writes new part
   * files beside the live ones and commits with one manifest write
   * ([[IndexSchemas.commit]]): a crash before it leaves the old snapshot.
-  * [[compact]] and [[prepend]] build into a fresh `outDir` instead.
+  * [[compact]] rewrites the index it read into `outDir` and commits
+  * there once, leaving the source as it was; [[prepend]] builds into a
+  * fresh `outDir`.
   */
 object Maintenance {
 
@@ -135,7 +139,7 @@ object Maintenance {
     * fragmented blocks left by appends into minimal full blocks per
     * (cluster, granule, term), WITHOUT touching the docstore or docIDs.
     * Also refreshes avgdl/idf exactly over the current corpus (append
-    * holds them stale by design). One postings-only job: no tokenize
+    * holds them stale by design). A postings-only rewrite: no tokenize
     * pass. The blocks re-encode through the build's encoder
     * ([[IndexBuilder.transformBlocks]] with no tombstones, so docIDs
     * stay put): merged blocks stay granule-contained, which the
@@ -151,27 +155,43 @@ object Maintenance {
     val avgdl = IndexBuilder.CorpusStats(n,
       if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)).avgdl
 
-    // hash placement on cluster_id: a segment id is the partition id
-    val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
-      IndexSchemas.readPostings(spark, indexDir, manifest)
-        .repartition(col("cluster_id")),
-      spark.sparkContext.broadcast(Array.emptyLongArray), avgdl,
-      segmentOffset = 0, manifest.granule_window)
-    val postings = IndexBuilder.writeParts(merged, s"$indexDir/postings")
-
     // docs and their clusters are unchanged; blocks and segments are new
+    IndexSchemas.commit(indexDir, rewritePostings(spark, indexDir, manifest,
+      indexDir, spark.sparkContext.broadcast(Array.emptyLongArray),
+      manifest.copy(num_docs = n, avgdl = avgdl,
+        lineage = manifest.lineage.copy(num_source_rows = n))))
+  }
+
+  /** The postings rewrite of merge and compaction: decodes the blocks
+    * `from` lists under `indexDir`, drops the ids in `dead` and shifts
+    * the rest ([[IndexBuilder.transformBlocks]]), re-encodes them under
+    * `to`'s avgdl and granule window into `outDir`, and refreshes the
+    * dictionary there from the new blocks. Returns `to` with the new
+    * blocks' files, segments, per-cluster stats and vocabulary.
+    *
+    * Each cluster's blocks decode in one task (hash placement on
+    * cluster_id; a segment id is the partition id). A read split packs
+    * part files by size, so without it one task could hold a term's
+    * blocks from two batches and another task the blocks of the batch
+    * between them, and their new blocks would overlap in doc range.
+    */
+  private def rewritePostings(spark: SparkSession, indexDir: String,
+      from: IndexManifest, outDir: String,
+      dead: Broadcast[Array[Long]], to: IndexManifest): IndexManifest = {
+    val (blocks, acc, cacc) = IndexBuilder.transformBlocks(spark,
+      IndexSchemas.readPostings(spark, indexDir, from)
+        .repartition(col("cluster_id")),
+      dead, to.avgdl, segmentOffset = 0, to.granule_window)
+    val postings = IndexBuilder.writeParts(blocks, s"$outDir/postings")
     val (vocab, dictionary) =
-      IndexBuilder.writeDictionary(spark, indexDir, postings, n)
-    IndexSchemas.commit(indexDir, manifest.copy(
-      num_docs = n,
-      avgdl = avgdl,
+      IndexBuilder.writeDictionary(spark, outDir, postings, to.num_docs)
+    to.copy(
       vocab_size = vocab,
-      lineage = manifest.lineage.copy(num_source_rows = n),
       partitions = IndexBuilder.partitionMetas(
-        manifest.partitions.map(p => p.cluster_id -> p.num_docs).toMap,
+        to.partitions.map(p => p.cluster_id -> p.num_docs).toMap,
         IndexBuilder.sumClusterStats(cacc.value.asScala.toSeq)),
       segments = acc.value.asScala.toSeq.sortBy(_.segment_id),
-      files = manifest.files.copy(postings = postings, dictionary = dictionary)))
+      files = to.files.copy(postings = postings, dictionary = dictionary))
   }
 
   /** M5/M8 compaction: survivors re-ranked dense in OLD-id order into a
@@ -180,28 +200,32 @@ object Maintenance {
     * `deadOverride` compacts against an explicit set WITHOUT mutating
     * the source index (read-only source — e.g. benchmark harnesses that
     * must not leave tombstones behind for later queries).
+    *
+    * A rewrite of the index it read, like [[mergeSegments]]: the
+    * reference's `delete_from_index!` only shifts ids and never retrains
+    * the coarse quantizer (its `src/utils.jl:90-105`), so the
+    * docstore rows keep their stored cluster, length and sha, the
+    * postings re-encode through [[IndexBuilder.transformBlocks]], and
+    * the quantizer and its coarse graph carry over. Both tables are read
+    * from the one manifest, and `outDir` commits once.
     */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
       deadOverride: Option[Set[Long]] = None): IndexBuilder.BuildResult = {
+    val t0 = System.nanoTime()
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
     val dead = deadOverride.getOrElse(manifest.tombstones.toSet)
-    // survivor count from the manifest, EXACT for any dead set: docstore
-    // ids are dense 0..n-1, so only dead ids inside that range remove
-    // rows — a deadOverride carrying absent ids (which bypasses
-    // delete()'s validation) must not shrink the hint [ADVICE r4]
-    val n = manifest.num_docs
-    val deadArr = dead.filter(id => id >= 0 && id < n).toArray.sorted
-    // r7 fast path: the docstore already holds dense old ids 0..n-1 AND
-    // every derived column compaction would recompute (content_sha,
-    // doc_len, cluster_id — all deterministic, centroids are FIXED like
-    // the reference's never-retraining delete,
-    // /root/reference/src/utils.jl:90-105). The new dense id in old-id
-    // order is a pure shift (old_id − #dead below it), so one broadcast
-    // sorted tombstone array serves BOTH the tombstone filter (the old
-    // anti-join) and the id re-rank (the old keys-pass + rank collect):
-    // the whole docstore side of the rebuild collapses to one map-side
-    // expression + the write.
+    // docstore ids are dense 0..num_docs-1, so only dead ids inside that
+    // range remove rows — a deadOverride carrying absent ids (which
+    // bypasses delete()'s validation) must not shrink the count
+    val deadArr = dead.filter(id => id >= 0 && id < manifest.num_docs)
+      .toArray.sorted
+    val n = manifest.num_docs - deadArr.length
+    // the new dense id in old-id order is a pure shift (old_id − #dead
+    // below it), so one broadcast sorted tombstone array serves both the
+    // tombstone filter and the id re-rank, of docs and of postings alike
     val deadBc = spark.sparkContext.broadcast(deadArr)
+    // what an earlier compaction into outDir left
+    IndexSchemas.clearTemporary(outDir)
     val survivors = IndexSchemas.readDocstore(spark, indexDir, manifest)
       .withColumn("_nid",
         graft.functions.TombstoneShiftExpr.col(col("doc_id"), deadBc))
@@ -210,18 +234,25 @@ object Maintenance {
         col("repo"), col("path"), col("commit"), col("lang"),
         col("content"), col("cluster_id"), col("doc_len"),
         col("content_sha"))
-    IndexBuilder.buildFromSource(spark, survivors, outDir,
-      IndexBuilder.BuildConfig(resume = false,
-        distance = graft.cluster.Distance.byName(manifest.distance)),
-      idOrder = Seq("doc_id"),
-      lineageName = s"compact($indexDir)",
-      knownRows = n - deadArr.length,
-      fixedCentroids = Some(manifest.centroids),
-      preAssigned = Some(IndexBuilder.PreAssignedSource(
-        // postings via decode→shift→re-encode of the source blocks —
-        // the docstore write above is then compaction's ONLY content
-        // pass (see IndexBuilder.transformBlocks)
-        transformFrom = Some((indexDir, deadBc)))))
+    val (stats, docCounts, docFiles) = IndexBuilder.writeAssignedDocstore(
+      survivors, outDir, manifest.kc, n)
+    val compacted = rewritePostings(spark, indexDir, manifest, outDir, deadBc,
+      manifest.copy(
+        num_docs = n,
+        avgdl = stats.avgdl,
+        granule_window = stats.granule_window,
+        lineage = InputLineage(s"compact($indexDir)", n),
+        partitions = IndexBuilder.partitionMetas(docCounts, Map.empty),
+        files = IndexFiles(docFiles, Nil, Nil),
+        tombstones = Array.emptyLongArray,
+        stream_batch = -1L,
+        // no build computes it: a resumed build over outDir rebuilds
+        // instead of taking the compacted index for a finished build
+        fingerprint = s"compact of ${manifest.fingerprint}"))
+    IndexSchemas.commit(outDir, compacted)
+    val millis = (System.nanoTime() - t0) / 1000000L
+    IndexBuilder.BuildResult(compacted, millis,
+      n * 1000.0 / math.max(1L, millis), Seq("compact"), Nil)
   }
 
   /** M7: exact reconstruction from the lossless docstore. */
@@ -257,8 +288,7 @@ object Maintenance {
   /** M2 `pushfirst!`: prepend — new docs get ids 0..k-1, ALL existing
     * ids shift up by k (/root/reference/src/utils.jl:2-6). Inherently a
     * full rewrite (the reference warns the same); expressed as one
-    * compaction-style rebuild into `outDir` ordered (new-first, then
-    * old ids).
+    * build into `outDir` ordered (new-first, then old ids).
     */
   def prepend(spark: SparkSession, indexDir: String,
       newSource: DataFrame, outDir: String): IndexBuilder.BuildResult = {

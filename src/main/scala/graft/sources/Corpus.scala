@@ -144,18 +144,16 @@ object Corpus {
       df: DataFrame,
       sortCols: Seq[String],
       idCol: String,
-      numPartitions: Int = 0,
       strategy: String = "auto",
       broadcastMaxDocs: Long = IdBroadcastMaxDocs,
       rowHint: Long = 0L): DenseId = {
     require(Set("auto", "broadcast", "exchange")(strategy),
       s"unknown id strategy: $strategy")
-    if (strategy == "exchange") withDenseIdExchange(df, sortCols, idCol, numPartitions)
+    if (strategy == "exchange") withDenseIdExchange(df, sortCols, idCol)
     else withDenseIdDriverSort(df, sortCols, idCol, rowHint)
-      .orElse(withDenseIdBroadcast(df, sortCols, idCol, numPartitions,
+      .orElse(withDenseIdBroadcast(df, sortCols, idCol,
         forced = strategy == "broadcast", maxDocs = broadcastMaxDocs))
-      .getOrElse(withDenseIdExchange(df, sortCols, idCol, numPartitions))
-
+      .getOrElse(withDenseIdExchange(df, sortCols, idCol))
   }
 
   /** Driver-sort variant of the broadcast strategy — see
@@ -226,14 +224,11 @@ object Corpus {
       df: DataFrame,
       sortCols: Seq[String],
       idCol: String,
-      numPartitions: Int,
       forced: Boolean,
       maxDocs: Long): Option[DenseId] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val parts = spark.sessionState.conf.numShufflePartitions
     val cols = sortCols.map(col)
     // per-partition cap: range partitions are balanced, so 4× the even
     // share of the threshold is generous; a partition over the cap stops
@@ -294,12 +289,9 @@ object Corpus {
   private def withDenseIdExchange(
       df: DataFrame,
       sortCols: Seq[String],
-      idCol: String,
-      numPartitions: Int = 0): DenseId = {
+      idCol: String): DenseId = {
     val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val parts = spark.sessionState.conf.numShufflePartitions
     val cols = sortCols.map(col)
     // persisted: three consumers (counts, kmeans sample, the write) read
     // it; without the cache each would re-execute the whole exchange
@@ -336,9 +328,8 @@ object Corpus {
 
   /** F1-shaped source (+ optional extra ordering columns) → docs with
     * dense 0-based doc_id in `idOrder` order, content sha, doc length.
-    * Compaction passes idOrder = old doc_id to preserve the reference's
-    * insertion-order id semantics after deletes
-    * (/root/reference/src/utils.jl:16-20).
+    * `idOffset` shifts every id (an append's ids continue from the
+    * index's num_docs).
     */
   def docsFrom(
       src: DataFrame,

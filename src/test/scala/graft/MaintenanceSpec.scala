@@ -63,6 +63,7 @@ class MaintenanceSpec extends SparkSpec {
     val m2 = ManifestIO.read(s"$out/manifest.json")
     assert(m2.num_docs == n - dead.size)
     assert(m2.partitions.map(_.num_docs).sum == m2.num_docs)
+    assertManifestMatchesScan(out, ManifestIO.read(s"$dir/manifest.json"))
   }
 
   test("compacted index query results == fresh rebuild of survivor corpus") {
@@ -423,6 +424,38 @@ class MaintenanceSpec extends SparkSpec {
       graft.build.IndexSchemas.readPostings(spark, dir).count())
     assert(spark.read.parquet(s"$dir/dictionary").count() ==
       ManifestIO.read(s"$dir/manifest.json").vocab_size)
+  }
+
+  test("compacting unmerged appends keeps each term's blocks disjoint, however the read splits its files") {
+    import spark.implicits._
+    val dir = CrashStates.copyIndex(baseIndex)
+    // batches of very different sizes: a read packs postings files by
+    // size, so one task can hold a cluster's first and third batch and
+    // another task the second, which lies between them in doc order
+    Seq(60, 3, 60).zipWithIndex.foreach { case (k, a) =>
+      Maintenance.append(spark, dir, (0 until k).map(j =>
+        (s"repo-s$a", f"src/s$a/$j%03d.c", f"5eed$a%02d$j%06d", "c",
+          "hash join merge " + "quartz " * (j % 3) + "index"))
+        .toDF("repo", "path", "commit", "lang", "content"))
+    }
+    val out = Files.createTempDirectory("graft-maint-splits").toString
+    Maintenance.compact(spark, dir, out)
+    graft.build.IndexSchemas.readPostings(spark, out)
+      .select("cluster_id", "term", "first_doc", "last_doc").collect()
+      .groupBy(r => (r.getInt(0), r.getString(1))).foreach { case (key, bs) =>
+        bs.map(r => (r.getLong(2), r.getLong(3))).sorted.sliding(2).foreach {
+          case Array((_, last), (first, _)) =>
+            assert(last < first, s"$key: blocks overlap at $first <= $last")
+          case _ =>
+        }
+      }
+    val qs = Seq(1 -> Seq("hash", "quartz"), 2 -> Seq("merge", "index"))
+    val wand = IndexSearcher.topK(spark, out, qs, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val sql = graft.query.Bm25SqlPath.topK(spark,
+      graft.build.IndexSchemas.readDocstore(spark, out), qs, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(wand.toSeq == sql.toSeq)
   }
 
   test("a manifest of another format version fails loudly and asks for a rebuild") {

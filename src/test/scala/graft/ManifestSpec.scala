@@ -131,6 +131,10 @@ class ManifestSpec extends SparkSpec {
     val t = json.readTree(Files.readAllBytes(path)).asInstanceOf[ObjectNode]
     Files.write(path, json.writeValueAsBytes(
       t.put("version", ManifestIO.FormatVersion - 1)))
+    // a version-7 build kept its step markers beside the manifest
+    val checkpoints = Paths.get(otherVersion, "_checkpoints")
+    Files.createDirectories(checkpoints)
+    Files.write(checkpoints.resolve("fingerprint.txt"), "v=7".getBytes)
 
     val otherKc = newDir("kc8")
     build(otherKc, IndexBuilder.BuildConfig(kc = 8, resume = false))
@@ -143,5 +147,36 @@ class ManifestSpec extends SparkSpec {
       assert(topK(dir) == want, dir)
       assert(onDisk(dir) == listed(ManifestIO.read(s"$dir/manifest.json")), dir)
     }
+    assert(!Files.exists(checkpoints))
+  }
+
+  test("no build or compaction adopts a crashed writer's committed task files") {
+    val src = newDir("task-src")
+    build(src, IndexBuilder.BuildConfig(resume = false))
+    val part = ManifestIO.read(s"$src/manifest.json").files.docstore.head
+    // what a docstore write that crashed after a task commit leaves under
+    // the v1 FileOutputCommitter: the next job commit moves every task
+    // dir under _temporary/0 into the table
+    def crashedWriter(dir: String): Unit = CrashStates.copyFiles(
+      s"$src/docstore",
+      s"$dir/docstore/_temporary/0/task_202601010000_0000_m_000000", Seq(part))
+    def check(dir: String): Unit = {
+      val m = ManifestIO.read(s"$dir/manifest.json")
+      assert(IndexSchemas.readDocstore(spark, dir).count() == m.num_docs, dir)
+      assert(!listed(m).flatten.contains(part), dir)
+      assert(onDisk(dir) == listed(m), dir)
+    }
+    Seq(true, false).foreach { resume =>
+      val dir = newDir(s"task-$resume")
+      crashedWriter(dir)
+      build(dir, IndexBuilder.BuildConfig(resume = resume))
+      check(dir)
+    }
+    // a compaction retried into the outDir its crashed run left
+    val out = newDir("task-compact")
+    crashedWriter(out)
+    graft.maintain.Maintenance.compact(spark, src, out,
+      deadOverride = Some(Set(0L, 7L)))
+    check(out)
   }
 }
